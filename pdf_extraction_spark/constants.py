@@ -80,7 +80,6 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # measured pinned A/B at 48k docs — 4 cores 967->1214 docs/s,
 # 16 cores 3178->3244 docs/s going 64->2048.
 ARROW_MAX_RECORDS_PER_BATCH = 2048
-SALT_BUCKETS = 256                 # url-hash salting fan-out for extraction
 # size gate for page-level repartitioning: documents at or below this
 # payload size are laid out in place (no payload shuffle); larger ones
 # split into page units and scatter on xxhash64(url, page_no) — the

@@ -16,7 +16,6 @@ from ..constants import (
     CHUNK_OVERLAP,
     CHUNK_SEPARATORS,
     CHUNK_SIZE,
-    PREFIX_LEN,
     UNIT_MAX_LEN,
 )
 
@@ -40,10 +39,6 @@ def normalize_line(text: str) -> str:
     text = re.sub(r"\d+", "N", text)
     text = re.sub(r"\s+", " ", text)
     return text.strip().lower()
-
-
-def line_prefix(text: str) -> str:
-    return normalize_line(text)[:PREFIX_LEN]
 
 
 def tokenize(text: str) -> list[str]:

@@ -61,9 +61,6 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
 
 
-_EMPTY_STR_ARRAY = "CAST(array() AS array<string>)"
-
-
 def shingle_array(text_col: str = "text", n: int = SHINGLE_WORDS) -> Column:
     """Row-local array of n-word shingles (empty if < n tokens).
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..constants import SPDF_MAGIC
 from ..schemas import PAGES
@@ -52,11 +52,16 @@ PAGES_EXT = T.StructType(
 _MAGIC = SPDF_MAGIC.decode()
 
 
+def host_col() -> Column:
+    """The url's host: the authority after the scheme, with or without
+    a path after it (``http://b.example`` -> ``b.example``)."""
+    return F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
+
+
 def split_pages(input_df: DataFrame) -> DataFrame:
     """(url, html) -> one row per page unit, all in Catalyst:
     (url, host, page_no, kind, payload string, bytes_in)."""
     s = F.expr("try_cast(html as string)")  # lenient UTF-8 (U+FFFD on bad bytes)
-    host = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
     is_spdf = F.startswith(s, F.lit(_MAGIC))
     is_html = (F.startswith(F.ltrim(s), F.lit("<"))) | (
         F.contains(F.lower(F.substring(s, 1, 512)), F.lit("<html"))
@@ -91,7 +96,7 @@ def split_pages(input_df: DataFrame) -> DataFrame:
     )
     return input_df.select(
         "url",
-        host.alias("host"),
+        host_col().alias("host"),
         F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
         F.explode(units).alias("u"),
     ).select(
@@ -261,9 +266,8 @@ def extract_stage(input_df: DataFrame, n_partitions: int | None = None) -> DataF
     """
     from ..constants import SPLIT_BYTES_THRESHOLD
 
-    host = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
     base = input_df.select(
-        "url", host.alias("host"), "html",
+        "url", host_col().alias("host"), "html",
         F.octet_length(F.coalesce("html", F.lit(b""))).alias("_nbytes"),
     )
     # no shuffle on the small path: parallelism comes from the input

@@ -202,12 +202,3 @@ def number_diff(pages: DataFrame) -> DataFrame:
         F.array_except("doc_nums", "md_nums").alias("only_in_doc"),
         F.array_except("md_nums", "doc_nums").alias("only_in_ocr"),
     )
-
-
-def regions_stage(pages: DataFrame) -> dict[str, DataFrame]:
-    return {
-        "doc_tables": doc_tables(pages),
-        "table_cells": table_cells(pages),
-        "doc_figures": doc_figures(pages),
-        "table_diff": number_diff(pages),
-    }

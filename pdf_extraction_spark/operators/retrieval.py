@@ -86,12 +86,11 @@ def _bm25_compact(
     docs: DataFrame, terms: list[str], id_col: str, extra: list[Column],
     text_col: str = "text",
 ) -> DataFrame:
-    """ONE text pass -> the 40-byte-per-doc proxy frame every BM25
-    consumer derives from: (id, doc_len, _tf<j> per query term, plus
-    caller extras), hash-repartitioned on id so the heavy tokenize runs
-    exactly once and every downstream branch (corpus stats, df counts,
-    scoring) hits a ReusedExchange instead of re-scanning the corpus
-    (guide §2.3: shuffle keys and metadata instead of payloads).
+    """The 40-byte-per-doc proxy frame every BM25 consumer derives
+    from: (id, doc_len, _tf<j> per query term, plus caller extras) — a
+    narrow projection, so downstream branches (corpus stats, df counts,
+    scoring) carry keys and counts instead of text payloads (guide
+    §2.3).
 
     Input parallelism comes from the guard (a no-op when the caller's
     frame is already guarded/parallel).  Each consumer branch (stats

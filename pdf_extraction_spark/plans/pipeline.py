@@ -70,6 +70,53 @@ def _metrics_df(pages: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+# The stages downstream of pages, in order: (stage, build, commit
+# bucket spec).  ``build(prev, ocr_pages)`` maps the previous stage's
+# frame to this one's; page_text OCRs ``ocr_pages`` (every page on a
+# full run, only new/changed ones on a host-scoped upsert).  Builds are
+# lambdas so operators resolve through this module's globals at call
+# time, where the resume tests and the benchmark's tracer patch them.
+# Only chunks is bucketed by url (its consumers are url-keyed joins and
+# aggregations); bucketing the page-granularity stages lost its A/B
+# (BENCH/STAGE_BUCKETING.md).
+TEXT_STAGES = (
+    ("page_text",
+     lambda pages, ocr_pages: merge_ocr(_strip(pages), ocr_stage(ocr_pages)),
+     None),
+    ("doc_text", lambda page_text, _: assemble_documents(page_text), None),
+    ("chunks", lambda doc_text, _: chunk_stage(doc_text), ["url"]),
+)
+
+
+def _fail_if(fail_after: str | None, stage: str) -> None:
+    if fail_after == stage:
+        raise RuntimeError(f"injected failure after stage '{stage}'")
+
+
+def _commit_text_stages(
+    spark: SparkSession,
+    pages: DataFrame,
+    out_root: str,
+    run_id: str,
+    resume: bool,
+    fail_after: str | None = None,
+) -> dict[str, DataFrame]:
+    """Commit every TEXT_STAGES row corpus-wide from ``pages``; with
+    ``resume``, a stage already committed is read back instead."""
+    out: dict[str, DataFrame] = {}
+    df = pages
+    for stage, build, bucket_by in TEXT_STAGES:
+        if resume and stage_store.is_committed(out_root, stage):
+            df = stage_store.read_stage(spark, out_root, stage)
+        else:
+            df = stage_store.commit_stage(
+                build(df, pages), out_root, stage, run_id, bucket_by=bucket_by
+            )
+        out[stage] = df
+        _fail_if(fail_after, stage)
+    return out
+
+
 def run_pipeline(
     spark: SparkSession,
     input_df: DataFrame,
@@ -77,19 +124,11 @@ def run_pipeline(
     resume: bool = True,
     fail_after: str | None = None,
     run_id: str | None = None,
-    bucketed_stages: tuple[str, ...] = ("chunks",),
 ) -> dict[str, DataFrame]:
     """Run (or resume) the pipeline; returns the stage DataFrames.
 
     ``fail_after`` kills the run after the named stage commits — the
     hook the resume test uses (SURVEY.md §5 item 4).
-
-    ``bucketed_stages`` — which stages commit bucketed by url.  The
-    default buckets only ``chunks`` (its downstream joins/aggs are all
-    url-keyed); the page-granularity stages stay flat per the measured
-    A/B in BENCH/STAGE_BUCKETING.md (tools/bench_stage_bucketing.py):
-    their single-pass consumers key on host (strip) or are page-local
-    (ocr), so the commit-time bucket sort buys nothing it doesn't cost.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     out: dict[str, DataFrame] = {}
@@ -108,48 +147,17 @@ def run_pipeline(
         pages = stage_store.read_stage(spark, out_root, "pages")
     else:
         pages = stage_store.commit_stage(
-            extract_stage(input_df), out_root, "pages", run_id,
-            bucket_by=["url"] if "pages" in bucketed_stages else None,
+            extract_stage(input_df), out_root, "pages", run_id
         )
         stage_store.commit_stage(
             _metrics_df(pages, run_id), out_root, "metrics", run_id
         )
     out["pages"] = pages
     out["metrics"] = stage_store.read_stage(spark, out_root, "metrics")
-    if fail_after == "pages":
-        raise RuntimeError("injected failure after stage 'pages'")
-
-    if resume and stage_store.is_committed(out_root, "page_text"):
-        page_text = stage_store.read_stage(spark, out_root, "page_text")
-    else:
-        stripped = _strip(pages)
-        page_text = stage_store.commit_stage(
-            merge_ocr(stripped, ocr_stage(pages)), out_root, "page_text", run_id,
-            bucket_by=["url"] if "page_text" in bucketed_stages else None,
-        )
-    out["page_text"] = page_text
-    if fail_after == "page_text":
-        raise RuntimeError("injected failure after stage 'page_text'")
-
-    if resume and stage_store.is_committed(out_root, "doc_text"):
-        doc_text = stage_store.read_stage(spark, out_root, "doc_text")
-    else:
-        doc_text = stage_store.commit_stage(
-            assemble_documents(page_text), out_root, "doc_text", run_id,
-            bucket_by=["url"] if "doc_text" in bucketed_stages else None,
-        )
-    out["doc_text"] = doc_text
-    if fail_after == "doc_text":
-        raise RuntimeError("injected failure after stage 'doc_text'")
-
-    if resume and stage_store.is_committed(out_root, "chunks"):
-        chunks = stage_store.read_stage(spark, out_root, "chunks")
-    else:
-        chunks = stage_store.commit_stage(
-            chunk_stage(doc_text), out_root, "chunks", run_id,
-            bucket_by=["url"] if "chunks" in bucketed_stages else None,
-        )
-    out["chunks"] = chunks
+    _fail_if(fail_after, "pages")
+    out.update(
+        _commit_text_stages(spark, pages, out_root, run_id, resume, fail_after)
+    )
     return out
 
 
@@ -280,19 +288,7 @@ def run_incremental(
     if not downstream_committed:
         # a prior run died before the text stages committed: no
         # committed snapshot to merge into — compute them corpus-wide
-        stripped = _strip(pages)
-        page_text = stage_store.commit_stage(
-            merge_ocr(stripped, ocr_stage(pages)), out_root, "page_text", run_id
-        )
-        out["page_text"] = page_text
-        doc_text = stage_store.commit_stage(
-            assemble_documents(page_text), out_root, "doc_text", run_id
-        )
-        out["doc_text"] = doc_text
-        out["chunks"] = stage_store.commit_stage(
-            chunk_stage(doc_text), out_root, "chunks", run_id,
-            bucket_by=["url"],
-        )
+        out.update(_commit_text_stages(spark, pages, out_root, run_id, resume=False))
         return out
 
     # ---- host-scoped downstream merge ----
@@ -309,22 +305,15 @@ def run_incremental(
         .join(affected_urls, "url", "left_semi")
         .join(todo, "url", "left_anti")
     )
-    pt_inc = (
-        merge_ocr(_strip(sub_pages), ocr_stage(new_pages))
-        .unionByName(reused_ocr)
-        .localCheckpoint()
-    )
-    out["page_text"] = stage_store.upsert_stage(
-        pt_inc, out_root, "page_text", run_id, ["url"], delete_scope=affected_urls
-    )
-    dt_inc = assemble_documents(pt_inc).localCheckpoint()
-    out["doc_text"] = stage_store.upsert_stage(
-        dt_inc, out_root, "doc_text", run_id, ["url"], delete_scope=affected_urls
-    )
-    ch_inc = chunk_stage(dt_inc).localCheckpoint()
-    out["chunks"] = stage_store.upsert_stage(
-        ch_inc, out_root, "chunks", run_id, ["url"], delete_scope=affected_urls
-    )
+    df = sub_pages
+    for stage, build, _ in TEXT_STAGES:
+        inc = build(df, new_pages)
+        if stage == "page_text":
+            inc = inc.unionByName(reused_ocr)
+        df = inc.localCheckpoint()
+        out[stage] = stage_store.upsert_stage(
+            df, out_root, stage, run_id, ["url"], delete_scope=affected_urls
+        )
     return out
 
 

@@ -24,7 +24,7 @@ ZSTD_LEVEL = "1"
 
 # Stage snapshots are text-heavy (page text, chunk text, JSON layout
 # artifacts).  Codec settled by three interleaved committed-pipeline
-# A/Bs at 8000 docs (round 5; tools/bench_codec_forms.py,
+# A/Bs at 8000 docs (round 5; git show c5de244:tools/bench_codec_forms.py,
 # BENCH/CODEC_FORMS.md): pipeline-wall differences between snappy and
 # either zstd level are WITHIN host noise (per-form medians 10.2-12.2s
 # across sessions, overlapping), while sizes are deterministic — zstd

@@ -5,7 +5,7 @@ The reference is batch-only (SURVEY.md §2.8); its skip-if-exists
 re-runs map to incremental batch.  This module is the idiomatic Spark
 extension: a file-source stream over the input table directory with
 `Trigger.AvailableNow`-style draining, url dedup across batches, and a
-watermarked per-host page-rate aggregate — the shapes a continuous
+watermarked per-host crawl sessionizer — the shapes a continuous
 Common-Crawl ingest needs.
 """
 
@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.extract import host_col
 from ..schemas import INPUT
 
 
@@ -27,19 +28,6 @@ def stream_source(spark: SparkSession, path: str) -> DataFrame:
 def dedup_new_urls(stream: DataFrame) -> DataFrame:
     """Exactly-once per url across the stream (state-backed)."""
     return stream.withWatermark("warc_ts", "1 hour").dropDuplicates(["url"])
-
-
-def host_rate_agg(stream: DataFrame) -> DataFrame:
-    """Windowed per-host ingest counts with late-data watermark."""
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    return (
-        stream.withWatermark("warc_ts", "30 minutes")
-        .groupBy(F.window("warc_ts", "10 minutes"), host.alias("host"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.octet_length("html")).alias("bytes_in"),
-        )
-    )
 
 
 def stream_extract(
@@ -128,9 +116,8 @@ def sessionize_stream(stream: DataFrame) -> DataFrame:
             columns=["host", "session_id", "session_start", "session_end", "n_docs"],
         )
 
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
     return (
-        stream.select(host.alias("host"), "warc_ts")
+        stream.select(host_col().alias("host"), "warc_ts")
         .withWatermark("warc_ts", "1 hour")
         .groupBy("host")
         .applyInPandasWithState(

@@ -67,6 +67,9 @@ def test_vector_build_stages_commit_bucketed(spark, work_dir):
     for stage in ("chunks", "typed_chunks", "chunk_vectors"):
         info = stage_store.marker_info(root, stage)
         assert info["bucket"]["keys"] == ["url"], stage
+    # the page-granularity stages commit flat (BENCH/STAGE_BUCKETING.md)
+    for stage in ("pages", "page_text", "doc_text"):
+        assert stage_store.marker_info(root, stage).get("bucket") is None, stage
 
     typed = stage_store.read_stage(spark, root, "typed_chunks")
     vectors = stage_store.read_stage(spark, root, "chunk_vectors")
@@ -116,28 +119,3 @@ def test_unbucketed_baseline_does_shuffle(spark, bucketed):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
-
-def test_pipeline_bucketed_stages_knob_is_byte_identical(spark, work_dir):
-    """The bucketed_stages knob (kept for read-mix-differing
-    deployments after BENCH/STAGE_BUCKETING.md rejected it as the
-    default) must not change RESULTS: running every stage bucketed
-    yields byte-identical doc_text to the flat default, and the page
-    stages carry bucket specs in their markers."""
-    from pdf_extraction_spark.plans import stage_store
-    from pdf_extraction_spark.plans.pipeline import run_pipeline
-    from pdf_extraction_spark.sources.corpus import corpus_df
-
-    inp = corpus_df(spark, 20)
-    flat_root = f"{work_dir}/knob_flat"
-    bkt_root = f"{work_dir}/knob_bucketed"
-    flat = run_pipeline(spark, inp, flat_root, resume=False, run_id="kf")
-    bkt = run_pipeline(
-        spark, inp, bkt_root, resume=False, run_id="kb",
-        bucketed_stages=("pages", "page_text", "doc_text", "chunks"),
-    )
-    for stage in ("pages", "page_text", "doc_text"):
-        assert stage_store.marker_info(bkt_root, stage)["bucket"]["keys"] == ["url"]
-        assert stage_store.marker_info(flat_root, stage).get("bucket") is None
-    a = {r.url: r.extracted_text for r in flat["doc_text"].collect()}
-    b = {r.url: r.extracted_text for r in bkt["doc_text"].collect()}
-    assert a == b and len(a) > 0

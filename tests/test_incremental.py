@@ -1,6 +1,8 @@
 """Incremental per-url extraction (anti-join against the committed
 snapshot) + spark-submit packaging."""
 
+import pytest
+
 from pdf_extraction_spark import oracle
 from pdf_extraction_spark.plans import stage_store
 from pdf_extraction_spark.plans.pipeline import run_incremental, run_pipeline
@@ -143,6 +145,27 @@ def test_incremental_downstream_is_host_scoped(spark, work_dir):
         .count()
     )
     assert bad == 0
+
+
+def test_incremental_after_pages_only_commits_text_stages(spark, work_dir):
+    """A run killed after pages leaves no text stage to merge into: the
+    increment upserts pages, then commits the text stages corpus-wide
+    with the same bucket specs as a full run."""
+    root = f"{work_dir}/fallback"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, corpus_df(spark, 30), root, resume=False,
+                     fail_after="pages", run_id="base")
+    assert not stage_store.is_committed(root, "page_text")
+
+    out = run_incremental(spark, corpus_df(spark, 36), root, run_id="incr")
+
+    exp = oracle.extract_corpus(generate_corpus(36))
+    got = {r["url"]: r["extracted_text"] for r in out["doc_text"].collect()}
+    assert all(got.get(u, "") == v["text"] for u, v in exp.items())
+    assert len(got) == sum(1 for v in exp.values() if v["text"])
+    for stage in ("page_text", "doc_text"):
+        assert stage_store.marker_info(root, stage).get("bucket") is None, stage
+    assert stage_store.marker_info(root, "chunks")["bucket"]["keys"] == ["url"]
 
 
 def test_incremental_legacy_stage_without_content_hash(spark, work_dir):

@@ -127,7 +127,9 @@ def test_streaming_stateful_sessionize(spark, work_dir):
     rows1 = [
         (f"https://a.example/d{i}", t0 + timedelta(minutes=5 * i)) for i in range(3)
     ] + [
-        (f"https://b.example/d{i}", t0 + timedelta(minutes=i)) for i in range(2)
+        ("https://b.example/d0", t0),
+        # path-less url: its host must still parse as b.example
+        ("http://b.example", t0 + timedelta(minutes=1)),
     ]
     # second batch: >30min gap on host a (new session) + a far-future
     # row that advances the watermark past every earlier session
