@@ -104,19 +104,12 @@ def sf_of(sf_dir: str) -> float:
         return 0.1
 
 
-def ensure_corpus(spark, n_docs: int, version: int = 2) -> str:
-    """version 2 = the live generator (coverage corpus, evolves);
-    version 1 = the FROZEN round-1 generator (sources/corpus_v1.py) —
-    the cross-round trend-line workload."""
-    suffix = "" if version == 2 else "_v1"
-    path = f"/root/repo/.work/bench_corpus{suffix}_{n_docs}"
+def ensure_corpus(spark, n_docs: int) -> str:
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".work", f"bench_corpus_{n_docs}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        if version == 2:
-            from pdf_extraction_spark.sources.corpus import write_corpus
-        else:
-            from pdf_extraction_spark.sources.corpus_v1 import write_corpus
+        from pdf_extraction_spark.sources.corpus import write_corpus
 
-        log(f"generating bench corpus v{version} ({n_docs} docs) -> {path}")
+        log(f"generating bench corpus ({n_docs} docs) -> {path}")
         write_corpus(spark, path, n_docs)
     return path
 
@@ -206,8 +199,7 @@ def main() -> int:
     # 80000*sf (8000 docs at sf0.1): at the old 2000 docs the committed
     # pipeline spent >40% of wall in fixed stage overhead (6 Spark jobs
     # + parquet snapshots for ~16s of wall, round-3 verdict item 6); at
-    # 8000 per-doc compute dominates (overhead <20%).  The 2000-doc
-    # corpus_v1 trend block below stays for r2/r3 comparability.
+    # 8000 per-doc compute dominates (overhead <20%).
     n_docs = args.extract_docs or max(200, int(80000 * sf))
 
     from pdf_extraction_spark.session import build_session
@@ -246,7 +238,6 @@ def main() -> int:
         "pages_per_sec": round(n_pages / results["extract_pipeline"], 2) if n_pages else None,
         "loadavg_at_start": pipe_load,
     }
-    corpus_v1_block = None
     if args.stage == "full" and not args.extract_only:
         stage_times = []
         for _ in range(pipe_runs):
@@ -258,60 +249,6 @@ def main() -> int:
         corpus_v2_block["extract_stage_sec"] = results["extract_stage"]
         corpus_v2_block["extract_stage_docs_per_sec"] = extract_stage_dps
         log(f"  extract_stage: {dt2:.3f}s ({extract_stage_dps} docs/sec)")
-
-        # FROZEN corpus-v1 trend line: same doc count, round-1 generator
-        c1 = ensure_corpus(spark, n_docs, version=1)
-        log(f"corpus_v1 pipeline ({n_docs} docs, {pipe_runs} run(s))...")
-        v1_load = wait_quiet()
-        v1_pipe, v1_stage = [], []
-        for _ in range(pipe_runs):
-            dtp, _, v1_pages = run_extract(spark, c1, "full")
-            v1_pipe.append(dtp)
-        for _ in range(pipe_runs):
-            dts, _, _ = run_extract(spark, c1, "extract")
-            v1_stage.append(dts)
-        v1_med = round(statistics.median(v1_pipe), 3)
-        v1_smed = round(statistics.median(v1_stage), 3)
-        corpus_v1_block = {
-            "generator": "v1 (frozen round-1 snapshot, sources/corpus_v1.py)",
-            "extract_docs": n_docs,
-            "runs": pipe_runs,
-            "extract_pipeline_sec": v1_med,
-            "extract_pipeline_all": [round(t, 3) for t in v1_pipe],
-            "docs_per_sec": round(n_docs / v1_med, 2),
-            "pages_per_sec": round(v1_pages / v1_med, 2) if v1_pages else None,
-            "extract_stage_sec": v1_smed,
-            "extract_stage_docs_per_sec": round(n_docs / v1_smed, 2),
-            "loadavg_at_start": v1_load,
-        }
-        log(f"  corpus_v1: pipeline {v1_med}s, stage {v1_smed}s "
-            f"({corpus_v1_block['extract_stage_docs_per_sec']} docs/sec)")
-
-        # 2000-doc corpus_v1 TREND sub-block: the exact workload r2/r3
-        # recorded (BENCH_r03 corpus_v1: stage 13.73s / 145.7 docs/s),
-        # kept so the cross-round trend line stays apples-to-apples
-        # while the headline pipeline number moves to compute-dominated
-        # scale above.
-        if n_docs > 2000:
-            c1t = ensure_corpus(spark, 2000, version=1)
-            t_pipe, t_stage = [], []
-            for _ in range(pipe_runs):
-                dtp, _, _ = run_extract(spark, c1t, "full")
-                t_pipe.append(dtp)
-            for _ in range(pipe_runs):
-                dts, _, _ = run_extract(spark, c1t, "extract")
-                t_stage.append(dts)
-            tp, ts_ = (round(statistics.median(t_pipe), 3),
-                       round(statistics.median(t_stage), 3))
-            corpus_v1_block["trend_2000"] = {
-                "extract_docs": 2000,
-                "extract_pipeline_sec": tp,
-                "extract_stage_sec": ts_,
-                "docs_per_sec": round(2000 / tp, 2),
-                "extract_stage_docs_per_sec": round(2000 / ts_, 2),
-            }
-            log(f"  corpus_v1 trend (2000 docs): pipeline {tp}s, stage {ts_}s "
-                f"({corpus_v1_block['trend_2000']['extract_stage_docs_per_sec']} docs/sec)")
     else:
         extract_stage_dps = None
 
@@ -368,7 +305,6 @@ def main() -> int:
         "extract_stage_docs_per_sec": extract_stage_dps,
         "extract_docs": n_docs,
         "cpus": args.cpus,
-        "corpus_v1": corpus_v1_block,
         "corpus_v2": corpus_v2_block,
         "query_provenance": query_provenance,
     }

@@ -87,7 +87,7 @@ def boilerplate_patterns(pages: DataFrame) -> DataFrame:
 def strip_stage(
     pages: DataFrame,
     patterns: DataFrame | None = None,
-    join_strategy: str = "shuffle",
+    join_strategy: str = "auto",
 ) -> DataFrame:
     """pages -> (url, page_no, page_text, ocr_triggered) with common
     prefixes removed (never [IMAGE] lines; OCR pages pass through with
@@ -98,24 +98,20 @@ def strip_stage(
     array expression per page row (no line-level explode / re-assembly
     shuffle — at 10^12 pages that shuffle would dominate the stage).
 
-    ``join_strategy`` picks how the pattern side attaches:
-
-    * ``"shuffle"`` (default) — shuffle-hash join on host.  At web
-      scale host cardinality is 10^7-10^8; a broadcast of every host's
-      pattern array does not fit (round-1 defect).
-    * ``"broadcast"`` — explicit broadcast, shuffle-free for the pages
-      side.  Correct only when the host count is bounded.
-    * ``"auto"`` — no hint; AQE converts the join to broadcast-hash at
-      runtime iff the BUILT pattern side's actual shuffle bytes fit
-      under spark.sql.autoBroadcastJoinThreshold (64 MB, session.py).
-      This replaces the pipeline's former driver-side
-      ``distinct().count()`` host-cardinality gate — a whole extra
-      job (~1s at 8k docs, a full pages-scan at 10^12) — with the
-      runtime statistics AQE already collects, and decides on SIZE
-      (what broadcast actually costs) rather than a cardinality proxy.
+    The pattern join carries no hint: AQE converts it to broadcast-hash
+    at runtime iff the BUILT pattern side's actual shuffle bytes fit
+    under spark.sql.autoBroadcastJoinThreshold (64 MB, session.py), and
+    keeps the shuffle join when web-scale host cardinality (10^7-10^8)
+    outgrows it.  This replaces a driver-side ``distinct().count()``
+    host-cardinality gate — a whole extra job (~1s at 8k docs, a full
+    pages-scan at 10^12) — and decides on SIZE (what broadcast actually
+    costs) rather than a cardinality proxy.  ``"auto"`` is the only
+    ``join_strategy``.
 
     OCR-flagged pages are excluded here; the OCR stage emits their rows
     and the pipeline unions the two disjoint sets (no merge join)."""
+    if join_strategy != "auto":
+        raise ValueError(f"unknown join_strategy {join_strategy!r}; only 'auto'")
     if patterns is None:
         patterns = boilerplate_patterns(pages)
     host_patterns = patterns.groupBy("host").agg(
@@ -125,12 +121,7 @@ def strip_stage(
     base = pages.filter((F.col("page_no") > 0) & ~F.col("ocr_triggered")).select(
         "url", "page_no", "host", "md"
     )
-    if join_strategy == "broadcast":
-        joined = base.join(F.broadcast(host_patterns), "host", "left")
-    elif join_strategy == "auto":
-        joined = base.join(host_patterns, "host", "left")
-    else:
-        joined = base.join(host_patterns.hint("shuffle_hash"), "host", "left")
+    joined = base.join(host_patterns, "host", "left")
 
     def keep_line(line):
         is_image = F.contains(F.lower(line), F.lit(IMAGE_PLACEHOLDER.lower()))

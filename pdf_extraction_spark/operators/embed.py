@@ -3,10 +3,8 @@
 The reference embeds chunk text with a SentenceTransformer
 (build_vector_db.py:381-389 ``model.encode(batch)``); the north rule
 forbids external models, so the stand-in is a seeded md5 feature
-hash — deterministic, uniform in [-1, 1], and computable BOTH as a
-Catalyst expression (SQL-replayable for the DuckDB oracle) and as an
-Arrow-batched pandas UDF (the shape a real encoder plugs into: replace
-``_hash_embed_np`` with ``model.encode`` and nothing else changes).
+hash — deterministic, uniform in [-1, 1], and computed as a Catalyst
+expression whose DuckDB twin (``embed_sql``) replays it for the oracle.
 
 Component j of embed(text):
     v_j   = 4096*d0 + 256*d1 + 16*d2 + d3   of md5(f"{j}|" + text)
@@ -16,8 +14,6 @@ where d_k is the value of the k-th hex digit — string arithmetic only
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -63,45 +59,9 @@ def embed_sql(text_expr: str, dim: int = EMBED_DIM) -> str:
     return "[" + ", ".join(comps) + "]"
 
 
-def _hash_embed_np(texts, dim: int):
-    """Vectorized-enough numpy twin used by the pandas UDF path."""
-    import hashlib
-
-    import numpy as np
-
-    out = np.empty((len(texts), dim), dtype=np.float64)
-    for i, t in enumerate(texts):
-        b = (t or "").encode("utf-8", "surrogatepass")
-        for j in range(dim):
-            v = int(hashlib.md5(f"{j}|".encode() + b).hexdigest()[:4], 16)
-            out[i, j] = (v - 32767.5) / 32767.5
-    return out
-
-
 def embed_stage(
     chunks: DataFrame, text_col: str = "chunk_text", dim: int = EMBED_DIM,
-    use_arrow: bool = False,
 ) -> DataFrame:
-    """chunks + ``embedding`` column.
-
-    Default path is the Catalyst expression (JVM-side, whole-stage
-    codegen, zero Python).  ``use_arrow=True`` routes through
-    mapInPandas — the production shape for a real encoder model, kept
-    bit-identical to the expression form (tests assert equality).
-    """
-    if not use_arrow:
-        return chunks.withColumn("embedding", hash_embedding_col(text_col, dim))
-
-    import pandas as pd
-
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in chunks.schema.fields)
-    schema = f"{fields}, embedding array<double>"
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            emb = _hash_embed_np(pdf[text_col].tolist(), dim)
-            pdf = pdf.copy()
-            pdf["embedding"] = list(emb)
-            yield pdf
-
-    return chunks.mapInPandas(gen, schema=schema)
+    """chunks + ``embedding`` column, as a JVM-side Catalyst expression
+    (whole-stage codegen, zero Python)."""
+    return chunks.withColumn("embedding", hash_embedding_col(text_col, dim))

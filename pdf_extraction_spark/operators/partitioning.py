@@ -38,8 +38,10 @@ def ensure_parallelism(df: DataFrame, key=None) -> DataFrame:
     # lsh_candidate_pairs -> minhash_signature -> shingles), so tag the
     # checked/repartitioned object and skip repeat work — nested calls
     # then cost one attribute read, and a plan never stacks a second
-    # round-robin exchange on an already-guarded input.
-    cached = getattr(df, "_parallelism_result", None)
+    # round-robin exchange on an already-guarded input.  A keyed call
+    # skips the memo: it must hash on ITS key, whatever an earlier
+    # unkeyed call stored.
+    cached = None if key is not None else getattr(df, "_parallelism_result", None)
     if cached is not None:
         return cached
     sc = df.sparkSession.sparkContext

@@ -62,7 +62,7 @@ def _tf_col(term: str, text_col: str) -> Column:
     """Occurrences of ``term`` as a whitespace token of ``text_col``,
     with ZERO array materialization: a token equals a maximal run of
     non-space characters (the tokenizer is split-on-' ' minus empties),
-    so tf = regexp_count of the literal term bounded by ' '/^/$
+    so tf = regexp_count of the literal term bounded by ' '/\\A/\\z
     (zero-width lookarounds, so adjacent occurrences all count).
     Value-identical to counting split-tokens == term.  The former
     array form (size(tokens) - size(array_remove(tokens, term)))
@@ -72,7 +72,8 @@ def _tf_col(term: str, text_col: str) -> Column:
     cure.  A term containing a space can never be a token -> 0."""
     if not term or " " in term:
         return F.lit(0)
-    pat = "(?<=^| )" + _regex_literal(term) + "(?= |$)"
+    # \A/\z, not ^/$: Java's $ also matches before a final newline
+    pat = r"(?<=\A| )" + _regex_literal(term) + r"(?= |\z)"
     return F.regexp_count(F.col(text_col), F.lit(pat))
 
 

@@ -31,16 +31,7 @@ STAGES = ["pages", "page_text", "doc_text", "chunks", "metrics"]
 
 
 def _strip(pages: DataFrame) -> DataFrame:
-    """AQE-gated strip: the pattern side attaches with no join hint and
-    adaptive execution converts to broadcast-hash at runtime iff the
-    built (host, pats) side's ACTUAL shuffle bytes fit under
-    autoBroadcastJoinThreshold.  Replaces the former driver-side
-    ``distinct().count()`` cardinality gate — one whole extra job
-    (~1s of the 8k-doc pipeline wall, a full pages scan at 10^12
-    rows) — with the runtime size statistics AQE already collects
-    (decision measured in tests/test_plans.py and the stage profile in
-    NOTES; results are join-semantics-identical either way)."""
-    return strip_stage(pages, boilerplate_patterns(pages), join_strategy="auto")
+    return strip_stage(pages, boilerplate_patterns(pages))
 
 
 def _metrics_df(pages: DataFrame, run_id: str) -> DataFrame:

@@ -66,10 +66,7 @@ def remove_stage(root: str, stage: str, confirm: bool) -> str:
 
 def gc(root: str) -> list[str]:
     """Remove orphaned swap dirs for every committed stage."""
-    removed = []
-    for stage in stage_store.stages(root):
-        removed.extend(stage_store.gc_stage(root, stage))
-    return removed
+    return stage_store.gc_all(root)
 
 
 def recover(root: str) -> list[tuple[str, str]]:

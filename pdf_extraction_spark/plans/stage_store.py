@@ -330,8 +330,8 @@ def commit_stage(
     ``bucket_by`` commits the snapshot BUCKETED (hash-clustered + bucket
     -sorted) on those keys: the shuffle is paid once at commit and every
     downstream equi-join / aggregation on a superset of the keys over
-    the committed table is exchange-free (plans/bucketing.py explains
-    the idiom; tests/test_bucketing.py pins the plans).  The bucket spec
+    the committed table is exchange-free (tests/test_bucketing.py pins
+    the plans).  The bucket spec
     rides in the marker so a fresh session re-registers the catalog
     table from disk.  16 buckets fits the sandbox; a 100 TB stage would
     use O(cluster cores) buckets — Iceberg's bucket transform in

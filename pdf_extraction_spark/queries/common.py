@@ -31,28 +31,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def fits_broadcast(df: DataFrame) -> bool:
-    """True iff ``df``'s SOURCE FILES fit under the session's
-    autoBroadcastJoinThreshold — the same on-disk-size statistic the
-    planner itself uses when it auto-broadcasts a bare scan.  Lets a
-    query hint-broadcast a *filtered/projected subset* of a table the
-    planner would already have broadcast whole (strictly smaller, so
-    strictly safer), while degrading to the unhinted plan at scale
-    where the table outgrows the threshold.  Driver-side metadata only
-    (file listing is already cached by the scan); no extra Spark job."""
-    import os
-
-    spark = df.sparkSession
+    """True iff ``df``'s optimized-plan size estimate fits under the
+    session's autoBroadcastJoinThreshold — the same statistic and the
+    same parsed threshold the planner itself uses when it
+    auto-broadcasts (an unfiltered parquet scan estimates its on-disk
+    bytes, on any filesystem).  Lets a query hint-broadcast a
+    *filtered/projected subset* of a table the planner would already
+    have broadcast whole (strictly smaller, so strictly safer), while
+    degrading to the unhinted plan at scale where the table outgrows
+    the threshold.  Driver-side metadata only; no extra Spark job."""
     try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except (TypeError, ValueError):
+        thr = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    except AttributeError:  # no JVM handle (Spark Connect): unhinted plan
         return False
-    if thr <= 0:
-        return False
-    try:
-        files = df.inputFiles()
-        total = sum(
-            os.path.getsize(f.removeprefix("file:")) for f in files
-        )
-    except Exception:
-        return False
-    return 0 < total <= thr
+    return 0 < size <= thr

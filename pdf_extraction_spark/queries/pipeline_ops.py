@@ -17,10 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import regions
-from ..operators.boilerplate import strip_stage
-from ..operators.chunk import assemble_documents, chunk_stage
 from ..operators.extract import extract_stage
-from ..operators.ocr import merge_ocr, ocr_stage
+from ..plans.pipeline import TEXT_STAGES
 from ..sources.corpus import corpus_df
 from .common import prepare
 
@@ -53,18 +51,25 @@ def q_pipeline_pages(spark, sf_dir):
     )
 
 
+def _text_stage(pages: DataFrame, last: str) -> DataFrame:
+    """The pipeline's TEXT_STAGES over ``pages`` up to stage ``last``,
+    chained in one plan instead of committed."""
+    df = pages
+    for stage, build, _ in TEXT_STAGES:
+        df = build(df, pages)
+        if stage == last:
+            return df
+    raise KeyError(last)
+
+
 def q_pipeline_doc_text(spark, sf_dir):
     """North-rule target: (url, extracted_text) byte-checked in tests."""
-    p = _pages(spark, sf_dir)
-    return assemble_documents(merge_ocr(strip_stage(p), ocr_stage(p)))
+    return _text_stage(_pages(spark, sf_dir), "doc_text")
 
 
 def q_pipeline_chunks(spark, sf_dir):
     """North-star chunk stage: (url, span_start, span_end, chunk_text)."""
-    p = _pages(spark, sf_dir)
-    return chunk_stage(
-        assemble_documents(merge_ocr(strip_stage(p), ocr_stage(p)))
-    )
+    return _text_stage(_pages(spark, sf_dir), "chunks")
 
 
 def q_pipeline_regions(spark, sf_dir):

@@ -260,25 +260,6 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
 """
 
 
-def q_topk_per_type(spark, sf_dir):
-    """W5 variant: top-2 events by value per event_type."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("event_type", "event_id", "value", F.col("rn").cast("int").alias("rnk"))
-    )
-
-
-SQL_TOPK_PER_TYPE = """
-SELECT event_type, event_id, value, CAST(rn AS INTEGER) AS rnk
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-                                   ORDER BY value DESC, event_id ASC) AS rn
-      FROM events) WHERE rn <= 2
-"""
-
-
 def q_running_sum(spark, sf_dir):
     """Cumulative window aggregate per user (exact DECIMAL running sum)."""
     e = _t(spark, sf_dir, "events")
@@ -378,28 +359,6 @@ SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        STRFTIME(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
        COUNT(*) AS n_events
 FROM sess GROUP BY user_id, session_id
-"""
-
-
-def q_window_hour_agg(spark, sf_dir):
-    """Tumbling event-time window aggregate (streaming shape, batch run)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-    )
-
-
-SQL_WINDOW_HOUR_AGG = """
-SELECT DATE_TRUNC('hour', ts) AS hour, event_type, COUNT(*) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2
 """
 
 

@@ -13,6 +13,9 @@ Rotation history:
 * round 3 (slots for chunk_rerank_topk + pipeline_chunk_vectors_ann):
   running_sum, minmax_combined — both still registered in
   relational.py; re-exported here for the pytest gate.
+
+normalized_prefixes and the LSH-bucket oracle SQL are imported from
+text_ops.py, where boilerplate_threshold and ann_lsh_topk build on them.
 """
 
 from __future__ import annotations
@@ -27,37 +30,13 @@ from .relational import (
     q_minmax_combined,
     q_running_sum,
 )
+from .text_ops import SQL_NORMALIZED_PREFIXES, _sql_lsh_buckets, q_normalized_prefixes
 
 DEC = "decimal(18,4)"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _table(spark, sf_dir, name)
-
-
-# --- F15/A1: normalization + distinct-per-doc prefix counts ------------------
-
-def q_normalized_prefixes(spark, sf_dir):
-    """F15 normalize + A1 distinct-per-doc prefix counts per source."""
-    d = _t(spark, sf_dir, "documents")
-    norm = F.lower(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.col("text"), r"\d+", "N"), r"\s+", " "
-            )
-        )
-    )
-    pre = d.select("source", "doc_id", F.substring(norm, 1, 15).alias("prefix")).distinct()
-    return pre.groupBy("source", "prefix").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
-SQL_NORMALIZED_PREFIXES = """
-SELECT source, prefix, COUNT(*) AS n_docs FROM (
-  SELECT DISTINCT source, doc_id,
-         substr(lower(trim(regexp_replace(regexp_replace(text, '\\d+', 'N', 'g'), '\\s+', ' ', 'g'))), 1, 15) AS prefix
-  FROM documents)
-GROUP BY source, prefix
-"""
 
 
 # --- fixed-width chunk spans ---------------------------------------------------
@@ -95,21 +74,6 @@ FROM documents, UNNEST(generate_series(0, GREATEST(len(text) - 1, 0), 80)) AS t(
 
 def q_lsh_buckets(spark, sf_dir):
     return similarity.lsh_buckets(_t(spark, sf_dir, "embeddings"))
-
-
-def _sql_lsh_buckets() -> str:
-    bits = []
-    for p in range(similarity.N_PLANES):
-        signs = ", ".join(
-            str(similarity.hyperplane_sign_value(p, i)) for i in range(64)
-        )
-        proj = (
-            "list_sum(list_transform(generate_series(1, 64), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ([{signs}])[i]))"
-        )
-        bits.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-    concat = " || ".join(bits)
-    return f"SELECT vec_id, {concat} AS bucket FROM embeddings"
 
 
 # --- W5 variant: top-2 per group ----------------------------------------------

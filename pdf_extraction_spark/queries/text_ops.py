@@ -231,37 +231,6 @@ LIMIT 10
 """
 
 
-# --- chunking (SQL-expressible fixed-width variant) ---------------------------
-
-def q_chunk_fixed(spark, sf_dir):
-    """Fixed-width 100/20 chunk spans (the separator-aware splitter is
-    pipeline-only; this exposes the span algebra to the SQL gate)."""
-    d = _t(spark, sf_dir, "documents")
-    n = F.length("text")
-    return (
-        d.select(
-            "doc_id",
-            "text",
-            n.alias("n"),
-            F.explode(F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(80))).alias("s"),
-        )
-        .select(
-            "doc_id",
-            F.col("s").cast("long").alias("span_start"),
-            F.least(F.col("s") + 100, F.col("n")).cast("long").alias("span_end"),
-            F.expr("substring(text, s + 1, 100)").alias("chunk_text"),
-        )
-    )
-
-
-SQL_CHUNK_FIXED = """
-SELECT doc_id, CAST(s AS BIGINT) AS span_start,
-       CAST(LEAST(s + 100, len(text)) AS BIGINT) AS span_end,
-       substr(text, CAST(s AS INTEGER) + 1, 100) AS chunk_text
-FROM documents, UNNEST(generate_series(0, GREATEST(len(text) - 1, 0), 80)) AS t(s)
-"""
-
-
 # --- dedup family --------------------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
@@ -454,10 +423,6 @@ pairs AS (
 SELECT vec_id, ROUND(dot / (na * np), 6) AS cosine
 FROM pairs ORDER BY cosine DESC, vec_id ASC LIMIT 10
 """
-
-
-def q_lsh_buckets(spark, sf_dir):
-    return similarity.lsh_buckets(_t(spark, sf_dir, "embeddings"))
 
 
 def _sql_lsh_buckets() -> str:

@@ -7,7 +7,7 @@ from pdf_extraction_spark.session import build_session
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("tests", cores=8, shuffle_partitions=8)
+    s = build_session("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

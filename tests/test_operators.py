@@ -110,6 +110,16 @@ def test_bm25_matches_pure_spec(spark):
             assert got[doc_id] == pytest.approx(exp, rel=1e-12)
 
 
+def test_bm25_trailing_newline_is_not_a_term_match(spark):
+    """Split-on-space tokens of "bar foo\\n" are "bar" and "foo\\n": a
+    doc whose only "foo" carries a final newline has no query term."""
+    df = spark.createDataFrame(
+        [(0, "bar foo\n"), (1, "foo bar")], "doc_id long, text string"
+    )
+    got = {r["doc_id"] for r in retrieval.bm25_scores(df, ["foo"]).collect()}
+    assert got == {1}
+
+
 def test_minmax_normalize_constant_guard(spark):
     df = spark.createDataFrame([(i, 7.0) for i in range(4)], "id long, s double")
     out = retrieval.minmax_normalize(df, "s", "n").collect()

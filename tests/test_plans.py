@@ -41,6 +41,20 @@ def test_dimension_joins_are_broadcast(spark, sf):
     assert "SortMergeJoin" not in plan
 
 
+def test_fits_broadcast_reads_suffixed_threshold(spark, sf):
+    """A threshold written with a unit suffix ("64MB") is the same
+    threshold: shipping_priority's size gate must still fire."""
+    from pdf_extraction_spark.queries.common import fits_broadcast
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64MB")
+    try:
+        assert fits_broadcast(spark.read.parquet(f"{sf}/orders.parquet"))
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_semi_anti_join_strategies(spark, sf):
     semi = plan_of(relational.q_semi_join(spark, sf))
     assert "LeftSemi" in semi
@@ -174,43 +188,37 @@ def test_ann_bucket_no_self_join(spark, sf):
     assert plan.count("BroadcastNestedLoopJoin") <= 2  # probe scalar joins only
 
 
-def test_strip_default_does_not_broadcast_patterns(spark, sf):
-    """Web-scale host cardinality (10^7-10^8) cannot broadcast: the
-    DEFAULT strip join is a shuffle join on host; broadcast is either
-    an explicit opt-in (join_strategy="broadcast") or AQE's runtime
-    size-based conversion under join_strategy="auto" (the pipeline
-    default — the built pattern side's ACTUAL bytes decide)."""
-    from pdf_extraction_spark.schemas import PAGES
-
-    pages = spark.createDataFrame([], PAGES)
-    default_plan = plan_of(strip_stage(pages))
-    assert "BroadcastExchange" not in default_plan
-    assert "BroadcastHashJoin" not in default_plan
-    opted = plan_of(strip_stage(pages, join_strategy="broadcast"))
-    assert "BroadcastHashJoin" in opted
-
-
 def test_strip_auto_converts_to_broadcast_at_runtime(spark):
-    """The pipeline's strip uses join_strategy='auto' (no hint): AQE
-    must convert the pattern join to broadcast-hash at runtime from the
+    """strip_stage attaches the pattern side with no hint: AQE must
+    convert the pattern join to broadcast-hash at runtime from the
     built side's ACTUAL shuffle bytes (this replaced the driver-side
     distinct-host count job — a full extra pages scan), and the rows
-    must match the explicit shuffle form exactly."""
+    must match the sort-merge plan the same call gets with AQE and
+    auto-broadcast off."""
     from pdf_extraction_spark.operators.extract import extract_stage
     from pdf_extraction_spark.sources.corpus import corpus_df
 
     pages = extract_stage(corpus_df(spark, 60)).cache()
+    confs = {"spark.sql.adaptive.enabled": "false",
+             "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    prev = {k: spark.conf.get(k) for k in confs}
     try:
-        auto = strip_stage(pages, join_strategy="auto")
+        auto = strip_stage(pages)
         auto.write.mode("overwrite").format("noop").save()
         ep = plan_of(auto)
         assert "AdaptiveSparkPlan" in ep
         assert "BroadcastHashJoin" in ep and "SortMergeJoin" not in ep
-        shuffled = strip_stage(pages, join_strategy="shuffle")
-        assert sorted(map(tuple, auto.collect())) == sorted(
-            map(tuple, shuffled.collect())
-        )
+        auto_rows = sorted(map(tuple, auto.collect()))
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        merged = strip_stage(pages)
+        assert "SortMergeJoin" in plan_of(merged)
+        assert auto_rows == sorted(map(tuple, merged.collect()))
+        with pytest.raises(ValueError, match="join_strategy"):
+            strip_stage(pages, join_strategy="shuffle")
     finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
         pages.unpersist()
 
 

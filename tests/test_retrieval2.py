@@ -13,14 +13,36 @@ from pdf_extraction_spark.queries.retrieval2 import synthetic_chunks
 
 
 def test_embed_catalyst_and_arrow_paths_identical(spark):
-    """The mapInPandas encoder path (the production shape for a real
-    model) must match the Catalyst expression bit-for-bit."""
+    """An Arrow-batched mapInPandas encoder (the shape a real model plugs
+    into) computing the module docstring's md5 formula in plain Python
+    must match the Catalyst expression bit-for-bit."""
+    import hashlib
+
+    def encode(text: str) -> list[float]:
+        b = text.encode("utf-8", "surrogatepass")
+        return [
+            (int(hashlib.md5(f"{j}|".encode() + b).hexdigest()[:4], 16) - 32767.5)
+            / 32767.5
+            for j in range(EMBED_DIM)
+        ]
+
+    def gen(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["embedding"] = [encode(t) for t in pdf["chunk_text"]]
+            yield pdf
+
     docs = spark.createDataFrame(
         [(i, f"doc {i} text with words {i * 7}") for i in range(20)] + [(99, "")],
         "doc_id long, chunk_text string",
     )
     a = {r.doc_id: r.embedding for r in embed_stage(docs).collect()}
-    b = {r.doc_id: r.embedding for r in embed_stage(docs, use_arrow=True).collect()}
+    b = {
+        r.doc_id: r.embedding
+        for r in docs.mapInPandas(
+            gen, "doc_id long, chunk_text string, embedding array<double>"
+        ).collect()
+    }
     assert a.keys() == b.keys()
     for k in a:
         assert len(a[k]) == EMBED_DIM
