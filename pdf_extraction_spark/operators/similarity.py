@@ -38,6 +38,22 @@ def _norm(a):
     )
 
 
+def _top_cosine(
+    j: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Top-``k`` rows of ``j`` by cosine between ``vec_col`` and the
+    ``_probe`` column ``j`` carries, rounded to 6 places; deterministic
+    tiebreak on id."""
+    cos = _dot(F.col(vec_col), F.col("_probe")) / (
+        _norm(F.col(vec_col)) * _norm(F.col("_probe"))
+    )
+    return (
+        j.select(id_col, F.round(cos, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame, probe_id: int, k: int = 10, id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -52,14 +68,7 @@ def cosine_topk(
     j = ensure_parallelism(
         embeddings.filter(F.col(id_col) != probe_id)
     ).crossJoin(F.broadcast(probe))
-    cos = _dot(F.col(vec_col), F.col("_probe")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("_probe"))
-    )
-    return (
-        j.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_cosine(j, k, id_col, vec_col)
 
 
 def hyperplane_sign_value(plane: int, dim: int) -> float:
@@ -72,39 +81,31 @@ def hyperplane_sign_value(plane: int, dim: int) -> float:
     return 1.0 if first in "01234567" else -1.0
 
 
+def _projection(vec_col: str, plane: int, dim: int) -> "F.Column":
+    """Projection of ``vec_col`` onto hyperplane ``plane`` =
+    zip_with/aggregate against a literal sign vector: sequential fold,
+    identical association order to the SQL oracle."""
+    signs = F.array(*[F.lit(hyperplane_sign_value(plane, i)) for i in range(dim)])
+    return F.aggregate(
+        F.zip_with(F.col(vec_col), signs, lambda x, s: x.cast("double") * s),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def bucket_col(vec_col: str = "embedding", n_planes: int = N_PLANES, dim: int = 64):
-    """LSH bucket expression — bit string of hyperplane signs.
-    Projection = zip_with/aggregate against a literal sign vector:
-    sequential fold, identical association order to the SQL oracle."""
-    bits = []
-    for p in range(n_planes):
-        signs = F.array(
-            *[F.lit(hyperplane_sign_value(p, i)) for i in range(dim)]
-        )
-        proj = F.aggregate(
-            F.zip_with(F.col(vec_col), signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+    """LSH bucket expression — bit string of hyperplane signs."""
+    return F.concat(*[
+        F.when(_projection(vec_col, p, dim) >= 0, F.lit("1")).otherwise(F.lit("0"))
+        for p in range(n_planes)
+    ])
 
 
 def _projection_cols(vec_col: str, n_planes: int, dim: int) -> "F.Column":
     """array<double> of the raw hyperplane projections (bucket_col is
     their sign string) — used by multi-probe to rank which single bit
     sits closest to its hyperplane."""
-    projs = []
-    for p in range(n_planes):
-        signs = F.array(
-            *[F.lit(hyperplane_sign_value(p, i)) for i in range(dim)]
-        )
-        projs.append(F.aggregate(
-            F.zip_with(F.col(vec_col), signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ))
-    return F.array(*projs)
+    return F.array(*[_projection(vec_col, p, dim) for p in range(n_planes)])
 
 
 def probe_buckets_col(
@@ -313,14 +314,7 @@ def ann_ivf_topk(
         F.array_contains(F.col("_lists"), F.col("list_id"))
         & (F.col(id_col) != probe_id)
     )
-    cos = _dot(F.col(vec_col), F.col("_probe")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("_probe"))
-    )
-    return (
-        cand.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_cosine(cand, k, id_col, vec_col)
 
 
 def embedding_neardup_pairs(
@@ -430,12 +424,4 @@ def ann_lsh_topk(
     probe = embeddings.filter(F.col(id_col) == probe_id).select(
         F.col(vec_col).alias("_probe")
     )
-    j = cand.crossJoin(F.broadcast(probe))
-    cos = _dot(F.col(vec_col), F.col("_probe")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("_probe"))
-    )
-    return (
-        j.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_cosine(cand.crossJoin(F.broadcast(probe)), k, id_col, vec_col)

@@ -38,9 +38,7 @@ def list_stages(root: str) -> list[str]:
         if info is None:
             lines.append(f" - {stage}  [UNCOMMITTED]")
             continue
-        extras = []
-        if "run_id" in info:
-            extras.append(f"run_id={info['run_id']}")
+        extras = [f"run_id={info['run_id']}"] if "run_id" in info else []
         for kind in ("upserts", "appends"):
             if info.get(kind):
                 last = info[kind][-1]
@@ -72,18 +70,10 @@ def gc(root: str) -> list[str]:
 def recover(root: str) -> list[tuple[str, str]]:
     """Run crash recovery for every stage that lost its directory (or
     marker) mid-swap; returns [(stage, action)] for repaired stages.
-    Stages are discovered from swap leftovers too, so a stage whose
-    path vanished entirely is still found and restored."""
-    names = set(stage_store.stages(root))
-    try:
-        for n in os.listdir(root):
-            for sep in (".tmp-", ".old-"):
-                if sep in n:
-                    names.add(n.split(sep, 1)[0])
-    except FileNotFoundError:
-        return []
+    stage_store.stages() includes names known only from swap leftovers,
+    so a stage whose path vanished entirely is still found and restored."""
     actions = []
-    for stage in sorted(names):
+    for stage in stage_store.stages(root):
         action = stage_store.recover_stage(root, stage)
         if action is not None:
             actions.append((stage, action))

@@ -98,6 +98,38 @@ def _write_bucketed(
     spark.sql(f"DROP TABLE `{tmp_table}`")  # metadata only; files stay
 
 
+def _read_marker(d: str) -> dict | None:
+    p = os.path.join(d, MARKER)
+    if not os.path.exists(p):
+        return None
+    with open(p, encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def _write_marker(d: str, info: dict) -> None:
+    """Write ``d``'s marker atomically: the JSON goes to a temp file that
+    then replaces the marker, so a crash mid-write tears only the temp
+    file and readers keep seeing the previous marker.  The temp name
+    starts with ``_``, so Spark's file listing and _part_files skip it."""
+    p = os.path.join(d, MARKER)
+    with open(p + ".tmp", "w", encoding="utf-8") as fh:
+        json.dump(info, fh)
+    os.replace(p + ".tmp", p)
+
+
+def _is_marked(d: str) -> bool:
+    return os.path.exists(os.path.join(d, MARKER))
+
+
+def _record(info: dict, kind: str, run_id: str, **extra) -> dict:
+    """Append a ``kind`` ('upserts' | 'appends' | 'compactions') history
+    entry to the marker ``info``; returns ``info``."""
+    info.setdefault(kind, []).append(
+        {"run_id": run_id, "committed_at": time.time(), **extra}
+    )
+    return info
+
+
 def register_stage_table(
     spark: SparkSession, root: str, stage: str
 ) -> DataFrame | None:
@@ -106,8 +138,7 @@ def register_stage_table(
     None for unbucketed stages.  The catalog entry is session-local
     (in-memory catalog), so a fresh session re-creates it from the
     marker — the files themselves carry the bucketing."""
-    info = marker_info(root, stage)
-    bucket = (info or {}).get("bucket")
+    bucket = (marker_info(root, stage) or {}).get("bucket")
     if not bucket:
         return None
     name = _table_name(root, stage)
@@ -125,17 +156,11 @@ def register_stage_table(
 def _marked_with(d: str, run_id: str) -> bool:
     """True iff ``d`` carries a marker whose commit OR any recorded
     upsert/append was made by ``run_id``."""
-    p = os.path.join(d, MARKER)
-    if not os.path.exists(p):
-        return False
     try:
-        with open(p, encoding="utf-8") as fh:
-            info = json.load(fh)
+        info = _read_marker(d) or {}
     except (OSError, ValueError):
         return False
-    if info.get("run_id") == run_id:
-        return True
-    return any(
+    return info.get("run_id") == run_id or any(
         e.get("run_id") == run_id
         for kind in ("upserts", "appends", "compactions")
         for e in info.get(kind, [])
@@ -188,19 +213,14 @@ def _swap_into_place(path: str, tmp: str, run_id: str) -> None:
 def is_committed(root: str, stage: str) -> bool:
     """True iff the stage directory carries a committed marker.
 
-    If the marker is absent, first attempt crash recovery: the swap in
-    commit_stage/upsert_stage has a window between rename(path->old)
-    and rename(tmp->path) where the stage PATH does not exist even
-    though a fully-written marked snapshot (the tmp, and the old) is
-    still on disk.  recover_stage() promotes the marked tmp (the commit
-    takes effect) or restores the marked old (the commit rolls back),
-    so a crash in that window degrades to nothing instead of a full
-    recompute plus leaked directories.  Assumes no concurrent writer on
-    the same stage (single-committer, as the rest of this store does)."""
-    if os.path.exists(os.path.join(_dir(root, stage), MARKER)):
-        return True
-    recover_stage(root, stage)
-    return os.path.exists(os.path.join(_dir(root, stage), MARKER))
+    If the marker is absent, first run recover_stage(), so a crash in
+    _publish's swap window (stage PATH renamed aside, marked tmp not yet
+    in place) degrades to nothing instead of a full recompute plus
+    leaked directories.  Assumes no concurrent writer on the same stage
+    (single-committer, as the rest of this store does)."""
+    if not _is_marked(_dir(root, stage)):
+        recover_stage(root, stage)
+    return _is_marked(_dir(root, stage))
 
 
 def _siblings(root: str, stage: str, kind: str) -> list[str]:
@@ -224,7 +244,7 @@ def recover_stage(root: str, stage: str) -> str | None:
     crash; returns the action taken (None | 'promoted_tmp' |
     'restored_old').
 
-    Rules (see commit_stage's swap order: write+mark tmp; rename
+    Rules (see _publish's swap order: write+mark tmp; rename
     path->old; rename tmp->path; rmtree old):
       * path marked               -> nothing to do here (orphan tmp/old
         siblings are cleaned by gc_stage / the admin CLI, not on the
@@ -236,24 +256,15 @@ def recover_stage(root: str, stage: str) -> str | None:
       * unmarked tmps are half-written garbage either way -> removed.
     """
     path = _dir(root, stage)
-    if os.path.exists(os.path.join(path, MARKER)):
+    if _is_marked(path):
         return None
-    marked = [
-        d for d in _siblings(root, stage, "tmp")
-        if os.path.exists(os.path.join(d, MARKER))
-    ]
-    action = None
-    source = None
-    if marked:
-        source, action = marked[0], "promoted_tmp"
+    tmps = [d for d in _siblings(root, stage, "tmp") if _is_marked(d)]
+    olds = [d for d in _siblings(root, stage, "old") if _is_marked(d)]
+    if tmps:
+        source, action = tmps[0], "promoted_tmp"
+    elif olds:
+        source, action = olds[0], "restored_old"
     else:
-        olds = [
-            d for d in _siblings(root, stage, "old")
-            if os.path.exists(os.path.join(d, MARKER))
-        ]
-        if olds:
-            source, action = olds[0], "restored_old"
-    if source is None:
         return None
     if os.path.exists(path):  # unmarked (half-written) stage dir
         shutil.rmtree(path)
@@ -271,7 +282,7 @@ def gc_stage(
     pass ``kinds=("old",)`` when an out-of-process writer may be live —
     an in-progress (not-yet-marked) tmp is indistinguishable from a
     crashed one, while `.old-*` dirs are only ever swap leftovers."""
-    if not os.path.exists(os.path.join(_dir(root, stage), MARKER)):
+    if not _is_marked(_dir(root, stage)):
         return []
     removed = []
     for kind in kinds:
@@ -296,65 +307,81 @@ def gc_all(root: str, kinds: tuple[str, ...] = ("tmp", "old")) -> list[str]:
 
 
 def stages(root: str) -> list[str]:
-    """Stage names under ``root`` (directories that are not tmp/old
-    swap leftovers), sorted."""
+    """Stage names under ``root``, sorted: every stage directory, plus
+    the names known only from `.tmp-*`/`.old-*` swap leftovers (a stage
+    whose path vanished mid-swap, which recover_stage can restore)."""
     try:
         names = os.listdir(root)
     except FileNotFoundError:
         return []
-    out = []
-    for n in sorted(names):
-        if ".tmp-" in n or ".old-" in n:
-            continue
-        if os.path.isdir(os.path.join(root, n)):
-            out.append(n)
-    return out
+    return sorted({
+        n.split(".tmp-", 1)[0].split(".old-", 1)[0]
+        for n in names
+        if os.path.isdir(os.path.join(root, n))
+    })
+
+
+def _publish(
+    df: DataFrame, root: str, stage: str, run_id: str, info: dict,
+    kind: str | None = None, **extra,
+) -> DataFrame:
+    """The one snapshot write behind commit, upsert and compact: write
+    ``df`` into ``<stage>.tmp-<run_id>`` (bucket-hashed + bucket-sorted
+    when ``info`` carries a bucket spec), mark it with ``info`` — plus a
+    ``kind`` history entry carrying ``extra`` and the snapshot's file
+    count — swap it into place, and return the re-read snapshot (so
+    downstream stages consume the materialized snapshot, not the
+    lineage — the checkpoint/resume boundary).
+
+    Crash discipline: the snapshot is fully written AND marked in the
+    temp dir first, any previous snapshot is renamed aside (not
+    deleted), the temp dir renamed into place, and the old snapshot
+    deleted last — a marked snapshot (tmp, old, or path) survives on
+    DISK at every instant, and the brief window where the stage PATH
+    itself does not exist is healed by recover_stage() on the next
+    is_committed/read_stage (promote marked tmp, else restore old)."""
+    path = _dir(root, stage)
+    tmp = f"{path}.tmp-{run_id}"
+    if info.get("bucket"):
+        _write_bucketed(df, tmp, root, stage, run_id, info["bucket"])
+    else:
+        _tune_codec(df)
+        df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(tmp)
+    if kind:
+        _record(info, kind, run_id, **extra, files_after=len(_part_files(tmp)))
+    _write_marker(tmp, info)
+    _swap_into_place(path, tmp, run_id)
+    spark = df.sparkSession
+    # drop stale file listings cached for the swapped path
+    spark.catalog.refreshByPath(path)
+    if info.get("bucket"):
+        # re-register from the NEW marker, never read_stage's cached
+        # catalog table: an upsert may have widened the DDL
+        return register_stage_table(spark, root, stage)
+    return spark.read.parquet(path)
 
 
 def commit_stage(
     df: DataFrame, root: str, stage: str, run_id: str,
     bucket_by: list[str] | None = None, n_buckets: int = 16,
 ) -> DataFrame:
-    """Write + mark committed; returns the re-read DataFrame (so
-    downstream stages consume the materialized snapshot, not the
-    lineage — the checkpoint/resume boundary).
-
-    Same crash discipline as ``upsert_stage``: the snapshot is written
-    and marked in a temp dir, any previous snapshot is renamed aside,
-    the temp dir renamed into place, and the old snapshot deleted last
-    — a marked snapshot (tmp, old, or path) survives on DISK at every
-    instant, and the brief window where the stage PATH itself does not
-    exist is healed by recover_stage() on the next
-    is_committed/read_stage (promote marked tmp, else restore old).
+    """Write + mark committed through _publish; returns the re-read
+    snapshot.
 
     ``bucket_by`` commits the snapshot BUCKETED (hash-clustered + bucket
     -sorted) on those keys: the shuffle is paid once at commit and every
     downstream equi-join / aggregation on a superset of the keys over
     the committed table is exchange-free (tests/test_bucketing.py pins
-    the plans).  The bucket spec
-    rides in the marker so a fresh session re-registers the catalog
-    table from disk.  16 buckets fits the sandbox; a 100 TB stage would
-    use O(cluster cores) buckets — Iceberg's bucket transform in
-    production."""
-    path = _dir(root, stage)
-    tmp = f"{path}.tmp-{run_id}"
+    the plans).  The bucket spec rides in the marker so a fresh session
+    re-registers the catalog table from disk.  16 buckets fits the
+    sandbox; a 100 TB stage would use O(cluster cores) buckets —
+    Iceberg's bucket transform in production."""
     info: dict = {"run_id": run_id, "committed_at": time.time()}
     if bucket_by:
         info["bucket"] = {
             "keys": list(bucket_by), "n": n_buckets, "ddl": _schema_ddl(df),
         }
-        _write_bucketed(df, tmp, root, stage, run_id, info["bucket"])
-    else:
-        _tune_codec(df)
-        df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(tmp)
-    with open(os.path.join(tmp, MARKER), "w", encoding="utf-8") as fh:
-        json.dump(info, fh)
-    _swap_into_place(path, tmp, run_id)
-    spark = df.sparkSession
-    spark.catalog.refreshByPath(path)
-    if bucket_by:
-        return register_stage_table(spark, root, stage)
-    return spark.read.parquet(path)
+    return _publish(df, root, stage, run_id, info)
 
 
 def append_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame:
@@ -362,21 +389,16 @@ def append_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame
     in production); marker records the append history.  Refuses on a
     bucketed stage: appended plain files would break the clustering the
     catalog metadata promises (use upsert_stage, which re-clusters)."""
-    path = _dir(root, stage)
-    info0 = marker_info(root, stage)
-    if info0 and info0.get("bucket"):
+    info = marker_info(root, stage) or {}
+    if info.get("bucket"):
         raise ValueError(
             f"append_stage: stage '{stage}' is bucketed; append would "
             "violate its clustering — use upsert_stage"
         )
     _tune_codec(df)
+    path = _dir(root, stage)
     df.write.mode("append").option("compression", PARQUET_CODEC).parquet(path)
-    info = marker_info(root, stage) or {}
-    appends = info.get("appends", [])
-    appends.append({"run_id": run_id, "committed_at": time.time()})
-    info.update({"appends": appends})
-    with open(os.path.join(path, MARKER), "w", encoding="utf-8") as fh:
-        json.dump(info, fh)
+    _write_marker(path, _record(info, "appends", run_id))
     return df.sparkSession.read.parquet(path)
 
 
@@ -392,14 +414,8 @@ def upsert_stage(
     ``ON DUPLICATE KEY UPDATE``; Iceberg MERGE in production): committed
     rows whose key appears in ``df`` are replaced, everything else kept.
 
-    anti-join(committed, scope keys) ∪ df -> write to a temp dir ->
-    swap, so a reader never sees a half-written snapshot and the input
-    snapshot is never overwritten while being read.  The swap keeps a
-    committed snapshot on disk at every instant: the new snapshot is
-    fully written AND marked inside the temp dir first, the old dir is
-    renamed aside (not deleted), the temp dir renamed into place, and
-    only then is the old snapshot dropped — a crash at any point leaves
-    either the old or the new marked snapshot recoverable.
+    anti-join(committed, scope keys) ∪ df, published like a commit, so
+    the input snapshot is never overwritten while being read.
 
     ``delete_scope`` (optional) widens the set of committed rows the
     merge REPLACES beyond df's own keys: committed rows whose key
@@ -408,16 +424,13 @@ def upsert_stage(
     scoped).  The host-scoped incremental uses this so a url whose
     recompute now yields zero rows (e.g. its text stripped to empty)
     does not leave stale rows behind."""
-    path = _dir(root, stage)
     if not is_committed(root, stage):
         return commit_stage(df, root, stage, run_id)
-    spark = df.sparkSession
-    committed = spark.read.parquet(path)
+    committed = df.sparkSession.read.parquet(_dir(root, stage))
     scope = delete_scope if delete_scope is not None else df.select(*keys).distinct()
     merged = committed.join(scope.select(*keys).distinct(), keys, "left_anti").unionByName(
         df, allowMissingColumns=True
     )
-    tmp = f"{path}.tmp-{run_id}"
     info = marker_info(root, stage) or {}
     if info.get("bucket"):
         # a bucketed stage stays bucketed across merges — the rewrite
@@ -427,21 +440,7 @@ def upsert_stage(
         # a stale DDL would make register_stage_table silently drop the
         # new columns on every subsequent read.
         info["bucket"] = dict(info["bucket"], ddl=_schema_ddl(merged))
-        _write_bucketed(merged, tmp, root, stage, run_id, info["bucket"])
-    else:
-        _tune_codec(merged)
-        merged.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(tmp)
-    upserts = info.get("upserts", [])
-    upserts.append({"run_id": run_id, "committed_at": time.time()})
-    info.update({"upserts": upserts})
-    with open(os.path.join(tmp, MARKER), "w", encoding="utf-8") as fh:
-        json.dump(info, fh)
-    _swap_into_place(path, tmp, run_id)
-    # drop stale file listings cached for the swapped path
-    spark.catalog.refreshByPath(path)
-    if info.get("bucket"):
-        return register_stage_table(spark, root, stage)
-    return spark.read.parquet(path)
+    return _publish(merged, root, stage, run_id, info, "upserts")
 
 
 def _part_files(path: str) -> list[str]:
@@ -480,24 +479,23 @@ def compact_stage(
     binpack to ``target_bytes``-sized files would produce.  Returns a
     summary dict either way (``action``: 'noop' | 'compacted').
 
-    The rewrite reuses the commit discipline end-to-end: write to a
-    ``.tmp-<run_id>`` dir (coalesce — a narrow repartition, no shuffle —
-    for plain stages; a re-clustered bucketed write for bucketed ones),
-    mark it with the EXISTING marker history plus a ``compactions``
-    entry, then ``_swap_into_place`` — so a crash at any instant leaves
-    a marked snapshot on disk, exactly like commit/upsert."""
+    The rewrite is published like a commit (coalesce — a narrow
+    repartition, no shuffle — for plain stages; a re-clustered bucketed
+    write for bucketed ones), keeping the marker history plus a
+    ``compactions`` entry."""
     path = _dir(root, stage)
     if not is_committed(root, stage):
         raise ValueError(f"compact_stage: stage '{stage}' is not committed")
     files = _part_files(path)
     data_bytes = sum(os.path.getsize(f) for f in files)
     target_count = max(min_files, -(-data_bytes // target_bytes))
-    info0 = marker_info(root, stage) or {}
-    if info0.get("bucket"):
+    info = marker_info(root, stage) or {}
+    bucket = info.get("bucket")
+    if bucket:
         # A bucketed rewrite emits ~one file per bucket regardless of
         # bytes; without this floor a small stage with n_buckets >
         # target would "compact" n -> n files on every scheduled run.
-        target_count = max(target_count, info0["bucket"]["n"])
+        target_count = max(target_count, bucket["n"])
     summary = {
         "stage": stage,
         "files_before": len(files),
@@ -506,52 +504,24 @@ def compact_stage(
     }
     if len(files) <= target_count:
         return dict(summary, action="noop")
-    info = info0
-    tmp = f"{path}.tmp-{run_id}"
-    if info.get("bucket"):
-        # Zero-shuffle re-cluster: with the auto-bucketed-scan rule
-        # disabled (bucketed scan forced), the
-        # catalog table scans as one partition per bucket (all of a
-        # bucket's fragments combined), which already satisfies the
-        # repartition's HashPartitioning — the Exchange is elided and
-        # the CTAS emits one file per bucket.  Without the pin, Spark's
-        # auto-bucketed-scan rule sees "no operator needs the
-        # clustering", reverts to size-split file partitions AFTER the
-        # shuffle was already elided, and the write fans out to
-        # (tasks x buckets) files — re-fragmenting instead of packing.
-        bucket = info["bucket"]
-        conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        prev = spark.conf.get(conf_key, "true")
-        spark.conf.set(conf_key, "false")
-        try:
-            df = read_stage(spark, root, stage).repartition(
-                bucket["n"], *bucket["keys"]
-            )
-            _write_bucketed(df, tmp, root, stage, run_id, bucket)
-        finally:
-            spark.conf.set(conf_key, prev)
-    else:
+    # Zero-shuffle re-cluster: with the auto-bucketed-scan rule disabled
+    # (bucketed scan forced), the catalog table scans as one partition
+    # per bucket (all of a bucket's fragments combined), which already
+    # satisfies the repartition's HashPartitioning — the Exchange is
+    # elided and the CTAS emits one file per bucket.  Without the pin,
+    # Spark's auto-bucketed-scan rule sees "no operator needs the
+    # clustering", reverts to size-split file partitions AFTER the
+    # shuffle was already elided, and the write fans out to (tasks x
+    # buckets) files — re-fragmenting instead of packing.
+    pin = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    prev = spark.conf.get(pin, "true")
+    spark.conf.set(pin, "false" if bucket else prev)
+    try:
         df = read_stage(spark, root, stage)
-        _tune_codec(df)
-        df.coalesce(target_count).write.mode("overwrite").option(
-            "compression", PARQUET_CODEC
-        ).parquet(tmp)
-    compactions = info.get("compactions", [])
-    compactions.append(
-        {
-            "run_id": run_id,
-            "committed_at": time.time(),
-            "files_before": len(files),
-            "files_after": len(_part_files(tmp)),
-        }
-    )
-    info.update({"compactions": compactions})
-    with open(os.path.join(tmp, MARKER), "w", encoding="utf-8") as fh:
-        json.dump(info, fh)
-    _swap_into_place(path, tmp, run_id)
-    spark.catalog.refreshByPath(path)
-    if info.get("bucket"):
-        register_stage_table(spark, root, stage)
+        df = df.repartition(bucket["n"], *bucket["keys"]) if bucket else df.coalesce(target_count)
+        _publish(df, root, stage, run_id, info, "compactions", files_before=len(files))
+    finally:
+        spark.conf.set(pin, prev)
     return dict(
         summary, action="compacted", files_after=len(_part_files(path))
     )
@@ -559,8 +529,7 @@ def compact_stage(
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
     is_committed(root, stage)  # triggers mid-swap crash recovery
-    info = marker_info(root, stage)
-    if info and info.get("bucket"):
+    if (marker_info(root, stage) or {}).get("bucket"):
         name = _table_name(root, stage)
         if spark.catalog.tableExists(name):
             spark.catalog.refreshTable(name)
@@ -570,8 +539,4 @@ def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
 
 
 def marker_info(root: str, stage: str) -> dict | None:
-    p = os.path.join(_dir(root, stage), MARKER)
-    if not os.path.exists(p):
-        return None
-    with open(p, encoding="utf-8") as fh:
-        return json.load(fh)
+    return _read_marker(_dir(root, stage))

@@ -133,9 +133,7 @@ def q_pipeline_chunk_vectors_ann(spark, sf_dir):
     n = _n_docs(sf_dir)
     key = ("vectors", id(spark), n)
     if key not in _CACHE:
-        work = "/root/repo/.work"
-        os.makedirs(work, exist_ok=True)
-        root = tempfile.mkdtemp(prefix="pdfx_vec_", dir=work)
+        root = tempfile.mkdtemp(prefix="pdfx_vec_")
         run_pipeline(spark, corpus_df(spark, n), root, resume=False)
         run_vector_build(spark, root)
         _CACHE[key] = root

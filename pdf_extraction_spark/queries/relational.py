@@ -9,15 +9,11 @@ joins rely on sort-merge + AQE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Window, functions as F
+
+from .common import fits_broadcast, table as _t
 
 DEC = "decimal(18,4)"
-
-from .common import fits_broadcast, table as _table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _table(spark, sf_dir, name)
 
 
 # --- A-class: grouped aggregation (TPC-H Q1 shape; reference A1-A13) -------

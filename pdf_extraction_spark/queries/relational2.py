@@ -4,15 +4,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 
-DEC = "decimal(18,4)"
-
-from .common import table as _table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _table(spark, sf_dir, name)
+from .common import table as _t
+from .relational import DEC
 
 
 def q_concat_agg(spark, sf_dir):

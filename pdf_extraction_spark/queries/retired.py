@@ -20,23 +20,18 @@ text_ops.py, where boilerplate_threshold and ann_lsh_topk build on them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Window, functions as F
 
 from ..operators import similarity
-from .common import table as _table
+from .common import table as _t
 from .relational import (
+    DEC,
     SQL_MINMAX_COMBINED,
     SQL_RUNNING_SUM,
     q_minmax_combined,
     q_running_sum,
 )
 from .text_ops import SQL_NORMALIZED_PREFIXES, _sql_lsh_buckets, q_normalized_prefixes
-
-DEC = "decimal(18,4)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _table(spark, sf_dir, name)
 
 
 # --- fixed-width chunk spans ---------------------------------------------------

@@ -13,18 +13,14 @@ reference's three chunk sources tagged source_type
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..operators import retrieval, similarity
 from ..operators.embed import EMBED_DIM, embed_sql, hash_embedding_col
-from .common import prepare, table as _table
+from .common import prepare, table as _t
 from .text_ops import QUERY_TERMS
 
 _TOKS = "list_filter(string_split(chunk_text, ' '), x -> x <> '')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _table(spark, sf_dir, name)
 
 
 # --- synthetic chunk table (Spark + SQL twins) -------------------------------

@@ -9,18 +9,14 @@ formula.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from ..operators import dedup, quality, retrieval, similarity
 from ..operators.quality import ALL_STOPWORDS, STOPWORDS
 
 QUERY_TERMS = ["spark", "join", "table"]
 
-from .common import table as _table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _table(spark, sf_dir, name)
+from .common import table as _t
 
 
 _TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"

@@ -57,6 +57,8 @@ def test_layout_engine_matches_oracle_per_page(corpus_rows):
             assert o_cells == l_cells
             assert [t["title"] for t in op["tables"]] == [t["title"] for t in lp["tables"]]
     assert checked > 30  # corpus must exercise the SPDF path
+    # the <i4 views in layout.py are byte-order-exact only over explicit LE glyphs
+    assert layout._expand_glyphs([(0.0, 0.0, 10.0, "ab")])[0].dtype.str == "<U1"
 
 
 def test_pipeline_text_byte_identical(pipeline_out, oracle_out):

@@ -12,6 +12,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from pdf_extraction_spark.plans import stage_admin, stage_store
 
 
@@ -159,13 +161,38 @@ def test_writer_tolerates_reader_promoted_tmp(spark, work_dir):
     root2 = f"{work_dir}/race2"
     os.makedirs(root2)
     _mk_stage(spark, root2, "s", [(1, "other")], run_id="someone_else")
-    import pytest
     with pytest.raises(FileNotFoundError):
         stage_store._swap_into_place(
             os.path.join(root2, "s"), os.path.join(root2, "s.tmp-mine"), "mine"
         )
     # and the foreign snapshot must survive the failed swap intact
     assert stage_store._marked_with(os.path.join(root2, "s"), "someone_else")
+
+
+def test_append_marker_write_is_atomic(spark, work_dir, monkeypatch):
+    """A crash while append_stage rewrites the marker in place must not
+    tear the marker readers see: the previous marker survives, and the
+    stage stays committed and readable (its appended files included —
+    append_stage adds data before it records the append)."""
+    root = f"{work_dir}/torn"
+    os.makedirs(root)
+    base = spark.createDataFrame([(1, "a")], "k long, v string")
+    stage_store.commit_stage(base, root, "s", "r1")
+
+    def torn_dump(obj, fh):
+        fh.write(json.dumps(obj)[:5])
+        raise OSError("disk full")
+
+    inc = spark.createDataFrame([(2, "b")], "k long, v string")
+    with monkeypatch.context() as m:
+        m.setattr(stage_store.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            stage_store.append_stage(inc, root, "s", "a1")
+
+    assert stage_store.is_committed(root, "s")
+    assert stage_store.marker_info(root, "s")["run_id"] == "r1"
+    got = stage_store.read_stage(spark, root, "s").collect()
+    assert sorted(r.k for r in got) == [1, 2]
 
 
 def test_bucketed_retry_after_crash_before_marker(spark, work_dir):

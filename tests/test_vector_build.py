@@ -2,6 +2,8 @@
 build_vector_db job): typed chunks with source_type, hash embeddings +
 LSH bucket, retrieval over the pipeline chunk table."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,3 +91,19 @@ def test_ann_over_pipeline_vectors(built, spark):
     got = cosine_topk(cv, probe_id=probe, k=5, id_col="vid").collect()
     assert len(got) == 5
     assert all(-1.0 - 1e-9 <= r.cosine <= 1.0 + 1e-9 for r in got)
+
+
+def test_pipeline_vector_query_store_under_tempdir(spark, tmp_path, monkeypatch):
+    """q_pipeline_chunk_vectors_ann builds its stage store in the
+    platform temp dir (tempfile), so the query runs the same from any
+    checkout on any host."""
+    import tempfile
+
+    from pdf_extraction_spark.queries import pipeline_ops
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(pipeline_ops, "_CACHE", {})
+    rows = pipeline_ops.q_pipeline_chunk_vectors_ann(spark, "sf0.001").collect()
+    assert len(rows) == 10
+    (root,) = [v for k, v in pipeline_ops._CACHE.items() if k[0] == "vectors"]
+    assert root.startswith(str(tmp_path) + os.sep)

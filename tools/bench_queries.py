@@ -19,14 +19,9 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "pricing_summary", "shipping_priority", "sessionize",
-    "bm25_documents", "hybrid_retrieval", "dedup_exact",
-    "minhash_signatures", "lsh_pairs", "simhash",
-    "cosine_topk", "ann_lsh_topk", "quality_score",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def formatted_plan(df) -> str:

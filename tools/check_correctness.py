@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 from decimal import Decimal
 
@@ -84,7 +85,7 @@ def main() -> int:
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
