@@ -6,11 +6,22 @@ layout-UDF call); these queries exercise the *global* form — a bbox
 theta-join across tables — over deterministic geometry synthesized
 from the TPC-H-ish keys, so the driver's oracle gate covers the
 operator itself.
+
+Both theta-joins run as equi-joins on a grid cell (PAPERS.md, "Binary
+Theta-Joins using MapReduce"): one side gets the single cell of its
+reference coordinate, the other is copied into every cell its match
+window can reach, the two equi-join on the cell, and the exact
+predicate post-filters the candidates.  A pair meets in at most one
+cell, so no pair is emitted twice; each ``*_candidates`` docstring
+says why its cell ranges cover the predicate under floating point.
+The join checks the pairs in nearby cells instead of all |left| x
+|right| pairs, so its cost grows with the geometry's density, not
+with the product of the two sides (BENCH/SPATIAL_FORMS.md).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .common import table as _table
 
@@ -20,6 +31,19 @@ OVERLAP_THRESH = 0.5
 MAX_CHARS = 60
 OVERLAP_WEIGHT = 10.0
 TOLERANCE = 2.0
+# containment grid cell edge.  On the perfbench sf0.03 tables 64 and 32
+# cost the same CPU (1.30 vs 1.41 s, medians of 9, within the noise);
+# 64 copies the rects into 2.6x fewer rows (20,626 vs 53,340) for 1.5x
+# more candidate pairs (680k vs 451k): BENCH/SPATIAL_FORMS.md.
+CONTAINMENT_CELL = 64.0
+RECT = ["t_left", "t_right", "t_top", "t_bottom"]
+
+
+def _cells(lo: Column, hi: Column, size: float) -> Column:
+    """One row per grid cell ``floor(x / size)`` that [lo, hi] reaches
+    (for lo > hi the sequence counts down: extra cells, never missing
+    ones, and the exact predicate rejects their pairs)."""
+    return F.explode(F.sequence(F.floor(lo / size), F.floor(hi / size)))
 
 
 def _tables_geom(spark, sf_dir):
@@ -53,25 +77,59 @@ def _blocks_geom(spark, sf_dir):
     )
 
 
+def title_candidates(rects: DataFrame, blocks: DataFrame) -> DataFrame:
+    """(rect, block) pairs whose y cells meet: a superset of the pairs
+    with 0 <= b_bottom - t_top <= V_THRESH.  A rect sits in the one
+    V_THRESH-high cell of its top; a block is copied into the cells
+    of [b_bottom - 2 * V_THRESH, b_bottom].  The upper end is exact:
+    the rounded gap is >= 0 iff b_bottom >= t_top, and floor(x / V) is
+    monotone.  The lower end is one cell wider than the gap window,
+    because the rounded gap fl(b_bottom - t_top) <= V_THRESH also
+    admits a t_top just below b_bottom - V_THRESH: b_bottom = 120,
+    t_top = -1e-15 has gap exactly 120.0 but t_top in cell -1."""
+    t = rects.withColumn("_cell", F.floor(F.col("t_top") / V_THRESH))
+    b = blocks.withColumn(
+        "_cell",
+        _cells(F.col("b_bottom") - 2 * V_THRESH, F.col("b_bottom"), V_THRESH),
+    )
+    return t.join(b, "_cell").drop("_cell")
+
+
+def title_pairs(rects: DataFrame, blocks: DataFrame) -> DataFrame:
+    """Every (rect, block) pair the J5 predicate admits, scored:
+    horizontal overlap >= 0.5 of the narrower side, 0 <= vertical gap
+    <= 120, score = gap - 10*overlap."""
+    ov_left = F.greatest("b_left", "t_left")
+    ov_right = F.least("b_right", "t_right")
+    overlap = (ov_right - ov_left) / F.least(
+        F.greatest(F.col("b_right") - F.col("b_left"), F.lit(1e-3)),
+        F.greatest(F.col("t_right") - F.col("t_left"), F.lit(1e-3)),
+    )
+    gap = F.col("b_bottom") - F.col("t_top")
+    return (
+        title_candidates(rects, blocks)
+        .filter((ov_right > ov_left) & (gap >= 0) & (gap <= V_THRESH))
+        .withColumn("overlap", F.round(overlap, 9))
+        .filter(F.col("overlap") >= OVERLAP_THRESH)
+        .withColumn("score", F.round(gap - OVERLAP_WEIGHT * F.col("overlap"), 6))
+    )
+
+
 def q_spatial_title_join(spark, sf_dir):
     """J5 nearest-above title attach (structured_extract.py:180-214):
     for each table bbox pick the block with horizontal overlap >= 0.5,
     0 <= vertical gap <= 120, len(text) <= 60, minimizing
     gap - 10*overlap; deterministic tiebreak on block_id.
 
-    Round-6 shape (guide §2.3 aggregate-before-join / §8 decide with
-    small rows): the theta-join's score depends ONLY on the bbox
-    geometry, and the winner among same-geometry blocks is always the
-    min block_id (equal scores, id tiebreak) — so blocks collapse to
-    one candidate per (geometry, passes-length-filter) class and
-    tables to one row per distinct rect BEFORE the quadratic match;
-    the per-rect winner re-attaches to the full table list by rect
-    equality (exact: both sides compute identical doubles from the
-    same integer expressions).  Results identical by construction —
-    the reduction only removes rows that could never win.  The
-    round-5 form was a raw 200k x 150k BroadcastNestedLoopJoin at
-    sf1.0 (~3e10 pairs, unmeasurable); the class form evaluates
-    |distinct rects| x |distinct block geoms| pairs."""
+    The score depends only on the bbox geometry, and among
+    same-geometry blocks the winner is always the min block_id (equal
+    scores, id tiebreak), so blocks collapse to one candidate per
+    geometry class and tables to one row per distinct rect before the
+    cell join (guide §2.3, aggregate before join).  The per-rect
+    winner is the min of (score, block_id, text), cheaper than a
+    row_number window (BENCH/SPATIAL_FORMS.md), and re-attaches to
+    the full table list by rect equality (exact: both sides compute
+    identical doubles from the same integer expressions)."""
     t = _tables_geom(spark, sf_dir)
     b = _blocks_geom(spark, sf_dir)
     b_classes = (
@@ -82,38 +140,20 @@ def q_spatial_title_join(spark, sf_dir):
             F.min_by("text", "block_id").alias("text"),
         )
     )
-    t_classes = t.select("t_left", "t_right", "t_top", "t_bottom").distinct()
-    ov_left = F.greatest("b_left", "t_left")
-    ov_right = F.least("b_right", "t_right")
-    overlap = (ov_right - ov_left) / F.least(
-        F.greatest(F.col("b_right") - F.col("b_left"), F.lit(1e-3)),
-        F.greatest(F.col("t_right") - F.col("t_left"), F.lit(1e-3)),
-    )
-    gap = F.col("b_bottom") - F.col("t_top")
-    j = (
-        t_classes.join(
-            b_classes,
-            (ov_right > ov_left) & (gap >= 0) & (gap <= V_THRESH),
-        )
-        .withColumn("overlap", F.round(overlap, 9))
-        .filter(F.col("overlap") >= OVERLAP_THRESH)
-        .withColumn("score", F.round(gap - OVERLAP_WEIGHT * F.col("overlap"), 6))
-    )
-    w = Window.partitionBy("t_left", "t_right", "t_top", "t_bottom").orderBy(
-        F.asc("score"), F.asc("block_id")
-    )
+    t_classes = t.select(*RECT).distinct()
     best_per_rect = (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("t_left", "t_right", "t_top", "t_bottom", "text", "score")
+        title_pairs(t_classes, b_classes)
+        .groupBy(*RECT)
+        .agg(F.min(F.struct("score", "block_id", "text")).alias("best"))
+        .select(*RECT, "best.text", "best.score")
     )
     # no broadcast hint: at this sf AQE converts the re-attach join to
     # broadcast from the actual (tiny) per-rect winner set; with unique
     # geometry at scale it degrades to a plain equi-join, never a
     # forced broadcast
-    return t.join(
-        best_per_rect, ["t_left", "t_right", "t_top", "t_bottom"]
-    ).select("table_id", F.col("text").alias("title"), "score")
+    return t.join(best_per_rect, RECT).select(
+        "table_id", F.col("text").alias("title"), "score"
+    )
 
 
 SQL_SPATIAL_TITLE_JOIN = """
@@ -151,19 +191,56 @@ WHERE rn = 1
 """
 
 
+def _widened() -> tuple[Column, Column, Column, Column]:
+    return (
+        F.col("t_left") - TOLERANCE,
+        F.col("t_right") + TOLERANCE,
+        F.col("t_bottom") - TOLERANCE,
+        F.col("t_top") + TOLERANCE,
+    )
+
+
+def containment_candidates(rects: DataFrame, points: DataFrame) -> DataFrame:
+    """(rect, point) pairs whose 2-D cells meet: a superset of the
+    pairs with the point inside the rect widened by TOLERANCE.  A point
+    sits in the one CONTAINMENT_CELL-square cell of (cx, cy); a rect is
+    copied into every cell of its widened extent.  The extent is the
+    predicate's own ``t_left - TOLERANCE`` ... expressions, so by the
+    monotonicity of floor(x / CELL) every point the predicate admits
+    falls in a cell of the range: no pair is lost to rounding."""
+    lo_x, hi_x, lo_y, hi_y = _widened()
+    r = rects.withColumn("_gx", _cells(lo_x, hi_x, CONTAINMENT_CELL)).withColumn(
+        "_gy", _cells(lo_y, hi_y, CONTAINMENT_CELL)
+    )
+    p = points.withColumn("_gx", F.floor(F.col("cx") / CONTAINMENT_CELL)).withColumn(
+        "_gy", F.floor(F.col("cy") / CONTAINMENT_CELL)
+    )
+    return r.join(p, ["_gx", "_gy"]).drop("_gx", "_gy")
+
+
+def containment_pairs(rects: DataFrame, points: DataFrame) -> DataFrame:
+    """Every (rect, point) pair with the point inside the rect widened
+    by TOLERANCE on each side."""
+    lo_x, hi_x, lo_y, hi_y = _widened()
+    return containment_candidates(rects, points).filter(
+        F.col("cx").between(lo_x, hi_x) & F.col("cy").between(lo_y, hi_y)
+    )
+
+
 def q_spatial_containment(spark, sf_dir):
     """J6 point-in-rect containment join (table_ocr.py:161-203): word
     centers (from customer geometry) joined into table regions with
-    tolerance 2.0; counts words per region."""
+    tolerance 2.0; counts words per region.
+
+    Same class reduction as the title join (guide §2.3): containment
+    depends only on the word's center point and the table's rect, so
+    words collapse to distinct points (with count + min id) and tables
+    to distinct rects before the cell join; per-rect results re-attach
+    to the full table list.  n_words = sum of point multiplicities,
+    first_block = min of per-point min ids — exactly the original
+    aggregate."""
     t = _tables_geom(spark, sf_dir)
     b = _blocks_geom(spark, sf_dir)
-    # Same class reduction as the title join (guide §2.3): containment
-    # depends only on the word's CENTER POINT and the table's RECT, so
-    # collapse words to distinct points (with count + min id) and
-    # tables to distinct rects before the quadratic theta-match, then
-    # re-attach per-rect results to the full table list.  n_words =
-    # sum of point multiplicities, first_block = min of per-point min
-    # ids — exactly the original aggregate.
     cx = (F.col("b_left") + F.col("b_right")) / 2.0
     cy = (F.col("b_bottom") + F.col("b_top")) / 2.0
     points = (
@@ -171,21 +248,12 @@ def q_spatial_containment(spark, sf_dir):
         .groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).alias("_n"), F.min("block_id").alias("_min_id"))
     )
-    rects = t.select("t_left", "t_right", "t_top", "t_bottom").distinct()
-    j = rects.join(
-        points,
-        (F.col("cx") >= F.col("t_left") - TOLERANCE)
-        & (F.col("cx") <= F.col("t_right") + TOLERANCE)
-        & (F.col("cy") >= F.col("t_bottom") - TOLERANCE)
-        & (F.col("cy") <= F.col("t_top") + TOLERANCE),
-    )
-    per_rect = j.groupBy("t_left", "t_right", "t_top", "t_bottom").agg(
+    rects = t.select(*RECT).distinct()
+    per_rect = containment_pairs(rects, points).groupBy(*RECT).agg(
         F.sum("_n").alias("n_words"),
         F.min("_min_id").alias("first_block"),
     )
-    return t.join(
-        per_rect, ["t_left", "t_right", "t_top", "t_bottom"]
-    ).select("table_id", "n_words", "first_block")
+    return t.join(per_rect, RECT).select("table_id", "n_words", "first_block")
 
 
 SQL_SPATIAL_CONTAINMENT = """
