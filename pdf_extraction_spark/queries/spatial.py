@@ -7,16 +7,16 @@ theta-join across tables — over deterministic geometry synthesized
 from the TPC-H-ish keys, so the driver's oracle gate covers the
 operator itself.
 
-Both theta-joins run as equi-joins on a grid cell (PAPERS.md, "Binary
-Theta-Joins using MapReduce"): one side gets the single cell of its
-reference coordinate, the other is copied into every cell its match
-window can reach, the two equi-join on the cell, and the exact
-predicate post-filters the candidates.  A pair meets in at most one
-cell, so no pair is emitted twice; each ``*_candidates`` docstring
-says why its cell ranges cover the predicate under floating point.
-The join checks the pairs in nearby cells instead of all |left| x
-|right| pairs, so its cost grows with the geometry's density, not
-with the product of the two sides (BENCH/SPATIAL_FORMS.md).
+The title join runs as an equi-join on a y cell (PAPERS.md, "Binary
+Theta-Joins using MapReduce"): each rect gets the single cell of its
+top, each block is copied into every cell its gap window can reach,
+the two equi-join on the cell, and the exact predicate post-filters
+the candidates.  A pair meets in at most one cell, so no pair is
+emitted twice; ``title_candidates`` says why its cell ranges cover the
+predicate under floating point.  The containment join stays a
+class x class nested loop: its geometry has at most 4,000 rect
+classes and 7,425 point classes at any scale factor, and a 2-D cell
+join measured within the noise of it (BENCH/SPATIAL_FORMS.md).
 """
 
 from __future__ import annotations
@@ -31,18 +31,11 @@ OVERLAP_THRESH = 0.5
 MAX_CHARS = 60
 OVERLAP_WEIGHT = 10.0
 TOLERANCE = 2.0
-# containment grid cell edge.  On the perfbench sf0.03 tables 64 and 32
-# cost the same CPU (1.30 vs 1.41 s, medians of 9, within the noise);
-# 64 copies the rects into 2.6x fewer rows (20,626 vs 53,340) for 1.5x
-# more candidate pairs (680k vs 451k): BENCH/SPATIAL_FORMS.md.
-CONTAINMENT_CELL = 64.0
 RECT = ["t_left", "t_right", "t_top", "t_bottom"]
 
 
 def _cells(lo: Column, hi: Column, size: float) -> Column:
-    """One row per grid cell ``floor(x / size)`` that [lo, hi] reaches
-    (for lo > hi the sequence counts down: extra cells, never missing
-    ones, and the exact predicate rejects their pairs)."""
+    """One row per grid cell ``floor(x / size)`` that [lo, hi] reaches."""
     return F.explode(F.sequence(F.floor(lo / size), F.floor(hi / size)))
 
 
@@ -191,56 +184,19 @@ WHERE rn = 1
 """
 
 
-def _widened() -> tuple[Column, Column, Column, Column]:
-    return (
-        F.col("t_left") - TOLERANCE,
-        F.col("t_right") + TOLERANCE,
-        F.col("t_bottom") - TOLERANCE,
-        F.col("t_top") + TOLERANCE,
-    )
-
-
-def containment_candidates(rects: DataFrame, points: DataFrame) -> DataFrame:
-    """(rect, point) pairs whose 2-D cells meet: a superset of the
-    pairs with the point inside the rect widened by TOLERANCE.  A point
-    sits in the one CONTAINMENT_CELL-square cell of (cx, cy); a rect is
-    copied into every cell of its widened extent.  The extent is the
-    predicate's own ``t_left - TOLERANCE`` ... expressions, so by the
-    monotonicity of floor(x / CELL) every point the predicate admits
-    falls in a cell of the range: no pair is lost to rounding."""
-    lo_x, hi_x, lo_y, hi_y = _widened()
-    r = rects.withColumn("_gx", _cells(lo_x, hi_x, CONTAINMENT_CELL)).withColumn(
-        "_gy", _cells(lo_y, hi_y, CONTAINMENT_CELL)
-    )
-    p = points.withColumn("_gx", F.floor(F.col("cx") / CONTAINMENT_CELL)).withColumn(
-        "_gy", F.floor(F.col("cy") / CONTAINMENT_CELL)
-    )
-    return r.join(p, ["_gx", "_gy"]).drop("_gx", "_gy")
-
-
-def containment_pairs(rects: DataFrame, points: DataFrame) -> DataFrame:
-    """Every (rect, point) pair with the point inside the rect widened
-    by TOLERANCE on each side."""
-    lo_x, hi_x, lo_y, hi_y = _widened()
-    return containment_candidates(rects, points).filter(
-        F.col("cx").between(lo_x, hi_x) & F.col("cy").between(lo_y, hi_y)
-    )
-
-
 def q_spatial_containment(spark, sf_dir):
     """J6 point-in-rect containment join (table_ocr.py:161-203): word
     centers (from customer geometry) joined into table regions with
-    tolerance 2.0; counts words per region.
-
-    Same class reduction as the title join (guide §2.3): containment
-    depends only on the word's center point and the table's rect, so
-    words collapse to distinct points (with count + min id) and tables
-    to distinct rects before the cell join; per-rect results re-attach
-    to the full table list.  n_words = sum of point multiplicities,
-    first_block = min of per-point min ids — exactly the original
-    aggregate."""
+    tolerance 2.0; counts words per region."""
     t = _tables_geom(spark, sf_dir)
     b = _blocks_geom(spark, sf_dir)
+    # Same class reduction as the title join (guide §2.3): containment
+    # depends only on the word's CENTER POINT and the table's RECT, so
+    # collapse words to distinct points (with count + min id) and
+    # tables to distinct rects before the class x class nested loop,
+    # then re-attach per-rect results to the full table list.  n_words
+    # = sum of point multiplicities, first_block = min of per-point min
+    # ids — exactly the original aggregate.
     cx = (F.col("b_left") + F.col("b_right")) / 2.0
     cy = (F.col("b_bottom") + F.col("b_top")) / 2.0
     points = (
@@ -249,7 +205,14 @@ def q_spatial_containment(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("_n"), F.min("block_id").alias("_min_id"))
     )
     rects = t.select(*RECT).distinct()
-    per_rect = containment_pairs(rects, points).groupBy(*RECT).agg(
+    j = rects.join(
+        points,
+        (F.col("cx") >= F.col("t_left") - TOLERANCE)
+        & (F.col("cx") <= F.col("t_right") + TOLERANCE)
+        & (F.col("cy") >= F.col("t_bottom") - TOLERANCE)
+        & (F.col("cy") <= F.col("t_top") + TOLERANCE),
+    )
+    per_rect = j.groupBy(*RECT).agg(
         F.sum("_n").alias("n_words"),
         F.min("_min_id").alias("first_block"),
     )
