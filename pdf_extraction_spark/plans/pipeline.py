@@ -61,21 +61,17 @@ def _metrics_df(pages: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-# The stages downstream of pages, in order: (stage, build, commit
-# bucket spec).  ``build(prev, ocr_pages)`` maps the previous stage's
-# frame to this one's; page_text OCRs ``ocr_pages`` (every page on a
-# full run, only new/changed ones on a host-scoped upsert).  Builds are
-# lambdas so operators resolve through this module's globals at call
-# time, where the resume tests and the benchmark's tracer patch them.
-# Only chunks is bucketed by url (its consumers are url-keyed joins and
-# aggregations); bucketing the page-granularity stages lost its A/B
-# (BENCH/STAGE_BUCKETING.md).
+# The stages downstream of pages, in order: (stage, build).
+# ``build(prev, ocr_pages)`` maps the previous stage's frame to this
+# one's; page_text OCRs ``ocr_pages`` (every page on a full run, only
+# new/changed ones on a host-scoped upsert).  Builds are lambdas so
+# operators resolve through this module's globals at call time, where
+# the resume tests and the benchmark's tracer patch them.
 TEXT_STAGES = (
     ("page_text",
-     lambda pages, ocr_pages: merge_ocr(_strip(pages), ocr_stage(ocr_pages)),
-     None),
-    ("doc_text", lambda page_text, _: assemble_documents(page_text), None),
-    ("chunks", lambda doc_text, _: chunk_stage(doc_text), ["url"]),
+     lambda pages, ocr_pages: merge_ocr(_strip(pages), ocr_stage(ocr_pages))),
+    ("doc_text", lambda page_text, _: assemble_documents(page_text)),
+    ("chunks", lambda doc_text, _: chunk_stage(doc_text)),
 )
 
 
@@ -96,13 +92,11 @@ def _commit_text_stages(
     ``resume``, a stage already committed is read back instead."""
     out: dict[str, DataFrame] = {}
     df = pages
-    for stage, build, bucket_by in TEXT_STAGES:
+    for stage, build in TEXT_STAGES:
         if resume and stage_store.is_committed(out_root, stage):
             df = stage_store.read_stage(spark, out_root, stage)
         else:
-            df = stage_store.commit_stage(
-                build(df, pages), out_root, stage, run_id, bucket_by=bucket_by
-            )
+            df = stage_store.commit_stage(build(df, pages), out_root, stage, run_id)
         out[stage] = df
         _fail_if(fail_after, stage)
     return out
@@ -171,15 +165,8 @@ def run_vector_build(
     pages = stage_store.read_stage(spark, out_root, "pages")
     page_text = stage_store.read_stage(spark, out_root, "page_text")
 
-    # Both vector tables commit BUCKETED by url (stage_store bucket
-    # spec in the marker): retrieval's chunk->page aggregations and the
-    # typed_chunks <-> chunk_vectors joins over the committed snapshots
-    # are then exchange-free (tests/test_bucketing.py pins the plans),
-    # and the chunk_vectors write itself re-reads an already-url-
-    # clustered table so even the commit shuffle is paid only once.
     typed = stage_store.commit_stage(
-        typed_chunk_stage(page_text, pages), out_root, "typed_chunks", run_id,
-        bucket_by=["url"],
+        typed_chunk_stage(page_text, pages), out_root, "typed_chunks", run_id
     )
     from ..operators.embed import EMBED_DIM
 
@@ -190,7 +177,6 @@ def run_vector_build(
         out_root,
         "chunk_vectors",
         run_id,
-        bucket_by=["url"],
     )
     return {"typed_chunks": typed, "chunk_vectors": vectors}
 
@@ -297,7 +283,7 @@ def run_incremental(
         .join(todo, "url", "left_anti")
     )
     df = sub_pages
-    for stage, build, _ in TEXT_STAGES:
+    for stage, build in TEXT_STAGES:
         inc = build(df, new_pages)
         if stage == "page_text":
             inc = inc.unionByName(reused_ocr)

@@ -39,7 +39,7 @@ def list_stages(root: str) -> list[str]:
             lines.append(f" - {stage}  [UNCOMMITTED]")
             continue
         extras = [f"run_id={info['run_id']}"] if "run_id" in info else []
-        for kind in ("upserts", "appends"):
+        for kind in ("upserts", "appends", "compactions"):
             if info.get(kind):
                 last = info[kind][-1]
                 extras.append(f"{kind}={len(info[kind])} last_run={last['run_id']}")

@@ -52,52 +52,6 @@ def _dir(root: str, stage: str) -> str:
     return os.path.join(root, stage)
 
 
-def _table_name(root: str, stage: str) -> str:
-    """Deterministic catalog name for a bucketed stage — root-scoped so
-    several stage roots can coexist in one session."""
-    import hashlib
-
-    return f"stage_{stage}_{hashlib.md5(root.encode()).hexdigest()[:8]}"
-
-
-def _schema_ddl(df: DataFrame) -> str:
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-
-def _write_bucketed(
-    df: DataFrame, tmp: str, root: str, stage: str, run_id: str,
-    bucket: dict,
-) -> None:
-    """Write ``df`` bucket-hashed + bucket-sorted into ``tmp`` via a
-    throwaway external table (Spark's DataSource bucketing only writes
-    through saveAsTable; the bucket id lives in the part-file NAMES, so
-    the files stay bucketed across the directory swap)."""
-    import re
-
-    # A crash between CTAS and the marker write leaves a non-empty
-    # unmarked tmp that recovery only GCs when it actually runs; unlike
-    # the unbucketed overwrite-parquet path, saveAsTable refuses a
-    # non-empty location — clear leftovers so a same-run_id retry works.
-    shutil.rmtree(tmp, ignore_errors=True)
-    _tune_codec(df)
-    spark = df.sparkSession
-    keys = bucket["keys"]
-    safe_run = re.sub(r"[^A-Za-z0-9_]", "_", run_id)
-    tmp_table = f"{_table_name(root, stage)}_tmp_{safe_run}"
-    spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
-    (
-        df.write.mode("overwrite")
-        .option("compression", PARQUET_CODEC)
-        .bucketBy(bucket["n"], keys[0], *keys[1:])
-        .sortBy(keys[0], *keys[1:])
-        .option("path", tmp)
-        .saveAsTable(tmp_table)
-    )
-    spark.sql(f"DROP TABLE `{tmp_table}`")  # metadata only; files stay
-
-
 def _read_marker(d: str) -> dict | None:
     p = os.path.join(d, MARKER)
     if not os.path.exists(p):
@@ -128,29 +82,6 @@ def _record(info: dict, kind: str, run_id: str, **extra) -> dict:
         {"run_id": run_id, "committed_at": time.time(), **extra}
     )
     return info
-
-
-def register_stage_table(
-    spark: SparkSession, root: str, stage: str
-) -> DataFrame | None:
-    """(Re-)register the external bucketed catalog table for a stage
-    whose marker carries a bucket spec; returns the table DataFrame, or
-    None for unbucketed stages.  The catalog entry is session-local
-    (in-memory catalog), so a fresh session re-creates it from the
-    marker — the files themselves carry the bucketing."""
-    bucket = (marker_info(root, stage) or {}).get("bucket")
-    if not bucket:
-        return None
-    name = _table_name(root, stage)
-    path = _dir(root, stage)
-    keys = ", ".join(f"`{k}`" for k in bucket["keys"])
-    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-    spark.sql(
-        f"CREATE TABLE `{name}` ({bucket['ddl']}) USING PARQUET "
-        f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
-        f"INTO {bucket['n']} BUCKETS LOCATION '{path}'"
-    )
-    return spark.table(name)
 
 
 def _marked_with(d: str, run_id: str) -> bool:
@@ -326,8 +257,7 @@ def _publish(
     kind: str | None = None, **extra,
 ) -> DataFrame:
     """The one snapshot write behind commit, upsert and compact: write
-    ``df`` into ``<stage>.tmp-<run_id>`` (bucket-hashed + bucket-sorted
-    when ``info`` carries a bucket spec), mark it with ``info`` — plus a
+    ``df`` into ``<stage>.tmp-<run_id>``, mark it with ``info`` — plus a
     ``kind`` history entry carrying ``extra`` and the snapshot's file
     count — swap it into place, and return the re-read snapshot (so
     downstream stages consume the materialized snapshot, not the
@@ -339,14 +269,13 @@ def _publish(
     deleted last — a marked snapshot (tmp, old, or path) survives on
     DISK at every instant, and the brief window where the stage PATH
     itself does not exist is healed by recover_stage() on the next
-    is_committed/read_stage (promote marked tmp, else restore old)."""
+    is_committed/read_stage (promote marked tmp, else restore old).
+    The overwrite also clears a crashed same-run_id tmp, so a retry
+    needs no cleanup."""
     path = _dir(root, stage)
     tmp = f"{path}.tmp-{run_id}"
-    if info.get("bucket"):
-        _write_bucketed(df, tmp, root, stage, run_id, info["bucket"])
-    else:
-        _tune_codec(df)
-        df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(tmp)
+    _tune_codec(df)
+    df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(tmp)
     if kind:
         _record(info, kind, run_id, **extra, files_after=len(_part_files(tmp)))
     _write_marker(tmp, info)
@@ -354,47 +283,20 @@ def _publish(
     spark = df.sparkSession
     # drop stale file listings cached for the swapped path
     spark.catalog.refreshByPath(path)
-    if info.get("bucket"):
-        # re-register from the NEW marker, never read_stage's cached
-        # catalog table: an upsert may have widened the DDL
-        return register_stage_table(spark, root, stage)
     return spark.read.parquet(path)
 
 
-def commit_stage(
-    df: DataFrame, root: str, stage: str, run_id: str,
-    bucket_by: list[str] | None = None, n_buckets: int = 16,
-) -> DataFrame:
+def commit_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame:
     """Write + mark committed through _publish; returns the re-read
-    snapshot.
-
-    ``bucket_by`` commits the snapshot BUCKETED (hash-clustered + bucket
-    -sorted) on those keys: the shuffle is paid once at commit and every
-    downstream equi-join / aggregation on a superset of the keys over
-    the committed table is exchange-free (tests/test_bucketing.py pins
-    the plans).  The bucket spec rides in the marker so a fresh session
-    re-registers the catalog table from disk.  16 buckets fits the
-    sandbox; a 100 TB stage would use O(cluster cores) buckets —
-    Iceberg's bucket transform in production."""
+    snapshot."""
     info: dict = {"run_id": run_id, "committed_at": time.time()}
-    if bucket_by:
-        info["bucket"] = {
-            "keys": list(bucket_by), "n": n_buckets, "ddl": _schema_ddl(df),
-        }
     return _publish(df, root, stage, run_id, info)
 
 
 def append_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame:
     """Append an increment to a committed stage (Iceberg append commit
-    in production); marker records the append history.  Refuses on a
-    bucketed stage: appended plain files would break the clustering the
-    catalog metadata promises (use upsert_stage, which re-clusters)."""
+    in production); marker records the append history."""
     info = marker_info(root, stage) or {}
-    if info.get("bucket"):
-        raise ValueError(
-            f"append_stage: stage '{stage}' is bucketed; append would "
-            "violate its clustering — use upsert_stage"
-        )
     _tune_codec(df)
     path = _dir(root, stage)
     df.write.mode("append").option("compression", PARQUET_CODEC).parquet(path)
@@ -432,14 +334,6 @@ def upsert_stage(
         df, allowMissingColumns=True
     )
     info = marker_info(root, stage) or {}
-    if info.get("bucket"):
-        # a bucketed stage stays bucketed across merges — the rewrite
-        # re-clusters, so the catalog metadata never lies about files.
-        # The DDL is refreshed from the MERGED frame: a schema-evolving
-        # upsert (unionByName allowMissingColumns) widens the files, and
-        # a stale DDL would make register_stage_table silently drop the
-        # new columns on every subsequent read.
-        info["bucket"] = dict(info["bucket"], ddl=_schema_ddl(merged))
     return _publish(merged, root, stage, run_id, info, "upserts")
 
 
@@ -479,9 +373,8 @@ def compact_stage(
     binpack to ``target_bytes``-sized files would produce.  Returns a
     summary dict either way (``action``: 'noop' | 'compacted').
 
-    The rewrite is published like a commit (coalesce — a narrow
-    repartition, no shuffle — for plain stages; a re-clustered bucketed
-    write for bucketed ones), keeping the marker history plus a
+    The rewrite is a coalesce (a narrow repartition, no shuffle)
+    published like a commit, keeping the marker history plus a
     ``compactions`` entry."""
     path = _dir(root, stage)
     if not is_committed(root, stage):
@@ -489,13 +382,6 @@ def compact_stage(
     files = _part_files(path)
     data_bytes = sum(os.path.getsize(f) for f in files)
     target_count = max(min_files, -(-data_bytes // target_bytes))
-    info = marker_info(root, stage) or {}
-    bucket = info.get("bucket")
-    if bucket:
-        # A bucketed rewrite emits ~one file per bucket regardless of
-        # bytes; without this floor a small stage with n_buckets >
-        # target would "compact" n -> n files on every scheduled run.
-        target_count = max(target_count, bucket["n"])
     summary = {
         "stage": stage,
         "files_before": len(files),
@@ -504,24 +390,9 @@ def compact_stage(
     }
     if len(files) <= target_count:
         return dict(summary, action="noop")
-    # Zero-shuffle re-cluster: with the auto-bucketed-scan rule disabled
-    # (bucketed scan forced), the catalog table scans as one partition
-    # per bucket (all of a bucket's fragments combined), which already
-    # satisfies the repartition's HashPartitioning — the Exchange is
-    # elided and the CTAS emits one file per bucket.  Without the pin,
-    # Spark's auto-bucketed-scan rule sees "no operator needs the
-    # clustering", reverts to size-split file partitions AFTER the
-    # shuffle was already elided, and the write fans out to (tasks x
-    # buckets) files — re-fragmenting instead of packing.
-    pin = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(pin, "true")
-    spark.conf.set(pin, "false" if bucket else prev)
-    try:
-        df = read_stage(spark, root, stage)
-        df = df.repartition(bucket["n"], *bucket["keys"]) if bucket else df.coalesce(target_count)
-        _publish(df, root, stage, run_id, info, "compactions", files_before=len(files))
-    finally:
-        spark.conf.set(pin, prev)
+    df = read_stage(spark, root, stage).coalesce(target_count)
+    info = marker_info(root, stage) or {}
+    _publish(df, root, stage, run_id, info, "compactions", files_before=len(files))
     return dict(
         summary, action="compacted", files_after=len(_part_files(path))
     )
@@ -529,12 +400,6 @@ def compact_stage(
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
     is_committed(root, stage)  # triggers mid-swap crash recovery
-    if (marker_info(root, stage) or {}).get("bucket"):
-        name = _table_name(root, stage)
-        if spark.catalog.tableExists(name):
-            spark.catalog.refreshTable(name)
-            return spark.table(name)
-        return register_stage_table(spark, root, stage)
     return spark.read.parquet(_dir(root, stage))
 
 

@@ -55,7 +55,7 @@ def _text_stage(pages: DataFrame, last: str) -> DataFrame:
     """The pipeline's TEXT_STAGES over ``pages`` up to stage ``last``,
     chained in one plan instead of committed."""
     df = pages
-    for stage, build, _ in TEXT_STAGES:
+    for stage, build in TEXT_STAGES:
         df = build(df, pages)
         if stage == last:
             return df

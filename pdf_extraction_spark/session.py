@@ -63,12 +63,6 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # stage tables are bucketed by url (plans/stage_store.py); joins
-        # on (url, page_no, ...) are co-partitioned by the url subset,
-        # which Spark only accepts with this off (default true demands
-        # bucket keys == full join keys).  Semantically safe: same-url
-        # rows are co-located, a superset equi-join never needs more.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # Scan-split sizing (guide §6): the shuffle-free small-document
         # extraction path gets its parallelism from input splits.
         # Round 5 pinned 8 MB splits ("many small waves"), which made an

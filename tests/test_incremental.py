@@ -150,7 +150,7 @@ def test_incremental_downstream_is_host_scoped(spark, work_dir):
 def test_incremental_after_pages_only_commits_text_stages(spark, work_dir):
     """A run killed after pages leaves no text stage to merge into: the
     increment upserts pages, then commits the text stages corpus-wide
-    with the same bucket specs as a full run."""
+    as plain parquet, like a full run."""
     root = f"{work_dir}/fallback"
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, corpus_df(spark, 30), root, resume=False,
@@ -163,9 +163,8 @@ def test_incremental_after_pages_only_commits_text_stages(spark, work_dir):
     got = {r["url"]: r["extracted_text"] for r in out["doc_text"].collect()}
     assert all(got.get(u, "") == v["text"] for u, v in exp.items())
     assert len(got) == sum(1 for v in exp.values() if v["text"])
-    for stage in ("page_text", "doc_text"):
-        assert stage_store.marker_info(root, stage).get("bucket") is None, stage
-    assert stage_store.marker_info(root, "chunks")["bucket"]["keys"] == ["url"]
+    for stage in ("pages", "page_text", "doc_text", "chunks"):
+        assert "bucket" not in stage_store.marker_info(root, stage), stage
 
 
 def test_incremental_legacy_stage_without_content_hash(spark, work_dir):
@@ -323,9 +322,9 @@ def test_spark_submit_pyfiles_e2e(tmp_path):
 
     # second submit, FRESH JVM, --vectors: the committed markers must be
     # honored across processes (resume recomputes zero stages — the
-    # pages marker keeps run 1's run_id) and the vector build (bucketed
-    # typed_chunks/chunk_vectors commits via CTAS) must work on the
-    # vanilla submit session, not just the tuned session.py one
+    # pages marker keeps run 1's run_id) and the vector build's
+    # typed_chunks/chunk_vectors commits must work on the vanilla
+    # submit session, not just the tuned session.py one
     run1_id = json.loads((out_root / "pages" / MARKER).read_text())["run_id"]
     res2 = subprocess.run(
         [
@@ -350,8 +349,7 @@ def test_spark_submit_pyfiles_e2e(tmp_path):
     for stage in ("typed_chunks", "chunk_vectors"):
         marker = out_root / stage / MARKER
         assert marker.exists(), f"vector stage {stage} not committed"
-        info = json.loads(marker.read_text())
-        assert info.get("bucket", {}).get("keys") == ["url"]
+        assert "bucket" not in json.loads(marker.read_text())
     vec_counts = {}
     for line in res2.stdout.splitlines():
         name, _, val = line.partition(": ")

@@ -195,11 +195,9 @@ def test_append_marker_write_is_atomic(spark, work_dir, monkeypatch):
     assert sorted(r.k for r in got) == [1, 2]
 
 
-def test_bucketed_retry_after_crash_before_marker(spark, work_dir):
-    """A crash between the bucketed CTAS and the marker write leaves a
-    non-empty unmarked tmp; a retry with the same run_id must clobber
-    it (saveAsTable refuses non-empty locations by default — round-4
-    advice item 4)."""
+def test_retry_after_crash_before_marker(spark, work_dir):
+    """A crash between the snapshot write and the marker write leaves a
+    non-empty unmarked tmp; a retry with the same run_id overwrites it."""
     root = f"{work_dir}/retry"
     os.makedirs(root)
     leftover = os.path.join(root, "s.tmp-r1")
@@ -207,47 +205,77 @@ def test_bucketed_retry_after_crash_before_marker(spark, work_dir):
     with open(os.path.join(leftover, "part-junk.parquet"), "w") as fh:
         fh.write("half-written garbage")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    out = stage_store.commit_stage(
-        df, root, "s", "r1", bucket_by=["k"], n_buckets=4
-    )
+    out = stage_store.commit_stage(df, root, "s", "r1")
     assert sorted((r.k, r.v) for r in out.collect()) == [(1, "a"), (2, "b")]
-    assert stage_store.marker_info(root, "s")["bucket"]["keys"] == ["k"]
+    assert stage_store.marker_info(root, "s")["run_id"] == "r1"
+    assert not os.path.exists(leftover)
 
 
-def test_bucketed_upsert_schema_evolution_refreshes_ddl(spark, work_dir):
-    """A schema-evolving upsert on a bucketed stage widens the parquet
-    files via unionByName(allowMissingColumns); the marker's DDL must
-    follow, or register_stage_table re-creates the catalog table from
-    the stale column list and silently drops the new columns on every
-    later read (round-4 advice item 1 — medium)."""
+def test_upsert_schema_evolution_widens_stage(spark, work_dir):
+    """A schema-evolving upsert widens the stage via
+    unionByName(allowMissingColumns): the returned frame and every later
+    read see the new column, null for the rows the upsert kept."""
     root = f"{work_dir}/evolve"
     os.makedirs(root)
     base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    stage_store.commit_stage(base, root, "s", "r1", bucket_by=["k"], n_buckets=4)
+    stage_store.commit_stage(base, root, "s", "r1")
 
     widened = spark.createDataFrame([(2, "b2", 9.5)], "k long, v string, w double")
     up = stage_store.upsert_stage(widened, root, "s", "r2", ["k"])
     assert "w" in up.columns
-    ddl = stage_store.marker_info(root, "s")["bucket"]["ddl"]
-    assert "`w` double" in ddl
-
-    # a FRESH registration (new session would do the same) sees `w`
-    spark.sql(f"DROP TABLE IF EXISTS `{stage_store._table_name(root, 's')}`")
     again = stage_store.read_stage(spark, root, "s")
     rows = {r.k: (r.v, r.w) for r in again.collect()}
     assert rows == {1: ("a", None), 2: ("b2", 9.5)}
-    # and the re-registered table still plans exchange-free on the key
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        from pyspark.sql import functions as F
-        aplan = (
-            again.groupBy("k").agg(F.count("*").alias("n"))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in aplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_legacy_bucketed_stage_keeps_working(spark, work_dir):
+    """Stores committed before the one-layout store hold bucketed part
+    files (bucketBy + sortBy through a path-backed table) and a marker
+    carrying a ``bucket`` spec.  They are plain parquet underneath, so
+    read, upsert, append and compact serve them without migration."""
+    root = f"{work_dir}/legacy_bucketed"
+    os.makedirs(root)
+    path = os.path.join(root, "s")
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(16)], "k long, v string"
+    ).repartition(4)
+    table = "legacy_bucketed_s"
+    (
+        df.write.bucketBy(4, "k").sortBy("k")
+        .option("path", path).saveAsTable(table)
+    )
+    spark.sql(f"DROP TABLE {table}")  # metadata only; files stay
+    stage_store._write_marker(path, {
+        "run_id": "r0", "committed_at": 0.0,
+        "bucket": {"keys": ["k"], "n": 4, "ddl": "`k` bigint, `v` string"},
+    })
+    expected = {i: f"v{i}" for i in range(16)}
+
+    def rows():
+        return {r.k: r.v for r in stage_store.read_stage(spark, root, "s").collect()}
+
+    assert rows() == expected
+
+    up = spark.createDataFrame([(3, "NEW"), (99, "NEW")], "k long, v string")
+    stage_store.upsert_stage(up, root, "s", "u1", ["k"])
+    expected.update({3: "NEW", 99: "NEW"})
+    assert rows() == expected
+
+    for j in range(3):
+        inc = spark.createDataFrame([(200 + j, "a")], "k long, v string")
+        stage_store.append_stage(inc, root, "s", f"a{j}")
+        expected[200 + j] = "a"
+    assert rows() == expected
+
+    res = stage_store.compact_stage(
+        spark, root, "s", "c1", target_bytes=1 << 30, min_files=1
+    )
+    assert res["action"] == "compacted"
+    assert len(stage_store._part_files(path)) == 1
+    assert rows() == expected
+    info = stage_store.marker_info(root, "s")
+    assert [e["run_id"] for e in info["appends"]] == ["a0", "a1", "a2"]
+    assert info["compactions"][-1]["run_id"] == "c1"
 
 
 def test_compact_stage_binpacks_append_fragments(spark, work_dir):
@@ -293,42 +321,6 @@ def test_compact_stage_binpacks_append_fragments(spark, work_dir):
     assert len(stage_store.marker_info(root, "s").get("compactions", [])) == 1
 
 
-def test_compact_bucketed_stage_reclusters(spark, work_dir):
-    """A bucketed stage written from many input partitions emits up to
-    (tasks x buckets) files; compaction re-clusters to ~one file per
-    bucket and the re-registered table still carries the bucket spec."""
-    root = f"{work_dir}/compactb"
-    os.makedirs(root)
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(32)], "k long, v string"
-    ).repartition(8)
-    stage_store.commit_stage(df, root, "b", "r1", bucket_by=["k"], n_buckets=4)
-    path = os.path.join(root, "b")
-    before = len(stage_store._part_files(path))
-    assert before > 4
-    expected = sorted(
-        (r.k, r.v) for r in stage_store.read_stage(spark, root, "b").collect()
-    )
-
-    res = stage_store.compact_stage(
-        spark, root, "b", "c1", target_bytes=1 << 30, min_files=4
-    )
-    assert res["action"] == "compacted"
-    assert len(stage_store._part_files(path)) <= 4
-    out = stage_store.read_stage(spark, root, "b")
-    assert sorted((r.k, r.v) for r in out.collect()) == expected
-    assert stage_store.marker_info(root, "b")["bucket"]["n"] == 4
-
-    # converges: a bucketed rewrite emits ~n_buckets files no matter
-    # what, so the trigger floors at n and a re-run is a no-op even
-    # with min_files below the bucket count (schedulable)
-    res2 = stage_store.compact_stage(
-        spark, root, "b", "c2", target_bytes=1 << 30, min_files=1
-    )
-    assert res2["action"] == "noop"
-    assert res2["target_files"] == 4
-
-
 def test_admin_cli_compact(spark, work_dir, capsys):
     root = f"{work_dir}/clicompact"
     os.makedirs(root)
@@ -349,6 +341,11 @@ def test_admin_cli_compact(spark, work_dir, capsys):
         [root, "--compact", "s", "--min-files", "1", "--target-mb", "1024"]
     )
     assert "already compact" in capsys.readouterr().out
+
+    stage_admin.main([root, "--list"])
+    out = capsys.readouterr().out
+    assert "appends=3 last_run=a2" in out
+    assert "compactions=1 last_run=compact-" in out
 
 
 def test_compact_then_append_then_upsert_lifecycle(spark, work_dir):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators import retrieval
 from pdf_extraction_spark.operators.embed import EMBED_DIM
+from pdf_extraction_spark.plans import stage_store
 from pdf_extraction_spark.plans.pipeline import run_pipeline, run_vector_build
 from pdf_extraction_spark.sources.corpus import corpus_df
 
@@ -107,3 +108,34 @@ def test_pipeline_vector_query_store_under_tempdir(spark, tmp_path, monkeypatch)
     assert len(rows) == 10
     (root,) = [v for k, v in pipeline_ops._CACHE.items() if k[0] == "vectors"]
     assert root.startswith(str(tmp_path) + os.sep)
+
+
+def test_vector_commits_write_one_file_per_task(built, work_dir):
+    """typed_chunks and chunk_vectors commit plain parquet: each write
+    task writes at most one part file (its partition index leads the
+    file name), so a commit writes no more files than it has tasks."""
+    for stage in ("typed_chunks", "chunk_vectors"):
+        names = [
+            os.path.basename(f)
+            for f in stage_store._part_files(os.path.join(work_dir, "vec", stage))
+        ]
+        tasks = {n.split("-")[1] for n in names}
+        assert names and len(names) == len(tasks), (stage, sorted(names))
+
+
+def test_stage_root_with_quote_in_path(spark, tmp_path):
+    """A stage root whose path holds a single quote commits and reads
+    back the same chunks and chunk_vectors rows as a plain root."""
+    def build(root):
+        root = str(root)
+        run_pipeline(spark, corpus_df(spark, 10), root, resume=False, run_id="q1")
+        run_vector_build(spark, root, run_id="q1")
+        return {
+            stage: sorted(map(repr, stage_store.read_stage(spark, root, stage).collect()))
+            for stage in ("chunks", "chunk_vectors")
+        }
+
+    plain = build(tmp_path / "plain")
+    quoted = build(tmp_path / "o'brien")
+    assert plain["chunks"] and plain["chunk_vectors"]
+    assert quoted == plain
