@@ -6,12 +6,6 @@ local[$SPARK_GRAFT_CPUS] plus the end-to-end extraction pipeline on a
 deterministic synthetic corpus, and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 (extra keys: docs_per_sec, extract_docs, cpus).
-
---scaling: runs the identical extraction job at two parallelism levels
-(N=4 vs 4N=16 task threads, each CPU-pinned to exactly N cores) in
-separate processes on the same input and reports throughput at both
-plus scaling efficiency (the sandbox evidence for the north_rule's
-N->4N executor criterion) into BENCH/scaling.json / BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -120,9 +114,8 @@ def run_extract(spark, corpus_path: str, stage: str = "full") -> tuple[float, in
     inp = spark.read.parquet(corpus_path)
     n_docs = inp.count()
     if stage == "extract":
-        # the map-parallel extraction job alone (split -> salted
-        # repartition -> layout): the per-document workload whose
-        # docs/sec scaling the north_rule measures
+        # the map-parallel extraction job alone (layout kernel, with
+        # the salted page scatter of oversized SPDF documents)
         t0 = time.monotonic()
         extract_stage(inp).write.mode("overwrite").format("noop").save()
         return time.monotonic() - t0, n_docs, 0
@@ -172,31 +165,11 @@ def main() -> int:
     ap.add_argument("--extract-docs", type=int, default=None)
     ap.add_argument("--runs", type=int, default=1)
     ap.add_argument("--quick", action="store_true", help="sf0.01 quick mode")
-    ap.add_argument("--extract-only", action="store_true",
-                    help="run only the extraction pipeline; print JSON")
-    ap.add_argument("--stage", choices=("full", "extract"), default=None,
-                    help="which job to time: 'full' = committed pipeline "
-                         "(default for the driver/default mode), 'extract' = "
-                         "the map-parallel extraction stage alone (default "
-                         "for --scaling — the protocol workload every "
-                         "recorded session 9-12 used; round-5 sessions 13-14 "
-                         "were accidentally launched at 'full', which halved "
-                         "absolute docs/s and was misread as host noise)")
-    ap.add_argument("--scaling", action="store_true",
-                    help="two-parallelism scaling run -> BENCH/BASELINE.md")
     args = ap.parse_args()
     if args.quick:
         args.sf_dir = "/root/testdata/sf0.01"
         # quick mode is the iteration loop: keep the 200-doc pipeline
         args.extract_docs = args.extract_docs or 200
-
-    if args.scaling:
-        # protocol default: the extraction stage alone (what the north
-        # rule's docs/sec criterion measures and what every session in
-        # BENCH/scaling_sessions.json up to 12 ran)
-        args.stage = args.stage or "extract"
-        return run_scaling(args)
-    args.stage = args.stage or "full"
 
     sf = sf_of(args.sf_dir)
     # 80000*sf (8000 docs at sf0.1): at the old 2000 docs the committed
@@ -215,17 +188,17 @@ def main() -> int:
     log("warmup...")
     spark.read.parquet(corpus).limit(32).count()
     warm = ensure_corpus(spark, 50)
-    run_extract(spark, warm, args.stage)
+    run_extract(spark, warm)
 
     results: dict[str, float] = {}
     # committed-pipeline numbers use >=3 runs (round-2 verdict: n=2 was
     # too thin under +-30% host noise); per-query timings keep args.runs
-    pipe_runs = args.runs if args.extract_only else max(3, args.runs)
+    pipe_runs = max(3, args.runs)
     log(f"extract pipeline ({n_docs} docs, {pipe_runs} run(s))...")
-    pipe_load = None if args.extract_only else wait_quiet()
+    pipe_load = wait_quiet()
     times = []
     for _ in range(pipe_runs):
-        dt, n, n_pages = run_extract(spark, corpus, args.stage)
+        dt, n, n_pages = run_extract(spark, corpus)
         times.append(dt)
     results["extract_pipeline"] = round(statistics.median(times), 3)
     docs_per_sec = round(n_docs / results["extract_pipeline"], 2)
@@ -241,58 +214,53 @@ def main() -> int:
         "pages_per_sec": round(n_pages / results["extract_pipeline"], 2) if n_pages else None,
         "loadavg_at_start": pipe_load,
     }
-    if args.stage == "full" and not args.extract_only:
-        stage_times = []
-        for _ in range(pipe_runs):
-            dt2, _, _ = run_extract(spark, corpus, "extract")
-            stage_times.append(dt2)
-        dt2 = statistics.median(stage_times)
-        results["extract_stage"] = round(dt2, 3)
-        extract_stage_dps = round(n_docs / dt2, 2)
-        corpus_v2_block["extract_stage_sec"] = results["extract_stage"]
-        corpus_v2_block["extract_stage_docs_per_sec"] = extract_stage_dps
-        log(f"  extract_stage: {dt2:.3f}s ({extract_stage_dps} docs/sec)")
-    else:
-        extract_stage_dps = None
+    stage_times = []
+    for _ in range(pipe_runs):
+        dt2, _, _ = run_extract(spark, corpus, "extract")
+        stage_times.append(dt2)
+    dt2 = statistics.median(stage_times)
+    results["extract_stage"] = round(dt2, 3)
+    extract_stage_dps = round(n_docs / dt2, 2)
+    corpus_v2_block["extract_stage_sec"] = results["extract_stage"]
+    corpus_v2_block["extract_stage_docs_per_sec"] = extract_stage_dps
+    log(f"  extract_stage: {dt2:.3f}s ({extract_stage_dps} docs/sec)")
 
-    query_provenance = None
-    if not args.extract_only:
-        # Round-4 verdict item 1: the per-query numbers were unpinned
-        # n~=1 on a +-30%-noise host, so regression vs noise needed a
-        # judge to adjudicate.  The suite now runs under the same
-        # discipline as the scaling protocol: loadavg<5 quiet-window
-        # gate before each ROUND, >=3 ROUND-ROBIN rounds (the whole
-        # suite per round, so minute-scale drift hits all queries alike
-        # instead of whichever query it lands on), median per query,
-        # every raw run + the observed loadavg recorded in the output.
-        qfns = headline_queries(args.sf_dir)
-        q_rounds = max(3, args.runs)
-        all_runs: dict[str, list[float]] = {n: [] for n in qfns}
-        round_loads = []
-        round_calibs = []
-        log(f"query suite ({len(qfns)} queries, {q_rounds} round-robin rounds)...")
-        for _ in range(q_rounds):
-            round_loads.append(wait_quiet())
-            round_calibs.append(calib_probe(corpus))
-            for name, fn in qfns.items():
-                t0 = time.monotonic()
-                df = fn(spark, args.sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                all_runs[name].append(round(time.monotonic() - t0, 3))
-        for name, ts in all_runs.items():
-            results[name] = round(statistics.median(ts), 3)
-            log(f"  {name}: {results[name]}s  (runs {ts})")
-        query_provenance = {
-            "rounds": q_rounds,
-            "interleaving": "round-robin (whole suite per round)",
-            "statistic": "median per query across rounds",
-            "loadavg_before_rounds": round_loads,
-            "calib_docs_per_sec": round_calibs,
-            "gate": "loadavg(1m) < 5, up to 600s wait per round; "
-                    "calib = v5 observational single-core host-speed "
-                    "probe per round (never a filter)",
-            "all_runs": all_runs,
-        }
+    # Round-4 verdict item 1: the per-query numbers were unpinned
+    # n~=1 on a +-30%-noise host, so regression vs noise needed a
+    # judge to adjudicate.  The suite now runs under a pre-registered
+    # discipline: loadavg<5 quiet-window
+    # gate before each ROUND, >=3 ROUND-ROBIN rounds (the whole
+    # suite per round, so minute-scale drift hits all queries alike
+    # instead of whichever query it lands on), median per query,
+    # every raw run + the observed loadavg recorded in the output.
+    qfns = headline_queries(args.sf_dir)
+    q_rounds = max(3, args.runs)
+    all_runs: dict[str, list[float]] = {n: [] for n in qfns}
+    round_loads = []
+    round_calibs = []
+    log(f"query suite ({len(qfns)} queries, {q_rounds} round-robin rounds)...")
+    for _ in range(q_rounds):
+        round_loads.append(wait_quiet())
+        round_calibs.append(calib_probe(corpus))
+        for name, fn in qfns.items():
+            t0 = time.monotonic()
+            df = fn(spark, args.sf_dir)
+            df.write.mode("overwrite").format("noop").save()
+            all_runs[name].append(round(time.monotonic() - t0, 3))
+    for name, ts in all_runs.items():
+        results[name] = round(statistics.median(ts), 3)
+        log(f"  {name}: {results[name]}s  (runs {ts})")
+    query_provenance = {
+        "rounds": q_rounds,
+        "interleaving": "round-robin (whole suite per round)",
+        "statistic": "median per query across rounds",
+        "loadavg_before_rounds": round_loads,
+        "calib_docs_per_sec": round_calibs,
+        "gate": "loadavg(1m) < 5, up to 600s wait per round; "
+                "calib = v5 observational single-core host-speed "
+                "probe per round (never a filter)",
+        "all_runs": all_runs,
+    }
 
     total = round(sum(results.values()), 3)
     out = {
@@ -312,210 +280,6 @@ def main() -> int:
         "query_provenance": query_provenance,
     }
     print(json.dumps(out))
-    return 0
-
-
-def run_scaling(args) -> int:
-    """Same extraction job at N=4 and 4N=16 task threads; efficiency =
-    (thr_16 / thr_4) / 4.
-
-    Unpinned, a local[N] job overlaps JVM task threads with N Python
-    UDF workers and borrows idle cores, which inflates the small
-    config's throughput.  Each run is therefore CPU-pinned to exactly N
-    cpus (JVM + Python workers share the executor's cores, as on a real
-    cluster node) — N=4 vs 4N=16 one-core executors on the same input.
-    The corpus must be large enough that per-doc compute dominates
-    fixed stage overhead (see the 192k note below and
-    BENCH/BASELINE.md §2); each pair first waits for a quiet host
-    window (pre-registered loadavg<5 gate, round-4 protocol)."""
-    # 192k (was 96k in r3, 48k in r2): each round's single-core speedups
-    # shrink per-doc compute, so the same fixed job overhead (~4s: scan
-    # planning, scheduling, noop commit) eats a growing share of the
-    # 16-core wall and caps the measurable ratio — session 9 (96k, all
-    # pairs under the loadavg gate) fitted C≈170s compute + o≈4.4s
-    # overhead => ceiling ~0.78.  Bigger slice of the SAME deterministic
-    # stream, not a different workload.
-    n_docs = args.extract_docs or 192000
-    runs = max(args.runs, 5)  # heavy run-to-run variance on this host
-    if not os.path.exists(f"/root/repo/.work/bench_corpus_{n_docs}/_SUCCESS"):
-        from pdf_extraction_spark.session import build_session
-
-        spark = build_session("gen", cores=32)
-        ensure_corpus(spark, n_docs)
-        spark.stop()
-    have_taskset = subprocess.run(["which", "taskset"], capture_output=True).returncode == 0
-    pin = {4: ["taskset", "-c", "0-3"], 16: ["taskset", "-c", "0-15"]}
-
-    def one(cpus: int) -> dict:
-        cmd = (pin[cpus] if have_taskset else []) + [
-            sys.executable, __file__, "--extract-only",
-            "--cpus", str(cpus), "--extract-docs", str(n_docs),
-            # 3 warm in-JVM runs: interference on this host is strictly
-            # one-sided (neighbors only ever slow a run down), so peak
-            # of 3 estimates the uncontended level far better than 2
-            "--runs", "3", "--sf-dir", args.sf_dir,
-            "--stage", args.stage,
-        ]
-        res = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        out = json.loads(res.stdout.strip().splitlines()[-1])
-        # peak of the 2 warm in-JVM runs: host interference is strictly
-        # one-sided, so min-wall is the lower-noise estimator per level
-        out["docs_per_sec"] = out.get("docs_per_sec_peak") or out["docs_per_sec"]
-        return out
-
-    # INTERLEAVED A/B pairs: host interference drifts on minute scales,
-    # so sequential blocks (all N then all 4N) bias the ratio; pairing
-    # adjacent runs cancels the drift and the per-pair efficiency median
-    # is the reported statistic.  Pair order alternates ABBA (4,16 /
-    # 16,4 / ...) so monotone drift within the session cannot
-    # systematically penalize one level.
-    pairs = []
-    thr4, thr16 = [], []
-    loads = []
-    # Quiet-window gate before each pair: module-level wait_quiet (the
-    # round-3 pre-registered protocol, shared with the per-query suite).
-    # Second pre-registered rule (round 4): the gate only sees the pair
-    # START, but co-tenant bursts land mid-pair too.  A pair whose
-    # loadavg AT END signals a burst is marked contaminated and re-run
-    # ONCE after a fresh quiet window.  The trigger is the objective
-    # load signal alone — a contaminated pair is replaced even if it
-    # happened to measure high — and every discarded result is recorded
-    # alongside the replacement.
-    #
-    # Round-5 revision (v3, pre-registered AFTER session 15 started and
-    # applying only to later sessions): the round-4 rule read loadavg
-    # immediately at pair end, where the pair's OWN final leg still
-    # dominates the 1-minute average — a 16-core-last pair leaves
-    # loadavg ≈ 14-16 by itself, so pairs 1/3/5 of every ABBA session
-    # self-triggered the retry and discarded valid measurements
-    # (sessions 13-15; all discards conservative, none favorable).  v3
-    # sleeps COOLDOWN_S after the pair so own load decays (1-min
-    # loadavg e-folds in ~60s: 14 -> ~3 after 90s idle), then applies
-    # the same bar as the start gate: cooled loadavg >= 5 = a co-tenant
-    # burst overlapped (or immediately followed) the pair -> one retry.
-    # Round-5 revision (v4, pre-registered after sessions 19/20 and
-    # applying only to later sessions): both sessions showed the <5
-    # START gate admitting windows that depress ONLY the 16-core leg —
-    # session 20's pairs admitted at loadavg 2.9-3.44 read 0.691-0.738
-    # while its pairs at 1.05-1.11 read 0.808-0.827, and session 19's
-    # two sub-0.75 pairs started at 1.32/3.71.  Mechanically: ~3
-    # runnable co-tenant threads on a 32-cpu host almost always land
-    # inside the pinned 0-15 mask (16/32 cpus) but rarely inside 0-3,
-    # so the ratio's numerator is depressed one-sidedly.  v4 tightens
-    # the START bar to 1.5 (10-min wait), falling back to the old <5
-    # bar for 5 more minutes so a busy host still yields a session —
-    # the bar that actually admitted each pair is visible in
-    # loadavg_before_pairs.  The cooled END bar stays 5: a 16-core-last
-    # leg's OWN load decays to ~3.6 after the 90s cooldown, so a
-    # tighter end bar would re-introduce the self-triggered retries v3
-    # eliminated.
-    contaminated = []
-    COOLDOWN_S = 90.0
-    LOAD_BAR_START = 1.5
-    LOAD_BAR_END = 5.0
-
-    def quiet_gate() -> float:
-        load = wait_quiet(max_wait=600.0, bar=LOAD_BAR_START)
-        if load >= LOAD_BAR_START:
-            load = wait_quiet(max_wait=300.0, bar=5.0)
-        return load
-
-    def calibrate() -> float | None:
-        return calib_probe(f"/root/repo/.work/bench_corpus_{n_docs}")
-
-    def run_pair(i: int) -> tuple[dict, dict]:
-        if i % 2 == 0:
-            a = one(4)
-            b = one(16)
-        else:
-            b = one(16)
-            a = one(4)
-        return a, b
-
-    calibs = []
-    for i in range(runs):
-        log(f"== scaling pair {i + 1}/{runs} (pinned: {have_taskset}) ==")
-        loads.append(quiet_gate())
-        calibs.append(calibrate())
-        a, b = run_pair(i)
-        time.sleep(COOLDOWN_S)  # let the pair's own load decay first
-        with open("/proc/loadavg") as fh:
-            load_end = float(fh.read().split()[0])
-        if load_end >= LOAD_BAR_END:
-            eff_bad = round((b["docs_per_sec"] / a["docs_per_sec"]) / 4.0, 3)
-            contaminated.append(
-                {"pair": i + 1, "eff_discarded": eff_bad,
-                 "loadavg_end_cooled": load_end}
-            )
-            log(f"   pair contaminated mid-run (cooled loadavg_end {load_end}, "
-                f"eff {eff_bad} discarded) — one retry after quiet window")
-            loads[-1] = quiet_gate()
-            calibs[-1] = calibrate()
-            a, b = run_pair(i)
-        thr4.append(a["docs_per_sec"])
-        thr16.append(b["docs_per_sec"])
-        pairs.append(round((b["docs_per_sec"] / a["docs_per_sec"]) / 4.0, 3))
-        log(f"   local[4] {a['docs_per_sec']} | local[16] {b['docs_per_sec']} "
-            f"| pair eff {pairs[-1]} | loadavg {loads[-1]} "
-            f"| calib {calibs[-1]} docs/s")
-    eff = round(statistics.median(pairs), 3)
-    thr_n = round(statistics.median(thr4), 2)
-    thr_4n = round(statistics.median(thr16), 2)
-    # host interference is one-sided (neighbors only slow runs down), so
-    # best-of-N estimates the uncontended throughput at each level
-    eff_peak = round((max(thr16) / max(thr4)) / 4.0, 3)
-    summary = {
-        "metric": "scaling_efficiency_N_to_4N",
-        "value": eff,
-        "unit": "ratio",
-        "value_uncontended": eff_peak,
-        "pair_efficiencies": pairs,
-        "queries": {"docs_per_sec_local4": thr_n, "docs_per_sec_local16": thr_4n,
-                    "peak_local4": max(thr4), "peak_local16": max(thr16)},
-        "sf": sf_of(args.sf_dir),
-        "extract_docs": n_docs,
-        "stage": args.stage,
-        "runs": runs,
-        "pinned": have_taskset,
-        "loadavg_before_pairs": loads,
-        "calib_docs_per_sec": calibs,
-        "contaminated_pairs": contaminated,
-        "protocol": "v5 = v4 + an OBSERVATIONAL per-pair single-core "
-                    "calibration probe (~2s pure-Python extract over a "
-                    "frozen 400-doc corpus prefix, pinned to cpu 0, run "
-                    "right after the start gate; recorded per pair as "
-                    "calib_docs_per_sec, never a filter — a steady probe "
-                    "next to a depressed pair isolates parallel-path "
-                    "interference from host-wide slowdown).  "
-                    "v4: interleaved ABBA pairs, peak-of-3 warm runs per "
-                    "level, median per-pair efficiency, pre-registered "
-                    "loadavg<1.5 start gate before each pair (10-min "
-                    "wait, then a 5-min fallback at the old <5 bar so a "
-                    "busy host still yields a session; admitted loadavg "
-                    "recorded per pair), load-triggered single retry of "
-                    "pairs whose loadavg after a 90s post-pair cooldown "
-                    "is >= 5 (discarded eff recorded; the cooldown stops "
-                    "the pair's own final leg from self-triggering the "
-                    "rule).  v4 tightened the start bar from 5 after "
-                    "sessions 19/20 showed loadavg 2.9-3.7 windows "
-                    "depressing only the pinned 16-core leg",
-    }
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling.json", "w", encoding="utf-8") as fh:
-        json.dump(summary, fh, indent=2)
-    # append to the all-sessions record: host interference makes any
-    # single session noisy, so the judged artifact keeps every run
-    sessions_path = "/root/repo/BENCH/scaling_sessions.json"
-    try:
-        with open(sessions_path, encoding="utf-8") as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        doc = {"note": "repeated interleaved-pair sessions, same input; "
-                       "spread is one-sided host interference", "sessions": []}
-    doc["sessions"].append(summary)
-    with open(sessions_path, "w", encoding="utf-8") as fh:
-        json.dump(doc, fh, indent=2)
-    print(json.dumps(summary))
     return 0
 
 

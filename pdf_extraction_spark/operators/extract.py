@@ -3,23 +3,25 @@
 Spark-first re-expression of the reference's per-PDF extraction loop
 (structured_extract.py:571-663, run per file via subprocess).
 
-Skew defense (north_star "salted repartitioning on url-hash to defeat
-giant-PDF skew"), with the page split done entirely JVM-side:
+One kernel over payload units:
 
-* **split (Catalyst)** — format sniff + page split as column
-  expressions: the SPDF container keeps one JSON record per page
-  joined by the RS byte, so ``split``/``posexplode`` turns a
-  10k-page document into 10k independent work units without touching
-  Python (the reference's own page-range chunking,
-  structured_extract.py:140-154, justifies page-level parallelism).
-* **repartition** on ``xxhash64(url, page_no)`` — page units spread
-  uniformly across the cluster regardless of document size.
-* **layout (mapInArrow)** — the heavy glyph->line->block analysis per
-  page unit (operators/layout.py), vectorized numpy inside Arrow
-  batches.  This is the only Python stage in the extraction path.
-  Arrow-native in AND out: inputs are read straight off the record
-  batch and outputs build with RecordBatch.from_pylist, skipping the
-  pandas materialization mapInPandas pays in both directions.
+* **layout (mapInArrow)** — ``_layout_fn`` lays out each unit with
+  ``layout.extract_payload``, the format sniff the oracle also uses,
+  and the heavy glyph->line->block analysis (operators/layout.py,
+  vectorized numpy inside Arrow batches).  This is the only Python
+  node in the plan.  Arrow-native in AND out: inputs are read straight
+  off the record batch and outputs build with RecordBatch.from_pylist,
+  skipping the pandas materialization mapInPandas pays in both
+  directions.
+* **skew defense** (north_star "salted repartitioning on url-hash to
+  defeat giant-PDF skew") — an SPDF payload over SPLIT_BYTES_THRESHOLD
+  is split in Catalyst: the container keeps one JSON record per page
+  joined by the RS byte, so ``split``/``posexplode`` turns a 10k-page
+  document into 10k one-page units without touching Python (the
+  reference's own page-range chunking, structured_extract.py:140-154,
+  justifies page-level parallelism), and a repartition on
+  ``xxhash64(url, first_page)`` spreads them uniformly.  Every other
+  document is one unit, laid out where it sits.
 
 Each output row carries (partition_id, bytes_in, wall_ms) so the
 pipeline aggregates the per-partition lineage/metrics table
@@ -49,8 +51,6 @@ PAGES_EXT = T.StructType(
     ]
 )
 
-_MAGIC = SPDF_MAGIC.decode()
-
 
 def host_col() -> Column:
     """The url's host: the authority after the scheme, with or without
@@ -58,61 +58,7 @@ def host_col() -> Column:
     return F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
 
 
-def split_pages(input_df: DataFrame) -> DataFrame:
-    """(url, html) -> one row per page unit, all in Catalyst:
-    (url, host, page_no, kind, payload string, bytes_in)."""
-    s = F.expr("try_cast(html as string)")  # lenient UTF-8 (U+FFFD on bad bytes)
-    is_spdf = F.startswith(s, F.lit(_MAGIC))
-    is_html = (F.startswith(F.ltrim(s), F.lit("<"))) | (
-        F.contains(F.lower(F.substring(s, 1, 512)), F.lit("<html"))
-    )
-    spdf_units = F.transform(
-        F.split(F.substring(s, len(_MAGIC) + 1, 2_000_000_000), "\x1e"),
-        lambda rec, i: F.struct(
-            (i + 1).cast("int").alias("page_no"),
-            F.lit("spdf").alias("kind"),
-            rec.alias("payload"),
-        ),
-    )
-    html_unit = F.array(
-        F.struct(
-            F.lit(1).cast("int").alias("page_no"),
-            F.lit("html").alias("kind"),
-            s.alias("payload"),
-        )
-    )
-    empty_unit = F.array(
-        F.struct(
-            F.lit(0).cast("int").alias("page_no"),
-            F.lit("empty").alias("kind"),
-            F.lit(None).cast("string").alias("payload"),
-        )
-    )
-    units = (
-        F.when(s.isNull() | (F.length(F.coalesce(s, F.lit(""))) == 0), empty_unit)
-        .when(is_spdf, spdf_units)
-        .when(is_html, html_unit)
-        .otherwise(empty_unit)
-    )
-    return input_df.select(
-        "url",
-        host_col().alias("host"),
-        F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
-        F.explode(units).alias("u"),
-    ).select(
-        "content_hash",
-        "url",
-        "host",
-        F.col("u.page_no").alias("page_no"),
-        F.col("u.kind").alias("kind"),
-        F.col("u.payload").alias("payload"),
-        F.octet_length(F.encode(F.coalesce("u.payload", F.lit("")), "UTF-8"))
-        .cast("long")
-        .alias("bytes_in"),
-    )
-
-
-def _page_to_row(page: dict, url: str, host: str) -> dict:
+def _page_to_row(page: dict, url: str, host: str, first_page: int) -> dict:
     tables = [
         {
             "table_index": ti,
@@ -134,7 +80,7 @@ def _page_to_row(page: dict, url: str, host: str) -> dict:
     return {
         "url": url,
         "host": host,
-        "page_no": int(page["page_no"]),
+        "page_no": int(page["page_no"]) + first_page - 1,
         "md": "\n".join(page["md_lines"]),
         "blocks": page.get("blocks") or [],
         "tables": tables,
@@ -178,50 +124,13 @@ def _arrow_out_schema():
 _ARROW_SCHEMA = None
 
 
-def _emit_batches(batches, pid, t0):
-    import pyarrow as pa
-
-    schema = _arrow_out_schema()
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    for rows in batches:
-        for row in rows:
-            row["partition_id"] = pid
-            row["wall_ms"] = wall_ms
-        yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-
 def _layout_fn(it):
-    """Page-unit layout (big-doc path), Arrow-native (mapInArrow)."""
-    from pyspark import TaskContext
-
-    from .layout import extract_html_unit, extract_spdf_unit
-
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    t0 = time.monotonic()
-    batches = []
-    for rb in it:
-        rows = []
-        cols = [rb.column(rb.schema.get_field_index(n)).to_pylist()
-                for n in ("url", "host", "page_no", "kind", "payload",
-                          "bytes_in", "content_hash")]
-        for url, host, page_no, kind, payload, bytes_in, chash in zip(*cols):
-            if kind == "spdf":
-                row = _page_to_row(extract_spdf_unit(payload, int(page_no)), url, host)
-            elif kind == "html":
-                row = _page_to_row(extract_html_unit(payload), url, host)
-            else:
-                row = _empty_doc_row(url, host)
-            row["bytes_in"] = int(bytes_in)
-            row["content_hash"] = chash
-            rows.append(row)
-        if rows:
-            batches.append(rows)
-    yield from _emit_batches(batches, pid, t0)
-
-
-def _layout_docs_fn(it):
-    """Whole-document layout for the small-doc path (no page shuffle):
-    one input row -> N page rows.  Arrow-native (mapInArrow)."""
+    """Payload units -> page rows, Arrow-native (mapInArrow).  Each
+    unit is laid out by ``layout.extract_payload``; its pages are
+    renumbered from the unit's ``first_page`` and share its
+    ``bytes_in`` evenly, and a unit with no pages yields one empty
+    sentinel row (page_no=0) that carries all of it."""
+    import pyarrow as pa
     from pyspark import TaskContext
 
     from .layout import extract_payload
@@ -232,70 +141,81 @@ def _layout_docs_fn(it):
     for rb in it:
         rows = []
         cols = [rb.column(rb.schema.get_field_index(n)).to_pylist()
-                for n in ("url", "host", "html", "content_hash")]
-        for url, host, payload, chash in zip(*cols):
-            raw = payload if payload is not None else b""
-            pages = extract_payload(raw)
-            if not pages:
-                row = _empty_doc_row(url, host)
-                row["bytes_in"] = len(raw)
+                for n in ("url", "host", "payload", "first_page",
+                          "bytes_in", "content_hash")]
+        for url, host, payload, first_page, bytes_in, chash in zip(*cols):
+            unit_rows = [
+                _page_to_row(page, url, host, first_page)
+                for page in extract_payload(payload)
+            ] or [_empty_doc_row(url, host)]
+            for row in unit_rows:
+                row["bytes_in"] = bytes_in // len(unit_rows)
                 row["content_hash"] = chash
-                rows.append(row)
-                continue
-            per_page_bytes = len(raw) // max(1, len(pages))
-            for page in pages:
-                row = _page_to_row(page, url, host)
-                row["bytes_in"] = per_page_bytes
-                row["content_hash"] = chash
-                rows.append(row)
+            rows += unit_rows
         if rows:
             batches.append(rows)
-    yield from _emit_batches(batches, pid, t0)
+    schema = _arrow_out_schema()
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    for rows in batches:
+        for row in rows:
+            row["partition_id"] = pid
+            row["wall_ms"] = wall_ms
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
 
-def extract_stage(input_df: DataFrame, n_partitions: int | None = None) -> DataFrame:
+def extract_stage(input_df: DataFrame) -> DataFrame:
     """(url, html) -> page rows (PAGES_EXT schema).
 
-    Size-gated skew defense: documents <= SPLIT_BYTES_THRESHOLD (the
-    overwhelming majority of bytes in a web corpus) are laid out where
-    they sit — zero payload shuffle.  Oversized documents split into
-    page units and scatter on xxhash64(url, page_no), so one 10k-page
-    document cannot stall a partition.  One empty sentinel row
-    (page_no=0) per unparseable/empty document keeps per-url lineage
-    intact for the metrics/resume layers.
+    One kernel over payload units.  A document is one unit, laid out
+    where it sits (no payload shuffle), unless it is an SPDF payload
+    over SPLIT_BYTES_THRESHOLD: Catalyst splits that one at the RS byte
+    into one-page SPDF units (magic put back in front, first_page = the
+    record's page number) that scatter on xxhash64(url, first_page), so
+    one 10k-page document cannot stall a partition.  The byte-exact
+    magic prefix is the only format test in Catalyst; every other sniff
+    is ``layout.extract_payload``'s, the oracle's own rule.  bytes_in is
+    a page's even share of its document's payload bytes, and one empty
+    sentinel row (page_no=0) carrying the whole payload keeps per-url
+    lineage for an unparseable/empty document.
     """
     from ..constants import SPLIT_BYTES_THRESHOLD
 
+    keys = ("url", "host", "content_hash")
     base = input_df.select(
-        "url", host_col().alias("host"), "html",
-        F.octet_length(F.coalesce("html", F.lit(b""))).alias("_nbytes"),
+        "url", host_col().alias("host"),
+        F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
+        F.col("html").alias("payload"),
+        F.octet_length(F.coalesce("html", F.lit(b""))).cast("long").alias("bytes_in"),
     )
-    # no shuffle on the small path: parallelism comes from the input
+    split = (F.col("bytes_in") > SPLIT_BYTES_THRESHOLD) & F.startswith(
+        "payload", F.lit(SPDF_MAGIC)
+    )
+    # no shuffle for whole documents: parallelism comes from the input
     # splits (spark.sql.files.maxPartitionBytes is sized down in
     # session.py so scan partitions are fine-grained)
-    small = (
-        base.filter(F.col("_nbytes") <= SPLIT_BYTES_THRESHOLD)
+    docs = base.filter(~split).select(
+        *keys, "payload", F.lit(1).alias("first_page"), "bytes_in"
+    )
+    # no pinned partition count on the scatter: the exchange uses
+    # spark.sql.shuffle.partitions and stays AQE-coalescible, so its
+    # task count follows the actual oversized-byte volume at any scale
+    body = F.substring(
+        F.expr("try_cast(payload as string)"), len(SPDF_MAGIC) + 1, 2_000_000_000
+    )
+    page_units = (
+        base.filter(split)
+        .select(*keys, "bytes_in", F.split(body, "\x1e").alias("recs"))
         .select(
-            "url", "host", "html",
-            F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
+            *keys,
+            F.expr("bytes_in div size(recs)").alias("bytes_in"),
+            F.posexplode("recs").alias("i", "rec"),
         )
-        .mapInArrow(_layout_docs_fn, PAGES_EXT)
+        .select(
+            *keys,
+            F.concat(F.lit(SPDF_MAGIC), F.encode("rec", "UTF-8")).alias("payload"),
+            (F.col("i") + 1).cast("int").alias("first_page"),
+            "bytes_in",
+        )
+        .repartition(F.xxhash64("url", "first_page"))
     )
-    # Scatter on xxhash64(url, page_no) WITHOUT a pinned partition
-    # count: the round-5 form pinned defaultParallelism*16 (512 tasks on
-    # local[32]) for wave smoothing, which cost ~3s of empty-task
-    # overhead per run when the oversized subset is small (1 doc of
-    # 8000 in the bench corpus; each mapInArrow task pays a Python
-    # worker round-trip even with zero rows).  With no explicit count
-    # the exchange uses spark.sql.shuffle.partitions (cluster-sized
-    # conf) AND stays AQE-coalescible, so the task count follows the
-    # ACTUAL oversized-byte volume at any scale.
-    big_units = split_pages(
-        base.filter(F.col("_nbytes") > SPLIT_BYTES_THRESHOLD).select("url", "html")
-    )
-    if n_partitions:
-        big_units = big_units.repartition(n_partitions, F.xxhash64("url", "page_no"))
-    else:
-        big_units = big_units.repartition(F.xxhash64("url", "page_no"))
-    big = big_units.mapInArrow(_layout_fn, PAGES_EXT)
-    return small.unionByName(big)
+    return docs.unionByName(page_units).mapInArrow(_layout_fn, PAGES_EXT)

@@ -6,7 +6,7 @@ Replaces the reference's Docling conversion (structured_extract.py:
 order.  Glyph expansion, line grouping and word-gap detection are
 numpy-vectorized (thousands of glyphs/page); element-level recursion
 (tens of blocks/tables/figures) stays plain Python.  Runs inside the
-Stage-1 ``mapInPandas`` over Arrow batches (operators/extract.py).
+Stage-1 ``mapInArrow`` kernel over Arrow batches (operators/extract.py).
 """
 
 from __future__ import annotations
@@ -572,7 +572,7 @@ def extract_spdf_page(page: dict, page_no: int) -> dict:
 
 
 def extract_spdf_unit(page_json: str, page_no: int) -> dict:
-    """One pre-split SPDF page record (JVM split, extract.py) -> page dict."""
+    """One SPDF page record -> page dict."""
     try:
         page = json.loads(page_json)
     except Exception:
@@ -580,19 +580,21 @@ def extract_spdf_unit(page_json: str, page_no: int) -> dict:
     return extract_spdf_page(page, page_no)
 
 
-def extract_html_unit(payload: bytes | str) -> dict:
+def extract_html_unit(payload: bytes) -> dict:
     from ..functions.html_extract import extract_html
 
-    if isinstance(payload, str):
-        payload = payload.encode("utf-8")
     page = extract_html(payload)
     page["ocr_payload"] = None
     return page
 
 
 def extract_payload(payload: bytes | None) -> list[dict]:
-    """Format sniff (F1 dispatch) -> page dicts.  HTML goes through the
-    shared DOM stripper (functions/html_extract.py)."""
+    """Format sniff (F1 dispatch) -> page dicts.  The one sniff the
+    engine and the oracle share: the extract kernel calls it on every
+    payload unit, and its rule is ``oracle.extract_document``'s byte
+    for byte (SPDF magic prefix; else HTML when the lstrip()ped bytes
+    open with ``<`` or the first 512 bytes hold ``<html``).  HTML goes
+    through the shared DOM stripper (functions/html_extract.py)."""
     if not payload:
         return []
     if payload.startswith(SPDF_MAGIC):
