@@ -18,6 +18,10 @@ import subprocess
 import sys
 import time
 
+# this checkout: the probe, the corpora and the stage root all use it,
+# so a second checkout measures its own code and data
+HERE = os.path.dirname(os.path.abspath(__file__))
+
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
@@ -53,7 +57,7 @@ def wait_quiet(max_wait: float = 600.0, bar: float = 5.0) -> float:
 # the per-query suite (per round); diagnostic for the ledger, never a
 # filter.
 _CALIB_SRC = (
-    "import sys,time,glob;sys.path.insert(0,'/root/repo');"
+    "import sys,time,glob;sys.path.insert(0,{root!r});"
     "import pyarrow.parquet as pq;"
     "from pdf_extraction_spark.operators.layout import extract_payload;"
     "p=[]\n"
@@ -79,7 +83,7 @@ def calib_probe(corpus: str) -> float | None:
         ["which", "taskset"], capture_output=True
     ).returncode == 0
     cmd = (["taskset", "-c", "0"] if pinned else []) + [
-        sys.executable, "-c", _CALIB_SRC.format(corpus=corpus),
+        sys.executable, "-c", _CALIB_SRC.format(root=HERE, corpus=corpus),
     ]
     try:
         res = subprocess.run(cmd, capture_output=True, text=True,
@@ -99,7 +103,7 @@ def sf_of(sf_dir: str) -> float:
 
 
 def ensure_corpus(spark, n_docs: int) -> str:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".work", f"bench_corpus_{n_docs}")
+    path = os.path.join(HERE, ".work", f"bench_corpus_{n_docs}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from pdf_extraction_spark.sources.corpus import write_corpus
 
@@ -127,7 +131,7 @@ def run_extract(spark, corpus_path: str, stage: str = "full") -> tuple[float, in
 
     from pdf_extraction_spark.plans.pipeline import run_pipeline
 
-    stage_root = "/root/repo/.work/bench_stages"
+    stage_root = os.path.join(HERE, ".work", "bench_stages")
     shutil.rmtree(stage_root, ignore_errors=True)
     t0 = time.monotonic()
     out = run_pipeline(spark, inp, stage_root, resume=False)
@@ -149,7 +153,7 @@ HEADLINE = [
 
 
 def headline_queries(sf_dir: str):
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, HERE)
     import __spark_entry__ as entry
 
     qs = entry.queries()

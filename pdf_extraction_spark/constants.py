@@ -75,8 +75,8 @@ SPDF_MAGIC = b"%SPDF1\n"
 # --- scale knobs
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch size for the extraction UDFs.  Round-1 used 64 (straggler
-# control); with task granularity now coming from fine-grained corpus
-# files (~8 scan tasks/core), bigger batches cut JVM<->Python handoffs:
+# control); the layout kernel now runs one task per core over the
+# coalesced payload scan, and bigger batches cut JVM<->Python handoffs:
 # measured pinned A/B at 48k docs — 4 cores 967->1214 docs/s,
 # 16 cores 3178->3244 docs/s going 64->2048.
 ARROW_MAX_RECORDS_PER_BATCH = 2048

@@ -22,6 +22,10 @@ One kernel over payload units:
   justifies page-level parallelism), and a repartition on
   ``xxhash64(url, first_page)`` spreads them uniformly.  Every other
   document is one unit, laid out where it sits.
+* **task sizing** — the payload scan is coalesced (narrow, no shuffle)
+  to one partition per core before the size gate, so the kernel pays
+  one Python-worker round-trip per core rather than one per scan
+  split, and pages commits that many files for later stages to re-read.
 
 Each output row carries (partition_id, bytes_in, wall_ms) so the
 pipeline aggregates the per-partition lineage/metrics table
@@ -166,8 +170,10 @@ def _layout_fn(it):
 def extract_stage(input_df: DataFrame) -> DataFrame:
     """(url, html) -> page rows (PAGES_EXT schema).
 
-    One kernel over payload units.  A document is one unit, laid out
-    where it sits (no payload shuffle), unless it is an SPDF payload
+    One kernel over payload units, one task per core: the payload scan
+    is coalesced to defaultParallelism partitions (no shuffle) ahead of
+    the size gate.  A document is one unit, laid out in its coalesced
+    scan task (no payload shuffle), unless it is an SPDF payload
     over SPLIT_BYTES_THRESHOLD: Catalyst splits that one at the RS byte
     into one-page SPDF units (magic put back in front, first_page = the
     record's page number) that scatter on xxhash64(url, first_page), so
@@ -181,18 +187,16 @@ def extract_stage(input_df: DataFrame) -> DataFrame:
     from ..constants import SPLIT_BYTES_THRESHOLD
 
     keys = ("url", "host", "content_hash")
+    # narrow coalesce: one layout task per core, not one per scan split
     base = input_df.select(
         "url", host_col().alias("host"),
         F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
         F.col("html").alias("payload"),
         F.octet_length(F.coalesce("html", F.lit(b""))).cast("long").alias("bytes_in"),
-    )
+    ).coalesce(input_df.sparkSession.sparkContext.defaultParallelism)
     split = (F.col("bytes_in") > SPLIT_BYTES_THRESHOLD) & F.startswith(
         "payload", F.lit(SPDF_MAGIC)
     )
-    # no shuffle for whole documents: parallelism comes from the input
-    # splits (spark.sql.files.maxPartitionBytes is sized down in
-    # session.py so scan partitions are fine-grained)
     docs = base.filter(~split).select(
         *keys, "payload", F.lit(1).alias("first_page"), "bytes_in"
     )

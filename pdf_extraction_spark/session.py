@@ -63,20 +63,18 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Scan-split sizing (guide §6): the shuffle-free small-document
-        # extraction path gets its parallelism from input splits.
-        # Round 5 pinned 8 MB splits ("many small waves"), which made an
-        # 80 MB corpus into 128 mapInArrow tasks — each task pays a
-        # Python-worker round-trip, so task overhead dominated the
-        # layout stage (extract noop 5.1s at 8k docs, of which ~1s was
-        # small-path task overhead).  Round 6: cap splits at 16 MB and
-        # let Spark's own bytesPerCore floor (totalBytes /
-        # defaultParallelism) size them BELOW the cap — small corpora
-        # still get ~core-count waves, large corpora get fewer, larger
-        # tasks, stage re-reads stop fragmenting (measured sweep of
-        # 8/12/16/32 MB at 8k and 80k docs in OPTIMIZATION_r06.md;
-        # an explicit core-count minPartitionNum floor was tried and
-        # dropped — it re-fragmented the small committed-stage scans).
+        # Scan-split sizing (guide §6) for stage re-reads and query
+        # table scans: cap splits at 16 MB and let Spark's own
+        # bytesPerCore floor (totalBytes / defaultParallelism) size them
+        # BELOW the cap — small inputs still get ~core-count waves,
+        # large ones fewer, larger tasks (measured sweep of 8/12/16/32
+        # MB at 8k and 80k docs in OPTIMIZATION_r06.md; an explicit
+        # core-count minPartitionNum floor was tried and dropped — it
+        # re-fragmented the small committed-stage scans).  The extract
+        # stage does not take its parallelism from these splits: it
+        # coalesces its payload scan to one layout task per core
+        # (operators/extract.py), since each split there would pay a
+        # Python-worker round-trip and commit its own pages file.
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         # Whole-stage-codegen class cache: the default 100 entries is
         # smaller than one pass of this engine's query surface, so a

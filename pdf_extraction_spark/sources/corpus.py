@@ -394,12 +394,11 @@ def write_corpus(
     spark, path: str, n_docs: int, seed: int = 42,
     n_partitions: int | None = None,
 ) -> None:
-    """Write the corpus as MANY small files on purpose: one parquet
-    row group is one scan task, and the shuffle-free small-document
-    extraction path takes its parallelism from scan tasks.  32 files on
-    16 cores is 2 task waves — one slow wave-2 task adds straight to
-    wall-clock; ~8 tasks/core amortizes stragglers (measured: the
-    dominant N->4N scaling loss)."""
+    """Write the corpus as MANY small files (max(128, 8 x cores)): a
+    crawl lands as many small parts, so this is the input shape the
+    engine is measured on.  The extract stage does not take its
+    parallelism from it: it coalesces the scan to one layout task per
+    core."""
     n_partitions = n_partitions or max(
         128, spark.sparkContext.defaultParallelism * 8
     )

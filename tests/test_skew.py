@@ -11,7 +11,7 @@ from pdf_extraction_spark import constants, oracle
 from pdf_extraction_spark.constants import SPLIT_BYTES_THRESHOLD
 from pdf_extraction_spark.functions.html_extract import extract_html
 from pdf_extraction_spark.operators.extract import extract_stage
-from pdf_extraction_spark.sources.corpus import corpus_df, generate_row
+from pdf_extraction_spark.sources.corpus import corpus_df, generate_row, write_corpus
 
 
 def test_giant_doc_pages_scatter(spark):
@@ -50,10 +50,28 @@ def test_small_docs_single_python_stage(spark):
         inp = spark.read.parquet(f"{d}/c")
         plan = extract_stage(inp)._jdf.queryExecution().executedPlan().toString()
     # exactly one exchange: the big-doc scatter; the whole-document
-    # branch reads scan -> filter -> project -> union -> mapInArrow with
-    # no shuffle, and both branches share the one layout kernel
+    # branch reads scan -> filter -> project -> coalesce -> union ->
+    # mapInArrow with no shuffle, and both branches share the one
+    # layout kernel
     assert plan.count("Exchange") == 1
     assert plan.count("MapInArrow") == 1
+
+
+def test_whole_docs_one_task_per_core(spark, work_dir):
+    """A corpus of many small files is laid out in at most one task per
+    core: the scan splits (one per few files) are coalesced ahead of the
+    layout kernel, so every whole document's rows carry one of at most
+    defaultParallelism partition ids."""
+    write_corpus(spark, f"{work_dir}/many_files", 200)
+    cores = spark.sparkContext.defaultParallelism
+    pids = (
+        extract_stage(spark.read.parquet(f"{work_dir}/many_files"))
+        .filter(F.col("url") != generate_row(7)["url"])
+        .select("partition_id")
+        .distinct()
+        .count()
+    )
+    assert pids <= cores, f"{pids} layout tasks on {cores} cores"
 
 
 def test_size_gate_is_invariant(spark, monkeypatch):
