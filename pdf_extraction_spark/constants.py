@@ -73,7 +73,6 @@ UNIT_MAX_LEN = 50
 SPDF_MAGIC = b"%SPDF1\n"
 
 # --- scale knobs
-DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch size for the extraction UDFs.  Round-1 used 64 (straggler
 # control); the layout kernel now runs one task per core over the
 # coalesced payload scan, and bigger batches cut JVM<->Python handoffs:

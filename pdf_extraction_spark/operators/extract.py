@@ -5,14 +5,11 @@ Spark-first re-expression of the reference's per-PDF extraction loop
 
 One kernel over payload units:
 
-* **layout (mapInArrow)** — ``_layout_fn`` lays out each unit with
-  ``layout.extract_payload``, the format sniff the oracle also uses,
-  and the heavy glyph->line->block analysis (operators/layout.py,
-  vectorized numpy inside Arrow batches).  This is the only Python
-  node in the plan.  Arrow-native in AND out: inputs are read straight
-  off the record batch and outputs build with RecordBatch.from_pylist,
-  skipping the pandas materialization mapInPandas pays in both
-  directions.
+* **layout** — ``_layout_task``'s row function lays out each unit
+  with ``layout.extract_payload``, the format sniff the oracle also
+  uses, and the heavy glyph->line->block analysis (operators/layout.py,
+  numpy).  It runs through ``rowmap.map_rows``, the engine's one
+  Arrow-native row kernel, and is the only Python node in the plan.
 * **skew defense** (north_star "salted repartitioning on url-hash to
   defeat giant-PDF skew") — an SPDF payload over SPLIT_BYTES_THRESHOLD
   is split in Catalyst: the container keeps one JSON record per page
@@ -29,7 +26,8 @@ One kernel over payload units:
 
 Each output row carries (partition_id, bytes_in, wall_ms) so the
 pipeline aggregates the per-partition lineage/metrics table
-(north_star) without a second pass.
+(north_star) without a second pass.  wall_ms is the task's running
+layout wall, so no task holds more than one Arrow batch of page rows.
 """
 
 from __future__ import annotations
@@ -40,6 +38,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..constants import SPDF_MAGIC
 from ..schemas import PAGES
+from .rowmap import map_rows
 
 PAGES_EXT = T.StructType(
     PAGES.fields
@@ -112,59 +111,33 @@ def _empty_doc_row(url: str, host: str) -> dict:
     }
 
 
-def _arrow_out_schema():
-    """PAGES_EXT as a pyarrow schema (cached): mapInArrow batches are
-    built directly with pa.RecordBatch.from_pylist — the nested
-    blocks/tables/figures structs convert in C++ instead of taking the
-    pandas object-column detour both mapInPandas directions pay."""
-    global _ARROW_SCHEMA
-    if _ARROW_SCHEMA is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        _ARROW_SCHEMA = to_arrow_schema(PAGES_EXT)
-    return _ARROW_SCHEMA
-
-
-_ARROW_SCHEMA = None
-
-
-def _layout_fn(it):
-    """Payload units -> page rows, Arrow-native (mapInArrow).  Each
-    unit is laid out by ``layout.extract_payload``; its pages are
-    renumbered from the unit's ``first_page`` and share its
-    ``bytes_in`` evenly, and a unit with no pages yields one empty
-    sentinel row (page_no=0) that carries all of it."""
-    import pyarrow as pa
+def _layout_task():
+    """Per-task layout row function over a payload unit (url, host,
+    content_hash, payload, first_page, bytes_in).  Each unit is laid
+    out by ``layout.extract_payload``; its pages are renumbered from the
+    unit's ``first_page`` and share its ``bytes_in`` evenly, and a unit
+    with no pages yields one empty sentinel row (page_no=0) that carries
+    all of it.  ``wall_ms`` runs from the task's start, so its max over
+    a partition is the partition's layout wall."""
     from pyspark import TaskContext
 
     from .layout import extract_payload
 
     pid = TaskContext.get().partitionId() if TaskContext.get() else -1
     t0 = time.monotonic()
-    batches = []
-    for rb in it:
-        rows = []
-        cols = [rb.column(rb.schema.get_field_index(n)).to_pylist()
-                for n in ("url", "host", "payload", "first_page",
-                          "bytes_in", "content_hash")]
-        for url, host, payload, first_page, bytes_in, chash in zip(*cols):
-            unit_rows = [
-                _page_to_row(page, url, host, first_page)
-                for page in extract_payload(payload)
-            ] or [_empty_doc_row(url, host)]
-            for row in unit_rows:
-                row["bytes_in"] = bytes_in // len(unit_rows)
-                row["content_hash"] = chash
-            rows += unit_rows
-        if rows:
-            batches.append(rows)
-    schema = _arrow_out_schema()
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    for rows in batches:
+
+    def unit_rows(url, host, content_hash, payload, first_page, bytes_in):
+        rows = [
+            _page_to_row(page, url, host, first_page)
+            for page in extract_payload(payload)
+        ] or [_empty_doc_row(url, host)]
+        wall_ms = int((time.monotonic() - t0) * 1000)
         for row in rows:
-            row["partition_id"] = pid
-            row["wall_ms"] = wall_ms
-        yield pa.RecordBatch.from_pylist(rows, schema=schema)
+            row.update(partition_id=pid, bytes_in=bytes_in // len(rows),
+                       wall_ms=wall_ms, content_hash=content_hash)
+        return rows
+
+    return unit_rows
 
 
 def extract_stage(input_df: DataFrame) -> DataFrame:
@@ -222,4 +195,4 @@ def extract_stage(input_df: DataFrame) -> DataFrame:
         )
         .repartition(F.xxhash64("url", "first_page"))
     )
-    return docs.unionByName(page_units).mapInArrow(_layout_fn, PAGES_EXT)
+    return map_rows(docs.unionByName(page_units), PAGES_EXT, _layout_task)

@@ -1,20 +1,22 @@
 """Multimodal column operators: image/audio/video as opaque binary
 columns with typed metadata.
 
-The Spark-side plumbing — schemas, Arrow batch shapes, mapInPandas
-signatures, partitioning — is real and tested; the codec step itself is
-a clearly-marked deterministic stand-in (this container has no
-image/audio libraries; a deployment swaps `_decode_stub` for
-PIL/libsndfile/pyav behind the same batch interface).
+The Spark-side plumbing — schemas, Arrow batches, partitioning — is
+real and tested: every operator is a row function run through the
+engine's one Arrow row kernel (``rowmap.map_rows``).  The codec step
+itself is a clearly-marked deterministic stand-in (no image/audio
+libraries are assumed; a deployment swaps `_decode_stub` for
+PIL/libsndfile/pyav behind the same row interface, loading any model
+in the kernel's per-task setup).
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from .rowmap import map_rows
 
 MEDIA_META = T.StructType(
     [
@@ -63,28 +65,22 @@ def _decode_stub(payload: bytes) -> tuple[str, int, int]:
 def media_metadata(df: DataFrame, id_col: str = "media_id", bin_col: str = "data") -> DataFrame:
     """Decode/inspect pass: binary -> typed metadata rows."""
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    fmt, w, h = _decode_stub(raw)
-                except ValueError:
-                    fmt, w, h = None, None, None
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_bytes": len(raw),
-                        "format": fmt,
-                        "width": w,
-                        "height": h,
-                        "sha256": hashlib.sha256(raw).hexdigest() if raw else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_META.fields])
+    def meta(mid, payload):
+        raw = payload or b""
+        try:
+            fmt, w, h = _decode_stub(raw)
+        except ValueError:
+            fmt, w, h = None, None, None
+        yield {
+            "media_id": mid,
+            "n_bytes": len(raw),
+            "format": fmt,
+            "width": w,
+            "height": h,
+            "sha256": hashlib.sha256(raw).hexdigest() if raw else None,
+        }
 
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(fn, MEDIA_META)
+    return map_rows(df.select(id_col, bin_col), MEDIA_META, lambda: meta)
 
 
 def frame_sample(
@@ -94,20 +90,13 @@ def frame_sample(
     fixed-size byte slices; a real impl yields decoded video frames)."""
     frame_bytes = 256
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload) if payload is not None else b""
-                frames = [
-                    raw[i: i + frame_bytes]
-                    for i in range(0, len(raw), frame_bytes)
-                ]
-                for fno, fr in enumerate(frames[::every_n]):
-                    rows.append({"media_id": int(mid), "frame_no": fno, "frame": fr})
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def frames(mid, payload):
+        raw = payload or b""
+        sliced = [raw[i: i + frame_bytes] for i in range(0, len(raw), frame_bytes)]
+        for fno, fr in enumerate(sliced[::every_n]):
+            yield {"media_id": mid, "frame_no": fno, "frame": fr}
 
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(fn, FRAME_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), FRAME_SCHEMA, lambda: frames)
 
 
 RENDER_SCHEMA = T.StructType(
@@ -137,45 +126,33 @@ def render_pages(
 
     from ..functions.raster import encode_spm
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for url, page_no, page_w, page_h, blocks in zip(
-                pdf["url"], pdf["page_no"], pdf["page_w"], pdf["page_h"],
-                pdf["blocks"],
-            ):
-                pw, ph = float(page_w or 0), float(page_h or 0)
-                if pw <= 0 or ph <= 0:
-                    rows.append({"url": url, "page_no": int(page_no),
-                                 "width": None, "height": None, "image": None,
-                                 "ink_ratio": None})
-                    continue
-                s = min(scale, max_px / max(pw, ph))
-                w, h = max(1, int(pw * s)), max(1, int(ph * s))
-                px = np.full((h, w, 3), 255, dtype=np.uint8)
-                ink = 0
-                for blk in (blocks if blocks is not None else []):
-                    bb = blk["bbox"] if blk is not None else None
-                    if bb is None:
-                        continue
-                    x0 = max(0, int(bb["left"] * s))
-                    x1 = min(w, int(np.ceil(bb["right"] * s)))
-                    # PDF y-up -> raster y-down
-                    y0 = max(0, int((ph - bb["top"]) * s))
-                    y1 = min(h, int(np.ceil((ph - bb["bottom"]) * s)))
-                    if x1 > x0 and y1 > y0:
-                        px[y0:y1, x0:x1] = 40
-                        ink += (x1 - x0) * (y1 - y0)
-                rows.append({
-                    "url": url, "page_no": int(page_no),
-                    "width": w, "height": h, "image": encode_spm(px),
-                    "ink_ratio": round(ink / float(w * h), 6),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in RENDER_SCHEMA.fields])
+    def render(url, page_no, page_w, page_h, blocks):
+        pw, ph = float(page_w or 0), float(page_h or 0)
+        if pw <= 0 or ph <= 0:
+            yield {"url": url, "page_no": page_no, "width": None,
+                   "height": None, "image": None, "ink_ratio": None}
+            return
+        s = min(scale, max_px / max(pw, ph))
+        w, h = max(1, int(pw * s)), max(1, int(ph * s))
+        px = np.full((h, w, 3), 255, dtype=np.uint8)
+        ink = 0
+        for blk in blocks or []:
+            bb = blk["bbox"] if blk is not None else None
+            if bb is None:
+                continue
+            x0 = max(0, int(bb["left"] * s))
+            x1 = min(w, int(np.ceil(bb["right"] * s)))
+            # PDF y-up -> raster y-down
+            y0 = max(0, int((ph - bb["top"]) * s))
+            y1 = min(h, int(np.ceil((ph - bb["bottom"]) * s)))
+            if x1 > x0 and y1 > y0:
+                px[y0:y1, x0:x1] = 40
+                ink += (x1 - x0) * (y1 - y0)
+        yield {"url": url, "page_no": page_no, "width": w, "height": h,
+               "image": encode_spm(px), "ink_ratio": round(ink / float(w * h), 6)}
 
-    return pages.select("url", "page_no", "page_w", "page_h", "blocks").mapInPandas(
-        fn, RENDER_SCHEMA
-    )
+    return map_rows(pages.select("url", "page_no", "page_w", "page_h", "blocks"),
+                    RENDER_SCHEMA, lambda: render)
 
 
 PHOTO_SCHEMA = T.StructType(
@@ -207,21 +184,15 @@ def resize_images(
     -> null output row (decoder-raises contract)."""
     from ..functions.raster import _resize_nearest, decode_spm, encode_spm
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    px = _resize_nearest(decode_spm(raw), size)
-                    rows.append({"media_id": int(mid), "width": size,
-                                 "height": size, "data": encode_spm(px)})
-                except ValueError:
-                    rows.append({"media_id": int(mid), "width": None,
-                                 "height": None, "data": None})
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    def resize(mid, payload):
+        try:
+            px = _resize_nearest(decode_spm(payload or b""), size)
+            yield {"media_id": mid, "width": size, "height": size,
+                   "data": encode_spm(px)}
+        except ValueError:
+            yield {"media_id": mid, "width": None, "height": None, "data": None}
 
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(fn, RESIZE_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), RESIZE_SCHEMA, lambda: resize)
 
 
 def photo_likeness(df: DataFrame, id_col: str = "media_id", bin_col: str = "data") -> DataFrame:
@@ -237,22 +208,17 @@ def photo_likeness(df: DataFrame, id_col: str = "media_id", bin_col: str = "data
         photo_metrics,
     )
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    cr, sm = photo_metrics(decode_spm(raw))
-                    like = cr > COLOR_RATIO_THRESHOLD and sm > SAT_MEAN_THRESHOLD
-                    rows.append({"media_id": int(mid), "color_ratio": cr,
-                                 "sat_mean": sm, "photo_like": like})
-                except ValueError:
-                    rows.append({"media_id": int(mid), "color_ratio": None,
-                                 "sat_mean": None, "photo_like": False})
-            yield pd.DataFrame(rows, columns=[f.name for f in PHOTO_SCHEMA.fields])
+    def classify(mid, payload):
+        try:
+            cr, sm = photo_metrics(decode_spm(payload or b""))
+            like = cr > COLOR_RATIO_THRESHOLD and sm > SAT_MEAN_THRESHOLD
+            yield {"media_id": mid, "color_ratio": cr, "sat_mean": sm,
+                   "photo_like": like}
+        except ValueError:
+            yield {"media_id": mid, "color_ratio": None, "sat_mean": None,
+                   "photo_like": False}
 
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(fn, PHOTO_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), PHOTO_SCHEMA, lambda: classify)
 
 
 def textless_figure_filter(
@@ -287,21 +253,14 @@ def feature_extract(df: DataFrame, dim: int = 16, id_col: str = "media_id",
                     bin_col: str = "data") -> DataFrame:
     """Feature-extraction shape (stand-in: hash-derived unit vector;
     real impl: CNN/CLIP embedding behind the same Arrow batches)."""
+    import numpy as np
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def feature(mid, payload):
+        digest = hashlib.sha256(payload or b"").digest()
+        v = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4],
+                          dtype=np.uint8).astype(np.float32)
+        v = v.reshape(dim, 4).sum(axis=1)
+        norm = float(np.linalg.norm(v)) or 1.0
+        yield {"media_id": mid, "feature": (v / norm).tolist()}
 
-        for pdf in it:
-            ids, feats = [], []
-            for mid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload) if payload is not None else b""
-                digest = hashlib.sha256(raw).digest()
-                v = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4],
-                                  dtype=np.uint8).astype(np.float32)
-                v = v.reshape(dim, 4).sum(axis=1)
-                norm = float(np.linalg.norm(v)) or 1.0
-                ids.append(int(mid))
-                feats.append((v / norm).tolist())
-            yield pd.DataFrame({"media_id": ids, "feature": feats})
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(fn, FEATURE_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), FEATURE_SCHEMA, lambda: feature)

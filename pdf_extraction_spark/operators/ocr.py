@@ -2,9 +2,10 @@
 
 Mirrors the dataflow shape of the reference's RapidOCR stage
 (table_ocr.py:125-133, run over flagged artifacts with model init
-amortized per batch): filter the tiny ocr_triggered subset, decode in
-a batched ``mapInPandas`` (where a real deployment would host the OCR
-model per executor), and join the text back.
+amortized per batch): filter the tiny ocr_triggered subset, decode it
+through the engine's one Arrow row kernel (``rowmap.map_rows``, whose
+per-task setup is where a real deployment would load the OCR model),
+and union the text back.
 
 The character-recognition step itself is the deterministic stand-in
 mandated by the sandbox (north_rule allows a rule-based OCR pass): the
@@ -15,29 +16,22 @@ is the real thing.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..schemas import OCR_TEXT
+from .rowmap import map_rows
 
 
-def _decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # per-partition heavyweight init would happen here (model load);
+def _ocr_task():
+    # per-task heavyweight init would happen here (model load);
     # the stand-in decoder needs none.
-    for pdf in it:
-        texts = []
-        for payload in pdf["ocr_payload"]:
-            text = ""
-            if payload is not None:
-                raw = bytes(payload)
-                if raw.startswith(b"OCRTEXT:"):
-                    text = raw[len(b"OCRTEXT:"):].decode("utf-8", errors="replace")
-            texts.append(text.strip())
-        yield pd.DataFrame(
-            {"url": pdf["url"], "page_no": pdf["page_no"], "ocr_text": texts}
-        )
+    def decode(url, page_no, payload):
+        text = ""
+        if payload is not None and payload.startswith(b"OCRTEXT:"):
+            text = payload[len(b"OCRTEXT:"):].decode("utf-8", errors="replace")
+        yield {"url": url, "page_no": page_no, "ocr_text": text.strip()}
+
+    return decode
 
 
 def ocr_stage(pages: DataFrame) -> DataFrame:
@@ -45,7 +39,7 @@ def ocr_stage(pages: DataFrame) -> DataFrame:
     flagged = pages.filter(F.col("ocr_triggered")).select(
         "url", "page_no", "ocr_payload"
     )
-    return flagged.mapInPandas(_decode_batch, OCR_TEXT)
+    return map_rows(flagged, OCR_TEXT, _ocr_task)
 
 
 def merge_ocr(page_text: DataFrame, ocr_text: DataFrame) -> DataFrame:

@@ -16,6 +16,7 @@ a killed job resumes at the last committed snapshot (north_rule).
 from __future__ import annotations
 
 import argparse
+import os
 import time
 import uuid
 
@@ -317,7 +318,8 @@ def main() -> int:
 
     ap = argparse.ArgumentParser(description="run the extraction pipeline on a synthetic corpus and check against the oracle")
     ap.add_argument("--n-docs", type=int, default=200)
-    ap.add_argument("--out", default="/root/repo/.work/pipeline")
+    checkout = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    ap.add_argument("--out", default=os.path.join(checkout, ".work", "pipeline"))
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--fail-after", default=None)
     ap.add_argument("--skip-oracle", action="store_true")

@@ -466,7 +466,7 @@ FROM pairs ORDER BY cosine DESC, vec_id ASC LIMIT 5
 
 def q_multimodal_meta(spark, sf_dir):
     """Opaque binary payload plumbing: byte length + content hash
-    (decode itself is the stubbed Pandas-UDF path, operators/multimodal.py)."""
+    (decode itself is the stubbed map_rows path, operators/multimodal.py)."""
     d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",

@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .constants import ARROW_MAX_RECORDS_PER_BATCH, DEFAULT_SHUFFLE_PARTITIONS
+from .constants import ARROW_MAX_RECORDS_PER_BATCH
 
 
 def build_session(
@@ -21,19 +21,16 @@ def build_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores=None`` -> ``local[*]``.  Shuffle partitions default to the
-    core count (not Spark's 200) so small-scale runs don't drown in
-    empty tasks; on a real cluster this is set to ~2-3x total cores.
+    ``cores=None`` -> ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``.
+    Shuffle partitions default to the core count, N for ``local[N]``
+    and ``os.cpu_count()`` for ``local[*]`` (not Spark's 200), so
+    small-scale runs don't drown in empty tasks; on a real cluster this
+    is set to ~2-3x total cores.
     """
-    if cores is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env}]" if env else "local[*]"
-    else:
-        master = f"local[{cores}]"
+    cores = cores or os.environ.get("SPARK_GRAFT_CPUS")
+    master = f"local[{cores}]" if cores else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+        shuffle_partitions = int(cores) if str(cores).isdigit() else os.cpu_count()
 
     builder = (
         SparkSession.builder.master(master)

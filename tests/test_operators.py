@@ -54,6 +54,74 @@ def test_feature_extract_unit_norm(media_df):
         assert abs(n - 1.0) < 1e-5
 
 
+def test_row_kernel_streams_batch_by_batch():
+    """The row kernel builds one output batch per input batch and
+    yields it before pulling the next, so a task holds at most one
+    batch of rows however large its partition is."""
+    import pyarrow as pa
+
+    from pdf_extraction_spark.operators.rowmap import arrow_rows
+
+    events = []
+
+    def batches():
+        for i in range(3):
+            events.append(("pull", i))
+            yield pa.RecordBatch.from_pylist([{"x": 2 * i}, {"x": 2 * i + 1}])
+
+    schema = pa.schema([("x", pa.int64()), ("y", pa.int64())])
+    out = []
+    for rb in arrow_rows(batches(), lambda: lambda x: [{"x": x, "y": 10 * x}], schema):
+        events.append(("yield", len(out)))
+        out.append(rb.to_pylist())
+    assert out == [[{"x": x, "y": 10 * x} for x in (2 * i, 2 * i + 1)] for i in range(3)]
+    assert events == [(e, i) for i in range(3) for e in ("pull", "yield")]
+
+
+def test_ocr_stage_decodes_marker_payloads(spark):
+    """OCR text is the payload after the ``OCRTEXT:`` marker, decoded
+    as UTF-8 with replacement and stripped by Python's ``str.strip``
+    (Unicode whitespace too); a null or marker-less payload gives ""."""
+    from pdf_extraction_spark.operators.ocr import ocr_stage
+
+    payloads = [None, b"no marker", b"OCRTEXT:  caf\xc3\xa9 \n",
+                b"OCRTEXT:\xff\xfeok", "OCRTEXT:\u3000x\x1c".encode()]
+    rows = [(f"https://h.example/doc{i}", i + 1, True, p) for i, p in enumerate(payloads)]
+    rows.append(("https://h.example/unflagged", 1, False, b"OCRTEXT:skipped"))
+    pages = spark.createDataFrame(
+        rows, "url string, page_no int, ocr_triggered boolean, ocr_payload binary"
+    )
+    got = {(r.url, r.page_no): r.ocr_text for r in ocr_stage(pages).collect()}
+    assert got == {
+        (url, page_no): p[8:].decode("utf-8", "replace").strip()
+        if p is not None and p.startswith(b"OCRTEXT:") else ""
+        for url, page_no, _, p in rows[:-1]
+    }
+    assert [got[(f"https://h.example/doc{i}", i + 1)] for i in (2, 3, 4)] == [
+        "café", "\ufffd\ufffdok", "x"]
+
+
+def test_python_operators_plan_one_arrow_node(spark, media_df):
+    """OCR and the media operators each plan one MapInArrow node (the
+    row kernel) and no pandas node."""
+    from pdf_extraction_spark.operators.ocr import ocr_stage
+
+    pages = spark.createDataFrame(
+        [("https://h.example/doc0", 1, True, b"OCRTEXT:x", 10.0, 10.0, [])],
+        "url string, page_no int, ocr_triggered boolean, ocr_payload binary, "
+        "page_w double, page_h double, blocks array<struct<bbox:struct<"
+        "left:double,right:double,top:double,bottom:double>>>",
+    )
+    frames = [ocr_stage(pages), multimodal.render_pages(pages)] + [
+        op(media_df) for op in (multimodal.media_metadata, multimodal.frame_sample,
+                                multimodal.resize_images, multimodal.photo_likeness,
+                                multimodal.feature_extract)
+    ]
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+
+
 def test_streaming_available_now_dedup(spark, work_dir):
     from pdf_extraction_spark.sources.corpus import corpus_df
 

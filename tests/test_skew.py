@@ -39,16 +39,12 @@ def test_giant_doc_pages_scatter(spark):
     assert max(r["count"] for r in dist) <= 15
 
 
-def test_small_docs_single_python_stage(spark):
+def test_small_docs_single_python_stage(spark, tmp_path):
     """The small-doc path must not shuffle payloads: its physical plan
     has no Exchange between the parquet scan and the layout UDF."""
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory(dir="/root/repo/.work" if os.path.isdir("/root/repo/.work") else None) as d:
-        corpus_df(spark, 20).write.parquet(f"{d}/c")
-        inp = spark.read.parquet(f"{d}/c")
-        plan = extract_stage(inp)._jdf.queryExecution().executedPlan().toString()
+    corpus_df(spark, 20).write.parquet(f"{tmp_path}/c")
+    inp = spark.read.parquet(f"{tmp_path}/c")
+    plan = extract_stage(inp)._jdf.queryExecution().executedPlan().toString()
     # exactly one exchange: the big-doc scatter; the whole-document
     # branch reads scan -> filter -> project -> coalesce -> union ->
     # mapInArrow with no shuffle, and both branches share the one
