@@ -1,7 +1,7 @@
 """Pure-Python spec functions (no Spark imports).
 
 Each mirrors a reference function 1:1 (cited); used by the driver-side
-helpers, the pandas UDFs, and property tests.  The distributed engine
+helpers, the chunk row kernel, and property tests.  The distributed engine
 expresses the same logic as Catalyst column expressions wherever
 possible (see operators/boilerplate.py) — these remain the executable
 spec they are tested against.

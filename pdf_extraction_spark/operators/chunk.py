@@ -2,38 +2,31 @@
 chunk_text) rows (the north_star RAG-chunking stage).
 
 Re-expresses the reference's RecursiveCharacterTextSplitter usage
-(build_vector_db.py:369-373,399-403) as exact substring spans.  Span
-computation is a vectorized pandas UDF returning an array of structs;
-the substring materialization stays JVM-side so chunk bytes never
-round-trip through Python — and the invariant
-``chunk_text == substring(extracted_text, start+1, end-start)`` is
-enforced by construction.
+(build_vector_db.py:369-373,399-403) as exact substring spans.  Both
+chunkers are one row function run through ``rowmap.map_rows``, the
+engine's one Arrow-native row kernel: each text's spans come from
+``text_pure.chunk_spans`` and each chunk is sliced from the same
+string, so ``chunk_text == text[span_start:span_end]`` holds by
+construction.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text_pure import chunk_spans
-
-SPAN = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start", T.IntegerType(), False),
-            T.StructField("end", T.IntegerType(), False),
-        ]
-    )
-)
+from ..schemas import CHUNKS, TYPED_CHUNKS
+from .rowmap import map_rows
 
 
-@F.pandas_udf(SPAN)
-def _spans_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: [
-            {"start": s, "end": e} for s, e in chunk_spans(t or "")
-        ]
-    )
+def _chunk_rows(url, text, page_no=None):
+    """One row per ``chunk_spans`` span of ``text``, keyed for both
+    CHUNKS and TYPED_CHUNKS (``from_pylist`` reads only the keys its
+    schema names); the span index is the page_text ``chunk_id``."""
+    for i, (s, e) in enumerate(chunk_spans(text or "")):
+        yield {"url": url, "page_no": page_no, "chunk_id": i,
+               "source_type": "page_text", "span_start": s, "span_end": e,
+               "chunk_text": text[s:e]}
 
 
 def assemble_documents(page_text: DataFrame) -> DataFrame:
@@ -56,19 +49,8 @@ def assemble_documents(page_text: DataFrame) -> DataFrame:
 
 def chunk_stage(documents: DataFrame) -> DataFrame:
     """(url, extracted_text) -> chunk rows."""
-    spans = documents.select(
-        "url",
-        "extracted_text",
-        F.explode(_spans_udf(F.col("extracted_text"))).alias("span"),
-    )
-    return spans.select(
-        "url",
-        F.col("span.start").alias("span_start"),
-        F.col("span.end").alias("span_end"),
-        F.expr(
-            "substring(extracted_text, span.start + 1, span.end - span.start)"
-        ).alias("chunk_text"),
-    )
+    return map_rows(documents.select("url", "extracted_text"), CHUNKS,
+                    lambda: _chunk_rows)
 
 
 def typed_chunk_stage(page_text: DataFrame, pages: DataFrame) -> DataFrame:
@@ -77,31 +59,21 @@ def typed_chunk_stage(page_text: DataFrame, pages: DataFrame) -> DataFrame:
     metadata at :354-366):
 
     * page_text — the separator-aware splitter over each page's
-      stripped text (posexplode keeps the span index as chunk_id);
+      stripped text (the span index is chunk_id);
     * table     — title + row-major cell text per detected table;
     * figure    — caption + description per detected figure.
 
     -> (url, page_no, chunk_id, source_type, chunk_text).  chunk_id is
     unique within (url, page_no, source_type); region chunks offset by
     region_index.  Table/figure text is pure Catalyst over the nested
-    page structs (no Python, no shuffle); only the page splitter uses
-    the pandas UDF, same as chunk_stage.
+    page structs (no Python, no shuffle); only the page splitter runs
+    Python, the same row function as chunk_stage.
     """
-    pg = (
+    pg = map_rows(
         page_text.filter(F.length(F.coalesce("page_text", F.lit(""))) > 0)
-        .select(
-            "url", "page_no", "page_text",
-            F.posexplode(_spans_udf(F.col("page_text"))).alias("pos", "span"),
-        )
-        .select(
-            "url",
-            "page_no",
-            F.col("pos").cast("long").alias("chunk_id"),
-            F.lit("page_text").alias("source_type"),
-            F.expr(
-                "substring(page_text, span.start + 1, span.end - span.start)"
-            ).alias("chunk_text"),
-        )
+        .select("url", "page_text", "page_no"),
+        TYPED_CHUNKS,
+        lambda: _chunk_rows,
     )
     body = pages.filter(F.col("page_no") > 0)
     tables = (

@@ -61,6 +61,13 @@ def host_col() -> Column:
     return F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
 
 
+def content_hash_col() -> Column:
+    """md5 of the raw ``html`` payload, a null payload hashed as empty,
+    so the incremental change detector's hash of an unchanged null
+    payload equals the one stamped on its committed pages."""
+    return F.md5(F.coalesce("html", F.lit(b"")))
+
+
 def _page_to_row(page: dict, url: str, host: str, first_page: int) -> dict:
     tables = [
         {
@@ -163,7 +170,7 @@ def extract_stage(input_df: DataFrame) -> DataFrame:
     # narrow coalesce: one layout task per core, not one per scan split
     base = input_df.select(
         "url", host_col().alias("host"),
-        F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
+        content_hash_col().alias("content_hash"),
         F.col("html").alias("payload"),
         F.octet_length(F.coalesce("html", F.lit(b""))).cast("long").alias("bytes_in"),
     ).coalesce(input_df.sparkSession.sparkContext.defaultParallelism)

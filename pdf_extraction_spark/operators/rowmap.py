@@ -1,11 +1,12 @@
 """The engine's one Python row kernel: rows in, rows out, Arrow both ways.
 
-Layout, OCR decode and the media operators are row functions over a
-DataFrame's columns; ``map_rows`` runs any of them through one
-``mapInArrow``.  Record batches are read with ``to_pylist`` and built
-with ``RecordBatch.from_pylist`` (nested structs convert in C++), so no
-batch takes the pandas detour ``mapInPandas`` pays in both directions
-(PAPERS.md, "Accelerating Python UDFs in Vectorized Query Execution").
+Layout, OCR decode, the media operators and both chunkers are row
+functions over a DataFrame's columns; ``map_rows`` runs any of them
+through one ``mapInArrow``.  Record batches are read with
+``to_pylist`` and built with ``RecordBatch.from_pylist`` (nested
+structs convert in C++), so no batch takes the pandas detour
+``mapInPandas`` pays in both directions (PAPERS.md, "Accelerating
+Python UDFs in Vectorized Query Execution").
 """
 
 from __future__ import annotations

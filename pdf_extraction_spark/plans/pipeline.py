@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.boilerplate import boilerplate_patterns, strip_stage
 from ..operators.chunk import assemble_documents, chunk_stage
-from ..operators.extract import extract_stage
+from ..operators.extract import content_hash_col, extract_stage
 from ..operators.ocr import merge_ocr, ocr_stage
 from . import stage_store
 
@@ -213,13 +213,7 @@ def run_incremental(
     stage_store.gc_all(out_root, kinds=("old",))  # same leftover hygiene as run_pipeline
 
     committed = stage_store.read_stage(spark, out_root, "pages")
-    # MUST be the exact expression extract_stage stamps (extract.py:94,
-    # 260) — a bare md5("html") maps null payloads to null, and
-    # eqNullSafe would then flag every null-payload url as changed on
-    # every run, so incremental never converges to a no-op for them
-    inp_h = input_df.select(
-        "url", F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash")
-    )
+    inp_h = input_df.select("url", content_hash_col().alias("content_hash"))
     new_urls = inp_h.join(
         committed.select("url").distinct(), "url", "left_anti"
     ).select("url")

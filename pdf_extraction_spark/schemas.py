@@ -126,6 +126,18 @@ CHUNKS = T.StructType(
     ]
 )
 
+# vector-DB chunks: page_text spans plus table and figure text, tagged
+# by source_type (reference build_vector_db.py:473-527)
+TYPED_CHUNKS = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_no", T.IntegerType(), False),
+        T.StructField("chunk_id", T.LongType(), False),
+        T.StructField("source_type", T.StringType(), False),
+        T.StructField("chunk_text", T.StringType(), False),
+    ]
+)
+
 # per-partition lineage/metrics (north_star; FIXTURES.md §3)
 METRICS = T.StructType(
     [

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import host_col
-from ..schemas import INPUT
+from ..schemas import INPUT, TYPED_CHUNKS
 
 
 def stream_source(spark: SparkSession, path: str) -> DataFrame:
@@ -130,12 +130,6 @@ def sessionize_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-TYPED_CHUNKS_DDL = (
-    "url string, page_no int, chunk_id long, source_type string, "
-    "chunk_text string"
-)
-
-
 def stream_vector_build(
     spark: SparkSession, chunks_path: str, out_path: str, checkpoint: str,
 ):
@@ -149,7 +143,7 @@ def stream_vector_build(
     from ..operators.similarity import bucket_col
 
     chunks = (
-        spark.readStream.schema(TYPED_CHUNKS_DDL)
+        spark.readStream.schema(TYPED_CHUNKS)
         .option("maxFilesPerTrigger", 16)
         .parquet(chunks_path)
     )

@@ -147,6 +147,29 @@ def test_incremental_downstream_is_host_scoped(spark, work_dir):
     assert bad == 0
 
 
+def test_incremental_null_payload_unchanged_is_noop(spark, work_dir):
+    """A url whose html is null hashes the same in the change detector
+    as on its committed pages, so re-running the same input is a no-op:
+    no stage is re-committed or upserted."""
+    from pyspark.sql import functions as F
+
+    from pdf_extraction_spark.plans.pipeline import STAGES
+
+    root = f"{work_dir}/nullpayload"
+    base = corpus_df(spark, 12)
+    null_url = base.select("url").orderBy("url").first().url
+    inp = base.withColumn(
+        "html", F.when(F.col("url") == null_url, F.lit(None)).otherwise(F.col("html"))
+    )
+    assert inp.filter(F.col("html").isNull()).count() == 1
+    run_pipeline(spark, inp, root, resume=False, run_id="base")
+
+    run_incremental(spark, inp, root, run_id="again")
+    for stage in STAGES:
+        info = stage_store.marker_info(root, stage)
+        assert info["run_id"] == "base" and "upserts" not in info, (stage, info)
+
+
 def test_incremental_after_pages_only_commits_text_stages(spark, work_dir):
     """A run killed after pages leaves no text stage to merge into: the
     increment upserts pages, then commits the text stages corpus-wide

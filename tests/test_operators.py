@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark.functions import text_pure
 from pdf_extraction_spark.operators import multimodal, retrieval
+from pdf_extraction_spark.schemas import PAGES, TYPED_CHUNKS
 from pdf_extraction_spark.streaming import ingest
 
 
@@ -120,6 +121,52 @@ def test_python_operators_plan_one_arrow_node(spark, media_df):
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+
+
+def _chunker_frames(spark, text):
+    """chunk_stage over one doc and typed_chunk_stage over the same text
+    as that doc's one page (no tables or figures)."""
+    from pdf_extraction_spark.operators.chunk import chunk_stage, typed_chunk_stage
+
+    url = "https://h.example/doc0"
+    docs = spark.createDataFrame([(url, text)], "url string, extracted_text string")
+    page_text = spark.createDataFrame(
+        [(url, 1, text, False)],
+        "url string, page_no int, page_text string, ocr_triggered boolean",
+    )
+    return url, chunk_stage(docs), typed_chunk_stage(page_text, spark.createDataFrame([], PAGES))
+
+
+def test_chunkers_plan_one_arrow_node(spark):
+    """chunk_stage and typed_chunk_stage each plan one MapInArrow node
+    (the row kernel) and no pandas UDF node."""
+    _, chunks, typed = _chunker_frames(spark, "alpha. beta\n\ngamma")
+    for df in (chunks, typed):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan, plan
+
+
+def test_chunkers_slice_multibyte_text_by_code_point(spark):
+    """Chunks of a text mixing Hangul, astral-plane emoji and combining
+    marks are its code-point slices at ``chunk_spans``' spans, in both
+    chunkers (the span index is the page_text chunk_id)."""
+    parts = ["한국어 문장입니다", "🙂🚀 emoji 𝔘𝔫𝔦", "e\u0301te\u0301 cafe\u0301",
+             "plain words here"]
+    seps = ["\n\n", "\n", ". ", " "]
+    text = "".join(parts[i % 4] + seps[i % 3] for i in range(120))
+    assert len(text) > 1500 and len(text.encode()) > len(text)
+    spans = text_pure.chunk_spans(text)
+    assert len(spans) > 3
+
+    url, chunks, typed = _chunker_frames(spark, text)
+    got = sorted((r.url, r.span_start, r.span_end, r.chunk_text) for r in chunks.collect())
+    assert got == [(url, s, e, text[s:e]) for s, e in spans]
+    got_typed = sorted(
+        (r.chunk_id, r.chunk_text)
+        for r in typed.filter("source_type = 'page_text'").collect()
+    )
+    assert got_typed == [(i, text[s:e]) for i, (s, e) in enumerate(spans)]
 
 
 def test_streaming_available_now_dedup(spark, work_dir):
@@ -297,7 +344,7 @@ def test_streaming_vector_build(spark, work_dir):
          f"chunk text number {i} alpha beta")
         for i in range(40)
     ]
-    df1 = spark.createDataFrame(rows1, ingest.TYPED_CHUNKS_DDL)
+    df1 = spark.createDataFrame(rows1, TYPED_CHUNKS)
     df1.write.mode("overwrite").parquet(inp)
     q = ingest.stream_vector_build(spark, inp, out, ck)
     q.awaitTermination(180)
@@ -309,7 +356,7 @@ def test_streaming_vector_build(spark, work_dir):
          f"late chunk {i} gamma delta")
         for i in range(40, 55)
     ]
-    spark.createDataFrame(rows2, ingest.TYPED_CHUNKS_DDL).write.mode(
+    spark.createDataFrame(rows2, TYPED_CHUNKS).write.mode(
         "append"
     ).parquet(inp)
     q2 = ingest.stream_vector_build(spark, inp, out, ck)

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.functions import text_pure
 from pdf_extraction_spark.operators import retrieval
 from pdf_extraction_spark.operators.embed import EMBED_DIM
 from pdf_extraction_spark.plans import stage_store
@@ -33,7 +34,17 @@ def test_typed_chunks_cover_three_sources(built, spark):
         .count().filter("count > 1").count()
     )
     assert dupes == 0
-    # page_text chunks re-assemble each page's stripped text
+    # page_text chunks are chunk_spans over each page's committed
+    # stripped text, the span index as chunk_id
+    pages_text = {(r.url, r.page_no): r.page_text for r in out["page_text"].collect()}
+    got: dict = {}
+    for r in typed.filter("source_type = 'page_text'").collect():
+        got.setdefault((r.url, r.page_no), []).append((r.chunk_id, r.chunk_text))
+    want = {
+        key: [(i, t[s:e]) for i, (s, e) in enumerate(text_pure.chunk_spans(t))]
+        for key, t in pages_text.items() if t
+    }
+    assert got and {k: sorted(v) for k, v in got.items()} == want
     n_table = typed.filter("source_type = 'table'").count()
     n_fig = typed.filter("source_type = 'figure'").count()
     assert n_table > 0 and n_fig > 0
