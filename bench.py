@@ -5,7 +5,8 @@ queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] plus the end-to-end extraction pipeline on a
 deterministic synthetic corpus, and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-(extra keys: docs_per_sec, extract_docs, cpus).
+(extra keys: docs_per_sec, extract_docs, cpus, and driver_jvm_xx_args,
+the driver JVM's -XX: flags, which name the JIT tier behind the numbers).
 """
 
 from __future__ import annotations
@@ -27,14 +28,20 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def wait_quiet(max_wait: float = 600.0, bar: float = 5.0) -> float:
+# the quiet-window bar: loadavg 5 on the 32-core host the gate was set
+# on, scaled to this host's cores (a fixed 5 filters nothing on 4)
+QUIET_BAR = max(1.0, 5.0 * len(os.sched_getaffinity(0)) / 32)
+
+
+def wait_quiet(max_wait: float = 600.0, bar: float = QUIET_BAR) -> float:
     """PRE-REGISTERED QUIET-WINDOW GATE (round-3 verdict item 3,
     extended to the per-query suite in round 5): co-tenant bursts are
-    the dominant noise on this host (pair efficiency 0.388 @ loadavg 13
-    vs 0.88 @ 4.4), so measurement blocks WAIT for loadavg(1m) < bar
-    before starting (up to max_wait; the loadavg actually seen is
-    recorded in the output).  A noise gate chosen before the session,
-    never a post-hoc filter of unfavourable results."""
+    the dominant noise on a shared host (pair efficiency 0.388 @ loadavg
+    13 vs 0.88 @ 4.4 on 32 cores), so measurement blocks WAIT for
+    loadavg(1m) < bar before starting (up to max_wait; the loadavg
+    actually seen is recorded in the output).  A noise gate chosen
+    before the session, never a post-hoc filter of unfavourable
+    results."""
     waited = 0.0
     while True:
         with open("/proc/loadavg") as fh:
@@ -260,7 +267,8 @@ def main() -> int:
         "statistic": "median per query across rounds",
         "loadavg_before_rounds": round_loads,
         "calib_docs_per_sec": round_calibs,
-        "gate": "loadavg(1m) < 5, up to 600s wait per round; "
+        "gate": f"loadavg(1m) < {QUIET_BAR:g} (5 x cores/32, at least 1), "
+                "up to 600s wait per round; "
                 "calib = v5 observational single-core host-speed "
                 "probe per round (never a filter)",
         "all_runs": all_runs,
@@ -280,6 +288,11 @@ def main() -> int:
         "extract_stage_docs_per_sec": extract_stage_dps,
         "extract_docs": n_docs,
         "cpus": args.cpus,
+        "driver_jvm_xx_args": [
+            a for a in spark.sparkContext._jvm.java.lang.management
+            .ManagementFactory.getRuntimeMXBean().getInputArguments()
+            if a.startswith("-XX:")
+        ],
         "corpus_v2": corpus_v2_block,
         "query_provenance": query_provenance,
     }

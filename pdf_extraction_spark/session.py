@@ -84,6 +84,24 @@ def build_session(
         # hundred MB of metaspace at most; same value is appropriate on
         # a cluster driver/executors.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # Driver JVM on C1 only.  A cold 2000-doc pipeline pass (4 cores)
+        # spent 14.1-19.6 CPU-s in HotSpot's C2 compiler threads, about
+        # half the JVM's CPU and twice all executor task threads', on
+        # Spark, Parquet, Janino and java.* code that the job ends
+        # before it pays back.  C1 only: pipeline_2k op_cpu_s 48.2 ->
+        # 26.7 s, queries_sf0.03 op_cpu_s 27.2 -> 21.2 s.  The price:
+        # a warm query loop runs C1 code, queries_sf0.03 query_suite_s
+        # 10.6 -> 13.7 s (+29%), mostly the spatial and hashing queries
+        # (BENCH/JIT_POLICY.md).  Driver only: in local mode the driver
+        # JVM is the whole engine, and on a cluster it is the control
+        # plane (planning, codegen, scheduling), one-shot code that C2
+        # never pays back; executors keep tiered C2.
+        # defaultJavaOptions goes in front of a caller's
+        # spark.driver.extraJavaOptions, so extra_conf cannot drop it.
+        # Under spark-submit pass the same flag with
+        # --driver-java-options (or this conf key).  Results do not
+        # move: on JDK 17 all floating point is strict (JEP 306).
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
