@@ -2,8 +2,9 @@
 
 Default mode (what the per-round driver runs): times the headline
 queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] plus the end-to-end extraction pipeline on a
-deterministic synthetic corpus, and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on)
+plus the end-to-end extraction pipeline on a deterministic synthetic
+corpus, and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 (extra keys: docs_per_sec, extract_docs, cpus, and driver_jvm_xx_args,
 the driver JVM's -XX: flags, which name the JIT tier behind the numbers).
@@ -28,9 +29,11 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
+# the cores this process may run on: the default --cpus
+CORES = len(os.sched_getaffinity(0))
 # the quiet-window bar: loadavg 5 on the 32-core host the gate was set
 # on, scaled to this host's cores (a fixed 5 filters nothing on 4)
-QUIET_BAR = max(1.0, 5.0 * len(os.sched_getaffinity(0)) / 32)
+QUIET_BAR = max(1.0, 5.0 * CORES / 32)
 
 
 def wait_quiet(max_wait: float = 600.0, bar: float = QUIET_BAR) -> float:
@@ -170,7 +173,7 @@ def headline_queries(sf_dir: str):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", CORES)))
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--extract-docs", type=int, default=None)

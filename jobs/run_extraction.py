@@ -28,14 +28,14 @@ def main() -> int:
     spark = SparkSession.builder.appName("pdf_extraction_spark").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from pdf_extraction_spark.plans.pipeline import run_incremental, run_pipeline
+    from pdf_extraction_spark.plans.pipeline import STAGES, run_incremental, run_pipeline
 
     inp = spark.read.parquet(args.input)
     if args.incremental:
         out = run_incremental(spark, inp, args.out)
     else:
         out = run_pipeline(spark, inp, args.out, resume=not args.no_resume)
-    for name in ("pages", "doc_text", "chunks"):
+    for name in STAGES:
         print(f"{name}: {out[name].count()} rows")
     if args.vectors:
         from pdf_extraction_spark.plans.pipeline import run_vector_build

@@ -210,25 +210,13 @@ def jaccard_semantic(
     )
 
 
-def minmax_normalize(
-    df: DataFrame, col: str, out_col: str, eps: float = NORM_EPS
-) -> DataFrame:
-    """A9 (reference search_vector_db.py:160-166): constant -> 0.5."""
-    stats = df.agg(F.min(col).alias("_mn"), F.max(col).alias("_mx"))
-    j = df.crossJoin(F.broadcast(stats))
-    norm = F.when(
-        (F.col("_mx") - F.col("_mn")) < eps, F.lit(0.5)
-    ).otherwise((F.col(col) - F.col("_mn")) / (F.col("_mx") - F.col("_mn")))
-    return j.withColumn(out_col, norm).drop("_mn", "_mx")
-
-
 def minmax_normalize_many(
     df: DataFrame, cols: dict[str, str], eps: float = NORM_EPS
 ) -> DataFrame:
-    """A9 for several columns in ONE stats pass: a single global
-    aggregate + one broadcast cross-join instead of one per column
-    (hybrid normalizes two scores — chaining minmax_normalize scanned
-    and broadcast twice)."""
+    """A9 (reference search_vector_db.py:160-166: constant -> 0.5) for
+    several columns in ONE stats pass: a single global aggregate + one
+    broadcast cross-join instead of one per column (hybrid normalizes
+    two scores)."""
     aggs = []
     for col in cols:
         aggs += [F.min(col).alias(f"_mn_{col}"), F.max(col).alias(f"_mx_{col}")]

@@ -28,9 +28,6 @@ from ..operators.extract import content_hash_col, extract_stage
 from ..operators.ocr import merge_ocr, ocr_stage
 from . import stage_store
 
-STAGES = ["pages", "page_text", "doc_text", "chunks", "metrics"]
-
-
 def _strip(pages: DataFrame) -> DataFrame:
     return strip_stage(pages, boilerplate_patterns(pages))
 
@@ -74,6 +71,8 @@ TEXT_STAGES = (
     ("doc_text", lambda page_text, _: assemble_documents(page_text)),
     ("chunks", lambda doc_text, _: chunk_stage(doc_text)),
 )
+# every stage a pipeline run commits
+STAGES = ["pages", *(stage for stage, _ in TEXT_STAGES), "metrics"]
 
 
 def _fail_if(fail_after: str | None, stage: str) -> None:
@@ -206,7 +205,12 @@ def run_incremental(
     patterns never touch it), so within an affected host only the
     changed urls re-OCR; unchanged urls' OCR rows are reused from the
     committed snapshot.  An empty increment is a full no-op — no stage
-    is rewritten."""
+    is rewritten.
+
+    The text stages build from the merged pages frame and publish
+    first; pages and metrics publish last.  A run that dies part way
+    leaves pages as it was, so its retry finds the same new/changed
+    urls and redoes the whole increment."""
     run_id = run_id or uuid.uuid4().hex[:12]
     if not stage_store.is_committed(out_root, "pages"):
         return run_pipeline(spark, input_df, out_root, resume=True, run_id=run_id)
@@ -236,11 +240,8 @@ def run_incremental(
     # rewrite so no plan re-reads a replaced snapshot (Iceberg's
     # snapshot isolation makes this a non-issue in prod)
     todo = todo.localCheckpoint()
-    downstream_committed = all(
-        stage_store.is_committed(out_root, s)
-        for s in ("page_text", "doc_text", "chunks")
-    )
-    if todo.isEmpty() and downstream_committed:
+    all_committed = all(stage_store.is_committed(out_root, s) for s in STAGES)
+    if todo.isEmpty() and all_committed:
         # nothing new, nothing changed: the increment is a pure no-op
         return {
             s: stage_store.read_stage(spark, out_root, s) for s in STAGES
@@ -248,44 +249,44 @@ def run_incremental(
 
     new_input = input_df.join(todo, "url", "left_semi")
     new_pages = extract_stage(new_input).localCheckpoint()
-    metrics_inc = _metrics_df(new_pages, run_id).withColumn(
-        "stage", F.lit("extract_increment")
-    )
-    pages = stage_store.upsert_stage(new_pages, out_root, "pages", run_id, ["url"])
-    stage_store.append_stage(metrics_inc, out_root, "metrics", run_id)
+    # what the pages upsert below will publish, by the same merge rule
+    pages = stage_store.merge_rows(committed, new_pages, ["url"])
 
-    out: dict[str, DataFrame] = {"pages": pages}
-    out["metrics"] = stage_store.read_stage(spark, out_root, "metrics")
-
-    if not downstream_committed:
+    out: dict[str, DataFrame] = {}
+    if not all_committed:
         # a prior run died before the text stages committed: no
         # committed snapshot to merge into — compute them corpus-wide
         out.update(_commit_text_stages(spark, pages, out_root, run_id, resume=False))
-        return out
+    else:
+        # ---- host-scoped downstream merge ----
+        affected_hosts = new_pages.select("host").distinct().localCheckpoint()
+        sub_pages = pages.join(affected_hosts, "host", "left_semi")
+        affected_urls = sub_pages.select("url").distinct().localCheckpoint()
 
-    # ---- host-scoped downstream merge ----
-    affected_hosts = new_pages.select("host").distinct().localCheckpoint()
-    sub_pages = pages.join(affected_hosts, "host", "left_semi")
-    affected_urls = sub_pages.select("url").distinct().localCheckpoint()
-
-    # strip over ALL affected-host pages (their pattern sets shifted);
-    # OCR only the changed urls (page-local kernel) + reuse the
-    # committed OCR rows of the host's unchanged urls
-    committed_pt = stage_store.read_stage(spark, out_root, "page_text")
-    reused_ocr = (
-        committed_pt.filter(F.col("ocr_triggered"))
-        .join(affected_urls, "url", "left_semi")
-        .join(todo, "url", "left_anti")
-    )
-    df = sub_pages
-    for stage, build in TEXT_STAGES:
-        inc = build(df, new_pages)
-        if stage == "page_text":
-            inc = inc.unionByName(reused_ocr)
-        df = inc.localCheckpoint()
-        out[stage] = stage_store.upsert_stage(
-            df, out_root, stage, run_id, ["url"], delete_scope=affected_urls
+        # strip over ALL affected-host pages (their pattern sets
+        # shifted); OCR only the changed urls (page-local kernel) +
+        # reuse the committed OCR rows of the host's unchanged urls
+        committed_pt = stage_store.read_stage(spark, out_root, "page_text")
+        reused_ocr = (
+            committed_pt.filter(F.col("ocr_triggered"))
+            .join(affected_urls, "url", "left_semi")
+            .join(todo, "url", "left_anti")
         )
+        df = sub_pages
+        for stage, build in TEXT_STAGES:
+            inc = build(df, new_pages)
+            if stage == "page_text":
+                inc = inc.unionByName(reused_ocr)
+            df = inc.localCheckpoint()
+            out[stage] = stage_store.upsert_stage(
+                df, out_root, stage, run_id, ["url"], delete_scope=affected_urls
+            )
+
+    metrics_inc = _metrics_df(new_pages, run_id).withColumn(
+        "stage", F.lit("extract_increment")
+    )
+    out["pages"] = stage_store.upsert_stage(new_pages, out_root, "pages", run_id, ["url"])
+    out["metrics"] = stage_store.append_stage(metrics_inc, out_root, "metrics", run_id)
     return out
 
 
@@ -327,7 +328,7 @@ def main() -> int:
     out = run_pipeline(
         spark, inp, args.out, resume=not args.no_resume, fail_after=args.fail_after
     )
-    for name in ["pages", "page_text", "doc_text", "chunks"]:
+    for name in STAGES:
         print(f"{name}: {out[name].count()} rows")
     if args.vectors:
         vec = run_vector_build(spark, args.out)

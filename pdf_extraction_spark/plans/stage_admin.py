@@ -13,12 +13,9 @@ Usage::
     python -m pdf_extraction_spark.plans.stage_admin ROOT --remove chunks --confirm
     python -m pdf_extraction_spark.plans.stage_admin ROOT --gc
     python -m pdf_extraction_spark.plans.stage_admin ROOT --recover
-    python -m pdf_extraction_spark.plans.stage_admin ROOT --compact pages
 
 Pure os/json — no SparkSession needed, so it runs instantly against a
-warehouse a dead job left behind.  The one exception is ``--compact``
-(a data rewrite needs Spark): it builds a local session lazily, only
-when asked.
+warehouse a dead job left behind.
 """
 
 from __future__ import annotations
@@ -39,7 +36,7 @@ def list_stages(root: str) -> list[str]:
             lines.append(f" - {stage}  [UNCOMMITTED]")
             continue
         extras = [f"run_id={info['run_id']}"] if "run_id" in info else []
-        for kind in ("upserts", "appends", "compactions"):
+        for kind in ("upserts", "appends"):
             if info.get(kind):
                 last = info[kind][-1]
                 extras.append(f"{kind}={len(info[kind])} last_run={last['run_id']}")
@@ -80,29 +77,6 @@ def recover(root: str) -> list[tuple[str, str]]:
     return actions
 
 
-def compact(
-    root: str, stage: str, target_mb: int, min_files: int,
-    spark=None,
-) -> dict:
-    """Binpack an append-fragmented stage (stage_store.compact_stage);
-    Iceberg ``rewrite_data_files`` in production.  No-op below the
-    file-count trigger, so it is safe to run on a schedule."""
-    import time
-
-    if spark is None:
-        from ..session import build_session
-
-        spark = build_session("stage_admin_compact")
-    return stage_store.compact_stage(
-        spark,
-        root,
-        stage,
-        run_id=f"compact-{int(time.time())}",
-        target_bytes=target_mb << 20,
-        min_files=min_files,
-    )
-
-
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description="committed stage-table admin")
     p.add_argument("root", help="stage store root (the pipeline warehouse dir)")
@@ -111,12 +85,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--confirm", action="store_true", help="actually perform --remove")
     p.add_argument("--gc", action="store_true", help="delete orphaned .tmp-*/.old-* swap dirs")
     p.add_argument("--recover", action="store_true", help="repair stages interrupted mid-swap")
-    p.add_argument("--compact", type=str, default=None,
-                   help="binpack an append-fragmented stage's small files")
-    p.add_argument("--target-mb", type=int, default=128,
-                   help="target compacted file size for --compact (MiB)")
-    p.add_argument("--min-files", type=int, default=8,
-                   help="--compact is a no-op at or below this many files")
     args = p.parse_args(argv)
 
     if args.recover:
@@ -137,18 +105,6 @@ def main(argv: list[str] | None = None) -> None:
             print(line)
     if args.remove:
         print(remove_stage(args.root, args.remove, args.confirm))
-    if args.compact:
-        res = compact(args.root, args.compact, args.target_mb, args.min_files)
-        if res["action"] == "noop":
-            print(
-                f"stage '{args.compact}' already compact "
-                f"({res['files_before']} files <= target {res['target_files']})"
-            )
-        else:
-            print(
-                f"stage '{args.compact}' compacted: {res['files_before']} -> "
-                f"{res['files_after']} files ({res['bytes']} bytes)"
-            )
 
 
 if __name__ == "__main__":

@@ -75,15 +75,6 @@ def _is_marked(d: str) -> bool:
     return os.path.exists(os.path.join(d, MARKER))
 
 
-def _record(info: dict, kind: str, run_id: str, **extra) -> dict:
-    """Append a ``kind`` ('upserts' | 'appends' | 'compactions') history
-    entry to the marker ``info``; returns ``info``."""
-    info.setdefault(kind, []).append(
-        {"run_id": run_id, "committed_at": time.time(), **extra}
-    )
-    return info
-
-
 def _marked_with(d: str, run_id: str) -> bool:
     """True iff ``d`` carries a marker whose commit OR any recorded
     upsert/append was made by ``run_id``."""
@@ -93,7 +84,7 @@ def _marked_with(d: str, run_id: str) -> bool:
         return False
     return info.get("run_id") == run_id or any(
         e.get("run_id") == run_id
-        for kind in ("upserts", "appends", "compactions")
+        for kind in ("upserts", "appends")
         for e in info.get(kind, [])
     )
 
@@ -254,14 +245,14 @@ def stages(root: str) -> list[str]:
 
 def _publish(
     df: DataFrame, root: str, stage: str, run_id: str, info: dict,
-    kind: str | None = None, **extra,
+    kind: str | None = None,
 ) -> DataFrame:
-    """The one snapshot write behind commit, upsert and compact: write
-    ``df`` into ``<stage>.tmp-<run_id>``, mark it with ``info`` — plus a
-    ``kind`` history entry carrying ``extra`` and the snapshot's file
-    count — swap it into place, and return the re-read snapshot (so
-    downstream stages consume the materialized snapshot, not the
-    lineage — the checkpoint/resume boundary).
+    """The one snapshot write behind every stage write: write ``df``
+    into ``<stage>.tmp-<run_id>``, mark it with ``info`` — plus a
+    ``kind`` ('upserts' | 'appends') history entry carrying the
+    snapshot's file count — swap it into place, and return the re-read
+    snapshot (so downstream stages consume the materialized snapshot,
+    not the lineage — the checkpoint/resume boundary).
 
     Crash discipline: the snapshot is fully written AND marked in the
     temp dir first, any previous snapshot is renamed aside (not
@@ -277,7 +268,10 @@ def _publish(
     _tune_codec(df)
     df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(tmp)
     if kind:
-        _record(info, kind, run_id, **extra, files_after=len(_part_files(tmp)))
+        info.setdefault(kind, []).append({
+            "run_id": run_id, "committed_at": time.time(),
+            "files_after": len(_part_files(tmp)),
+        })
     _write_marker(tmp, info)
     _swap_into_place(path, tmp, run_id)
     spark = df.sparkSession
@@ -293,15 +287,45 @@ def commit_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame
     return _publish(df, root, stage, run_id, info)
 
 
-def append_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame:
-    """Append an increment to a committed stage (Iceberg append commit
-    in production); marker records the append history."""
+def merge_rows(
+    committed: DataFrame,
+    df: DataFrame,
+    keys: list[str] | None = None,
+    delete_scope: DataFrame | None = None,
+) -> DataFrame:
+    """The store's one merge rule: drop the ``committed`` rows whose
+    ``keys`` appear in ``delete_scope`` (default: ``df``'s own keys),
+    then add ``df`` by column name — a column one side lacks reads null
+    on the other side's rows, so a schema-evolving write widens the
+    stage.  No ``keys`` is a plain append."""
+    if keys:
+        scope = delete_scope if delete_scope is not None else df
+        committed = committed.join(scope.select(*keys).distinct(), keys, "left_anti")
+    return committed.unionByName(df, allowMissingColumns=True)
+
+
+def _publish_merge(
+    df: DataFrame, root: str, stage: str, run_id: str, kind: str,
+    keys: list[str] | None = None, delete_scope: DataFrame | None = None,
+) -> DataFrame:
+    """Publish ``merge_rows(committed, df, ...)`` as the stage's next
+    snapshot (a stage not yet committed is committed from ``df``).  The
+    merge reads the live snapshot while _publish writes a sibling."""
+    if not is_committed(root, stage):
+        return commit_stage(df, root, stage, run_id)
+    committed = df.sparkSession.read.parquet(_dir(root, stage))
     info = marker_info(root, stage) or {}
-    _tune_codec(df)
-    path = _dir(root, stage)
-    df.write.mode("append").option("compression", PARQUET_CODEC).parquet(path)
-    _write_marker(path, _record(info, "appends", run_id))
-    return df.sparkSession.read.parquet(path)
+    return _publish(
+        merge_rows(committed, df, keys, delete_scope), root, stage, run_id, info, kind
+    )
+
+
+def append_stage(df: DataFrame, root: str, stage: str, run_id: str) -> DataFrame:
+    """Append an increment (Iceberg append commit in production):
+    committed ∪ ``df`` is published as a new snapshot, so a crash leaves
+    the stage exactly as it was and the rewrite packs the small files
+    earlier appends left; the marker records the append history."""
+    return _publish_merge(df, root, stage, run_id, "appends")
 
 
 def upsert_stage(
@@ -316,9 +340,6 @@ def upsert_stage(
     ``ON DUPLICATE KEY UPDATE``; Iceberg MERGE in production): committed
     rows whose key appears in ``df`` are replaced, everything else kept.
 
-    anti-join(committed, scope keys) ∪ df, published like a commit, so
-    the input snapshot is never overwritten while being read.
-
     ``delete_scope`` (optional) widens the set of committed rows the
     merge REPLACES beyond df's own keys: committed rows whose key
     appears in ``delete_scope`` are dropped even if ``df`` carries no
@@ -326,20 +347,12 @@ def upsert_stage(
     scoped).  The host-scoped incremental uses this so a url whose
     recompute now yields zero rows (e.g. its text stripped to empty)
     does not leave stale rows behind."""
-    if not is_committed(root, stage):
-        return commit_stage(df, root, stage, run_id)
-    committed = df.sparkSession.read.parquet(_dir(root, stage))
-    scope = delete_scope if delete_scope is not None else df.select(*keys).distinct()
-    merged = committed.join(scope.select(*keys).distinct(), keys, "left_anti").unionByName(
-        df, allowMissingColumns=True
-    )
-    info = marker_info(root, stage) or {}
-    return _publish(merged, root, stage, run_id, info, "upserts")
+    return _publish_merge(df, root, stage, run_id, "upserts", keys, delete_scope)
 
 
 def _part_files(path: str) -> list[str]:
     """Data part files of a stage snapshot (parquet parts only — the
-    marker/_SUCCESS/.crc bookkeeping doesn't count toward compaction)."""
+    marker/_SUCCESS/.crc bookkeeping doesn't count)."""
     try:
         names = os.listdir(path)
     except FileNotFoundError:
@@ -349,53 +362,6 @@ def _part_files(path: str) -> list[str]:
         for n in names
         if n.startswith("part-") and not n.endswith(".crc")
     ]
-
-
-def compact_stage(
-    spark: SparkSession,
-    root: str,
-    stage: str,
-    run_id: str,
-    target_bytes: int = 128 << 20,
-    min_files: int = 8,
-) -> dict:
-    """Rewrite an over-fragmented committed stage into few large files
-    (Iceberg's ``rewrite_data_files`` binpack in production).
-
-    ``append_stage`` adds files on every increment and never rewrites,
-    so an append-heavy deployment accumulates small files until scans
-    pay per-file open/footer costs (the classic small-file problem at
-    100 TB).  ``upsert_stage`` rewrites the snapshot wholesale, so only
-    append paths need this.  Result-neutral: same rows, fewer files.
-
-    Trigger: a no-op unless the current part-file count exceeds
-    ``max(min_files, ceil(bytes / target_bytes))`` — the target count a
-    binpack to ``target_bytes``-sized files would produce.  Returns a
-    summary dict either way (``action``: 'noop' | 'compacted').
-
-    The rewrite is a coalesce (a narrow repartition, no shuffle)
-    published like a commit, keeping the marker history plus a
-    ``compactions`` entry."""
-    path = _dir(root, stage)
-    if not is_committed(root, stage):
-        raise ValueError(f"compact_stage: stage '{stage}' is not committed")
-    files = _part_files(path)
-    data_bytes = sum(os.path.getsize(f) for f in files)
-    target_count = max(min_files, -(-data_bytes // target_bytes))
-    summary = {
-        "stage": stage,
-        "files_before": len(files),
-        "bytes": data_bytes,
-        "target_files": target_count,
-    }
-    if len(files) <= target_count:
-        return dict(summary, action="noop")
-    df = read_stage(spark, root, stage).coalesce(target_count)
-    info = marker_info(root, stage) or {}
-    _publish(df, root, stage, run_id, info, "compactions", files_before=len(files))
-    return dict(
-        summary, action="compacted", files_after=len(_part_files(path))
-    )
 
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:

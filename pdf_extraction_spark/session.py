@@ -98,10 +98,17 @@ def build_session(
         # never pays back; executors keep tiered C2.
         # defaultJavaOptions goes in front of a caller's
         # spark.driver.extraJavaOptions, so extra_conf cannot drop it.
-        # Under spark-submit pass the same flag with
+        # Under spark-submit pass the same flags with
         # --driver-java-options (or this conf key).  Results do not
         # move: on JDK 17 all floating point is strict (JEP 306).
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # C1 only also shrinks the default code cache from 240 to 48 MB,
+        # which a test session's driver filled in 50 s: HotSpot then
+        # stops compiling, and the next adapter it cannot place raises
+        # VirtualMachineError and kills the JVM.  Keep the tiered size.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

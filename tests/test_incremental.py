@@ -170,6 +170,36 @@ def test_incremental_null_payload_unchanged_is_noop(spark, work_dir):
         assert info["run_id"] == "base" and "upserts" not in info, (stage, info)
 
 
+def test_incremental_retry_after_crash_redoes_text_stages(spark, work_dir, monkeypatch):
+    """A run that dies before its page_text upsert publishes nothing:
+    pages and metrics publish last, so the retry finds the same new
+    urls and brings every stage up to date instead of returning early
+    over stale text stages."""
+    root = f"{work_dir}/crashretry"
+    run_pipeline(spark, corpus_df(spark, 40), root, resume=False, run_id="base")
+    upsert = stage_store.upsert_stage
+
+    def crash_on_page_text(df, root, stage, *args, **kwargs):
+        if stage == "page_text":
+            raise RuntimeError("injected crash before the page_text upsert")
+        return upsert(df, root, stage, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(stage_store, "upsert_stage", crash_on_page_text)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_incremental(spark, corpus_df(spark, 60), root, run_id="crashed")
+
+    out = run_incremental(spark, corpus_df(spark, 60), root, run_id="retry")
+    exp = oracle.extract_corpus(generate_corpus(60))
+    got = {r["url"]: r["extracted_text"] for r in out["doc_text"].collect()}
+    assert all(got.get(u, "") == v["text"] for u, v in exp.items())
+    for stage in ("pages", "page_text", "doc_text", "chunks"):
+        info = stage_store.marker_info(root, stage)
+        assert [u["run_id"] for u in info.get("upserts", [])] == ["retry"], stage
+    appends = stage_store.marker_info(root, "metrics")["appends"]
+    assert [a["run_id"] for a in appends] == ["retry"]
+
+
 def test_incremental_after_pages_only_commits_text_stages(spark, work_dir):
     """A run killed after pages leaves no text stage to merge into: the
     increment upserts pages, then commits the text stages corpus-wide

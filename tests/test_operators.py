@@ -237,7 +237,7 @@ def test_bm25_trailing_newline_is_not_a_term_match(spark):
 
 def test_minmax_normalize_constant_guard(spark):
     df = spark.createDataFrame([(i, 7.0) for i in range(4)], "id long, s double")
-    out = retrieval.minmax_normalize(df, "s", "n").collect()
+    out = retrieval.minmax_normalize_many(df, {"s": "n"}).collect()
     assert all(r["n"] == 0.5 for r in out)  # reference: constant -> 0.5
 
 

@@ -170,10 +170,10 @@ def test_writer_tolerates_reader_promoted_tmp(spark, work_dir):
 
 
 def test_append_marker_write_is_atomic(spark, work_dir, monkeypatch):
-    """A crash while append_stage rewrites the marker in place must not
-    tear the marker readers see: the previous marker survives, and the
-    stage stays committed and readable (its appended files included —
-    append_stage adds data before it records the append)."""
+    """A crash while append_stage writes its snapshot's marker must
+    leave the stage exactly as it was: the append publishes a new
+    snapshot through _publish, so the torn marker lies in an unmarked
+    temp dir and readers keep the previous snapshot and marker."""
     root = f"{work_dir}/torn"
     os.makedirs(root)
     base = spark.createDataFrame([(1, "a")], "k long, v string")
@@ -192,7 +192,29 @@ def test_append_marker_write_is_atomic(spark, work_dir, monkeypatch):
     assert stage_store.is_committed(root, "s")
     assert stage_store.marker_info(root, "s")["run_id"] == "r1"
     got = stage_store.read_stage(spark, root, "s").collect()
-    assert sorted(r.k for r in got) == [1, 2]
+    assert sorted(r.k for r in got) == [1]
+
+
+def test_appends_keep_file_count_bounded(spark, work_dir):
+    """Each append rewrites committed ∪ increment as one snapshot, and
+    the scan packs the small files earlier appends left, so many small
+    appends do not pile up part files."""
+    root = f"{work_dir}/appends"
+    os.makedirs(root)
+    base = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(8)], "k long, v string"
+    ).repartition(6)
+    stage_store.commit_stage(base, root, "s", "r1")
+    for j in range(12):
+        inc = spark.createDataFrame([(100 + j, "a")], "k long, v string")
+        stage_store.append_stage(inc, root, "s", f"a{j}")
+
+    files = stage_store._part_files(os.path.join(root, "s"))
+    assert len(files) <= 2 * spark.sparkContext.defaultParallelism, len(files)
+    got = sorted(r.k for r in stage_store.read_stage(spark, root, "s").collect())
+    assert got == list(range(8)) + [100 + j for j in range(12)]
+    info = stage_store.marker_info(root, "s")
+    assert [e["run_id"] for e in info["appends"]] == [f"a{j}" for j in range(12)]
 
 
 def test_retry_after_crash_before_marker(spark, work_dir):
@@ -232,7 +254,7 @@ def test_legacy_bucketed_stage_keeps_working(spark, work_dir):
     """Stores committed before the one-layout store hold bucketed part
     files (bucketBy + sortBy through a path-backed table) and a marker
     carrying a ``bucket`` spec.  They are plain parquet underneath, so
-    read, upsert, append and compact serve them without migration."""
+    read, upsert and append serve them without migration."""
     root = f"{work_dir}/legacy_bucketed"
     os.makedirs(root)
     path = os.path.join(root, "s")
@@ -266,137 +288,31 @@ def test_legacy_bucketed_stage_keeps_working(spark, work_dir):
         stage_store.append_stage(inc, root, "s", f"a{j}")
         expected[200 + j] = "a"
     assert rows() == expected
-
-    res = stage_store.compact_stage(
-        spark, root, "s", "c1", target_bytes=1 << 30, min_files=1
-    )
-    assert res["action"] == "compacted"
-    assert len(stage_store._part_files(path)) == 1
-    assert rows() == expected
     info = stage_store.marker_info(root, "s")
     assert [e["run_id"] for e in info["appends"]] == ["a0", "a1", "a2"]
-    assert info["compactions"][-1]["run_id"] == "c1"
 
 
-def test_compact_stage_binpacks_append_fragments(spark, work_dir):
-    """append_stage adds files every increment and never rewrites, so an
-    append-heavy stage fragments; compact_stage binpacks it back under
-    the trigger count, result-neutral, keeping the marker history
-    (Iceberg rewrite_data_files in production)."""
-    root = f"{work_dir}/compact"
-    os.makedirs(root)
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(8)], "k long, v string"
-    ).repartition(4)
-    stage_store.commit_stage(base, root, "s", "r1")
-    for j in range(4):
-        inc = spark.createDataFrame([(100 + j, "a")], "k long, v string")
-        stage_store.append_stage(inc, root, "s", f"a{j}")
-    path = os.path.join(root, "s")
-    before = stage_store._part_files(path)
-    assert len(before) > 2
-    expected = sorted(
-        (r.k, r.v) for r in spark.read.parquet(path).collect()
-    )
-
-    res = stage_store.compact_stage(
-        spark, root, "s", "c1", target_bytes=1 << 30, min_files=2
-    )
-    assert res["action"] == "compacted"
-    assert res["files_before"] == len(before)
-    after = stage_store._part_files(path)
-    assert len(after) <= 2
-    assert sorted((r.k, r.v) for r in spark.read.parquet(path).collect()) == expected
-
-    info = stage_store.marker_info(root, "s")
-    assert len(info["appends"]) == 4  # history preserved
-    assert info["compactions"][-1]["run_id"] == "c1"
-    assert stage_store.is_committed(root, "s")
-
-    # at-or-below the trigger -> no-op (safe to run on a schedule)
-    res2 = stage_store.compact_stage(
-        spark, root, "s", "c2", target_bytes=1 << 30, min_files=2
-    )
-    assert res2["action"] == "noop"
-    assert len(stage_store.marker_info(root, "s").get("compactions", [])) == 1
-
-
-def test_admin_cli_compact(spark, work_dir, capsys):
-    root = f"{work_dir}/clicompact"
-    os.makedirs(root)
-    base = spark.createDataFrame([(1, "a")], "k long, v string")
-    stage_store.commit_stage(base, root, "s", "r1")
-    for j in range(3):
-        inc = spark.createDataFrame([(10 + j, "b")], "k long, v string")
-        stage_store.append_stage(inc, root, "s", f"a{j}")
-
-    stage_admin.main(
-        [root, "--compact", "s", "--min-files", "1", "--target-mb", "1024"]
-    )
-    out = capsys.readouterr().out
-    assert "compacted" in out
-    assert len(stage_store._part_files(os.path.join(root, "s"))) <= 1
-
-    stage_admin.main(
-        [root, "--compact", "s", "--min-files", "1", "--target-mb", "1024"]
-    )
-    assert "already compact" in capsys.readouterr().out
-
-    stage_admin.main([root, "--list"])
-    out = capsys.readouterr().out
-    assert "appends=3 last_run=a2" in out
-    assert "compactions=1 last_run=compact-" in out
-
-
-def test_compact_then_append_then_upsert_lifecycle(spark, work_dir):
-    """The full append-heavy deployment loop: fragment -> compact ->
-    keep appending -> MERGE upsert.  Each transition must preserve rows
-    and the marker's history chain (a compacted snapshot is a normal
-    committed snapshot — not a special state later writers can trip
-    over)."""
+def test_append_then_upsert_lifecycle(spark, work_dir):
+    """Appends then a MERGE upsert: each keeps the rows right and the
+    marker keeps both histories."""
     root = f"{work_dir}/lifecycle"
     os.makedirs(root)
     base = spark.createDataFrame(
         [(i, f"v{i}") for i in range(4)], "k long, v string"
-    ).repartition(4)
+    )
     stage_store.commit_stage(base, root, "s", "r1")
-    for j in range(4):
+    for j in range(2):
         inc = spark.createDataFrame([(10 + j, "a")], "k long, v string")
         stage_store.append_stage(inc, root, "s", f"a{j}")
 
-    res = stage_store.compact_stage(
-        spark, root, "s", "c1", target_bytes=1 << 30, min_files=2
-    )
-    assert res["action"] == "compacted"
-
-    # append AFTER compaction: a compacted stage accepts increments and
-    # the marker keeps both histories
-    inc = spark.createDataFrame([(99, "late")], "k long, v string")
-    stage_store.append_stage(inc, root, "s", "a9")
-    info = stage_store.marker_info(root, "s")
-    assert info["compactions"][-1]["run_id"] == "c1"
-    assert info["appends"][-1]["run_id"] == "a9"
-
-    # MERGE upsert after compaction: keyed rows replaced, rest kept,
-    # snapshot still committed and readable
-    up = spark.createDataFrame([(0, "NEW"), (99, "NEW")], "k long, v string")
+    up = spark.createDataFrame([(0, "NEW"), (11, "NEW")], "k long, v string")
     stage_store.upsert_stage(up, root, "s", "u1", keys=["k"])
-    got = dict(
-        (r.k, r.v)
-        for r in stage_store.read_stage(spark, root, "s").collect()
-    )
-    expected = {i: f"v{i}" for i in range(1, 4)}
-    expected.update({10 + j: "a" for j in range(4)})
-    expected.update({0: "NEW", 99: "NEW"})
-    assert got == expected
-    assert stage_store.is_committed(root, "s")
-
-    # and the compacted-then-upserted stage still compacts (full loop)
-    res2 = stage_store.compact_stage(
-        spark, root, "s", "c2", target_bytes=1 << 30, min_files=1
-    )
-    assert res2["action"] in ("compacted", "noop")
-    assert sorted(
-        (r.k, r.v)
-        for r in stage_store.read_stage(spark, root, "s").collect()
-    ) == sorted(got.items())
+    got = {r.k: r.v for r in stage_store.read_stage(spark, root, "s").collect()}
+    assert got == {0: "NEW", 1: "v1", 2: "v2", 3: "v3", 10: "a", 11: "NEW"}
+    info = stage_store.marker_info(root, "s")
+    assert info["run_id"] == "r1"
+    assert [e["run_id"] for e in info["appends"]] == ["a0", "a1"]
+    assert [e["run_id"] for e in info["upserts"]] == ["u1"]
+    assert stage_admin.list_stages(root) == [
+        " - s  committed  run_id=r1 upserts=1 last_run=u1 appends=2 last_run=a1"
+    ]

@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
+from bench import CORES, HEADLINE  # noqa: E402
 
 
 def formatted_plan(df) -> str:
@@ -36,7 +36,7 @@ def main() -> int:
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", CORES)))
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--queries", default=None,
                     help="comma-separated subset (default: headline 12)")
