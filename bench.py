@@ -36,21 +36,21 @@ CORES = len(os.sched_getaffinity(0))
 QUIET_BAR = max(1.0, 5.0 * CORES / 32)
 
 
-def wait_quiet(max_wait: float = 600.0, bar: float = QUIET_BAR) -> float:
+def wait_quiet(max_wait: float = 600.0, bar: float = QUIET_BAR) -> tuple[float, float]:
     """PRE-REGISTERED QUIET-WINDOW GATE (round-3 verdict item 3,
     extended to the per-query suite in round 5): co-tenant bursts are
     the dominant noise on a shared host (pair efficiency 0.388 @ loadavg
     13 vs 0.88 @ 4.4 on 32 cores), so measurement blocks WAIT for
-    loadavg(1m) < bar before starting (up to max_wait; the loadavg
-    actually seen is recorded in the output).  A noise gate chosen
-    before the session, never a post-hoc filter of unfavourable
-    results."""
+    loadavg(1m) < bar before starting (up to max_wait).  Returns the
+    loadavg actually seen and the seconds waited, both recorded in the
+    output.  A noise gate chosen before the session, never a post-hoc
+    filter of unfavourable results."""
     waited = 0.0
     while True:
         with open("/proc/loadavg") as fh:
             load = float(fh.read().split()[0])
         if load < bar or waited >= max_wait:
-            return load
+            return load, waited
         log(f"   loadavg {load} >= {bar}; waiting for a quiet window...")
         time.sleep(30)
         waited += 30
@@ -209,7 +209,7 @@ def main() -> int:
     # too thin under +-30% host noise); per-query timings keep args.runs
     pipe_runs = max(3, args.runs)
     log(f"extract pipeline ({n_docs} docs, {pipe_runs} run(s))...")
-    pipe_load = wait_quiet()
+    pipe_load, pipe_wait = wait_quiet()
     times = []
     for _ in range(pipe_runs):
         dt, n, n_pages = run_extract(spark, corpus)
@@ -251,10 +251,13 @@ def main() -> int:
     q_rounds = max(3, args.runs)
     all_runs: dict[str, list[float]] = {n: [] for n in qfns}
     round_loads = []
+    round_waits = []
     round_calibs = []
     log(f"query suite ({len(qfns)} queries, {q_rounds} round-robin rounds)...")
     for _ in range(q_rounds):
-        round_loads.append(wait_quiet())
+        load, waited = wait_quiet()
+        round_loads.append(load)
+        round_waits.append(waited)
         round_calibs.append(calib_probe(corpus))
         for name, fn in qfns.items():
             t0 = time.monotonic()
@@ -270,10 +273,8 @@ def main() -> int:
         "statistic": "median per query across rounds",
         "loadavg_before_rounds": round_loads,
         "calib_docs_per_sec": round_calibs,
-        "gate": f"loadavg(1m) < {QUIET_BAR:g} (5 x cores/32, at least 1), "
-                "up to 600s wait per round; "
-                "calib = v5 observational single-core host-speed "
-                "probe per round (never a filter)",
+        "calib": "v5 observational single-core host-speed probe per "
+                 "round (never a filter)",
         "all_runs": all_runs,
     }
 
@@ -298,6 +299,13 @@ def main() -> int:
         ],
         "corpus_v2": corpus_v2_block,
         "query_provenance": query_provenance,
+        "gate": {
+            "rule": f"loadavg(1m) < {QUIET_BAR:g} (5 x cores/32, at least 1), "
+                    "up to 600s wait, before the pipeline runs and each "
+                    "query round",
+            "waited_s_before_pipeline": pipe_wait,
+            "waited_s_before_rounds": round_waits,
+        },
     }
     print(json.dumps(out))
     return 0

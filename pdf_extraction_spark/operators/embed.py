@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .similarity import bucket_col
+
 EMBED_DIM = 16
 
 _HEX = "0123456789abcdef"
@@ -65,3 +67,12 @@ def embed_stage(
     """chunks + ``embedding`` column, as a JVM-side Catalyst expression
     (whole-stage codegen, zero Python)."""
     return chunks.withColumn("embedding", hash_embedding_col(text_col, dim))
+
+
+def vector_rows(chunks: DataFrame) -> DataFrame:
+    """The chunk_vectors rows of ``chunks``: embedding + LSH bucket, one
+    expression for the batch build (plans.pipeline.run_vector_build)
+    and the streaming one (streaming.ingest.stream_vector_build).
+    ``embed_stage`` resolves through this module's globals at call
+    time, where the benchmark's tracer patches it."""
+    return embed_stage(chunks).withColumn("bucket", bucket_col("embedding", dim=EMBED_DIM))

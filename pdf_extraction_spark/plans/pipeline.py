@@ -4,13 +4,14 @@ One driver program replaces the reference's subprocess chain
 (run_pipeline.py:35-49): stages are DataFrame->DataFrame functions,
 each committed to a stage table (Iceberg stand-in, stage_store.py) so
 a killed job resumes at the last committed snapshot (north_rule).
+STAGE_TABLE lists the stages in commit order:
 
-    extract  -> pages       (operators/extract.py, mapInArrow)
-    patterns -> strip       (operators/boilerplate.py, pure Catalyst)
-    ocr      -> ocr_text    (operators/ocr.py, flagged subset only)
-    assemble -> doc_text    (operators/chunk.py)
-    chunk    -> chunks
-    metrics  -> per-partition lineage counters (north_star)
+    pages      extract                        (operators/extract.py)
+    metrics    per-partition lineage counters of pages (north_star)
+    page_text  boilerplate strip + OCR merge  (operators/boilerplate.py,
+                                               operators/ocr.py)
+    doc_text   assemble                       (operators/chunk.py)
+    chunks     chunk
 """
 
 from __future__ import annotations
@@ -59,47 +60,24 @@ def _metrics_df(pages: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-# The stages downstream of pages, in order: (stage, build).
-# ``build(prev, ocr_pages)`` maps the previous stage's frame to this
-# one's; page_text OCRs ``ocr_pages`` (every page on a full run, only
-# new/changed ones on a host-scoped upsert).  Builds are lambdas so
+# Every committed stage, in commit order: (stage, build).  ``build(s)``
+# maps ``s`` -- the run's ``input`` and ``run_id`` plus the frame of
+# every stage before this one, by name -- to this stage's frame.
+# page_text OCRs ``s["ocr_pages"]`` when a host-scoped upsert gives it
+# (the new/changed pages only), else every page.  Builds are lambdas so
 # operators resolve through this module's globals at call time, where
 # the resume tests and the benchmark's tracer patch them.
-TEXT_STAGES = (
-    ("page_text",
-     lambda pages, ocr_pages: merge_ocr(_strip(pages), ocr_stage(ocr_pages))),
-    ("doc_text", lambda page_text, _: assemble_documents(page_text)),
-    ("chunks", lambda doc_text, _: chunk_stage(doc_text)),
+STAGE_TABLE = (
+    ("pages", lambda s: extract_stage(s["input"])),
+    ("metrics", lambda s: _metrics_df(s["pages"], s["run_id"])),
+    ("page_text", lambda s: merge_ocr(
+        _strip(s["pages"]), ocr_stage(s.get("ocr_pages", s["pages"])))),
+    ("doc_text", lambda s: assemble_documents(s["page_text"])),
+    ("chunks", lambda s: chunk_stage(s["doc_text"])),
 )
-# every stage a pipeline run commits
-STAGES = ["pages", *(stage for stage, _ in TEXT_STAGES), "metrics"]
-
-
-def _fail_if(fail_after: str | None, stage: str) -> None:
-    if fail_after == stage:
-        raise RuntimeError(f"injected failure after stage '{stage}'")
-
-
-def _commit_text_stages(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_root: str,
-    run_id: str,
-    resume: bool,
-    fail_after: str | None = None,
-) -> dict[str, DataFrame]:
-    """Commit every TEXT_STAGES row corpus-wide from ``pages``; with
-    ``resume``, a stage already committed is read back instead."""
-    out: dict[str, DataFrame] = {}
-    df = pages
-    for stage, build in TEXT_STAGES:
-        if resume and stage_store.is_committed(out_root, stage):
-            df = stage_store.read_stage(spark, out_root, stage)
-        else:
-            df = stage_store.commit_stage(build(df, pages), out_root, stage, run_id)
-        out[stage] = df
-        _fail_if(fail_after, stage)
-    return out
+STAGES = [stage for stage, _ in STAGE_TABLE]
+# the stages built from pages, which an increment upserts host-scoped
+TEXT_STAGES = STAGE_TABLE[STAGES.index("page_text"):]
 
 
 def run_pipeline(
@@ -107,16 +85,14 @@ def run_pipeline(
     input_df: DataFrame,
     out_root: str,
     resume: bool = True,
-    fail_after: str | None = None,
     run_id: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the pipeline; returns the stage DataFrames.
 
-    ``fail_after`` kills the run after the named stage commits — the
-    hook the resume test uses (SURVEY.md §5 item 4).
-    """
+    One walk of STAGE_TABLE: with ``resume``, a committed stage is read
+    back (the reference's skip-if-exists, pdf_text_extractor.py:47-49);
+    every other stage is committed from its build."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    out: dict[str, DataFrame] = {}
 
     # GC swap leftovers up front: a prior run that died after its swap
     # landed but before rmtree leaves `.old-*` dirs that otherwise
@@ -128,22 +104,13 @@ def run_pipeline(
     # admin --gc path.
     stage_store.gc_all(out_root, kinds=("old",))
 
-    if resume and stage_store.is_committed(out_root, "pages"):
-        pages = stage_store.read_stage(spark, out_root, "pages")
-    else:
-        pages = stage_store.commit_stage(
-            extract_stage(input_df), out_root, "pages", run_id
-        )
-        stage_store.commit_stage(
-            _metrics_df(pages, run_id), out_root, "metrics", run_id
-        )
-    out["pages"] = pages
-    out["metrics"] = stage_store.read_stage(spark, out_root, "metrics")
-    _fail_if(fail_after, "pages")
-    out.update(
-        _commit_text_stages(spark, pages, out_root, run_id, resume, fail_after)
-    )
-    return out
+    frames = {"input": input_df, "run_id": run_id}
+    for stage, build in STAGE_TABLE:
+        if resume and stage_store.is_committed(out_root, stage):
+            frames[stage] = stage_store.read_stage(spark, out_root, stage)
+        else:
+            frames[stage] = stage_store.commit_stage(build(frames), out_root, stage, run_id)
+    return {stage: frames[stage] for stage in STAGES}
 
 
 def run_vector_build(
@@ -158,8 +125,7 @@ def run_vector_build(
     Retrieval (chunk_hybrid_search / ANN) then runs over these tables.
     """
     from ..operators.chunk import typed_chunk_stage
-    from ..operators.embed import embed_stage
-    from ..operators.similarity import bucket_col
+    from ..operators.embed import vector_rows
 
     run_id = run_id or uuid.uuid4().hex[:12]
     pages = stage_store.read_stage(spark, out_root, "pages")
@@ -168,15 +134,8 @@ def run_vector_build(
     typed = stage_store.commit_stage(
         typed_chunk_stage(page_text, pages), out_root, "typed_chunks", run_id
     )
-    from ..operators.embed import EMBED_DIM
-
     vectors = stage_store.commit_stage(
-        embed_stage(typed).withColumn(
-            "bucket", bucket_col("embedding", dim=EMBED_DIM)
-        ),
-        out_root,
-        "chunk_vectors",
-        run_id,
+        vector_rows(typed), out_root, "chunk_vectors", run_id
     )
     return {"typed_chunks": typed, "chunk_vectors": vectors}
 
@@ -207,41 +166,43 @@ def run_incremental(
     committed snapshot.  An empty increment is a full no-op — no stage
     is rewritten.
 
+    A store whose last full run was interrupted is first finished by
+    ``run_pipeline(resume=True)``; with no pages committed that run IS
+    the result, since there is nothing to diff against.
+
     The text stages build from the merged pages frame and publish
     first; pages and metrics publish last.  A run that dies part way
     leaves pages as it was, so its retry finds the same new/changed
     urls and redoes the whole increment."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    if not stage_store.is_committed(out_root, "pages"):
-        return run_pipeline(spark, input_df, out_root, resume=True, run_id=run_id)
+    missing = [s for s in STAGES if not stage_store.is_committed(out_root, s)]
+    if missing:
+        finished = run_pipeline(spark, input_df, out_root, resume=True, run_id=run_id)
+        if "pages" in missing:
+            return finished
     stage_store.gc_all(out_root, kinds=("old",))  # same leftover hygiene as run_pipeline
 
     committed = stage_store.read_stage(spark, out_root, "pages")
     inp_h = input_df.select("url", content_hash_col().alias("content_hash"))
-    new_urls = inp_h.join(
-        committed.select("url").distinct(), "url", "left_anti"
-    ).select("url")
-    if "content_hash" in committed.columns:
-        # change detection against the hash the extract UDF stamped on
-        # the committed pages — no extra scan of either corpus
-        old_h = committed.select(
-            "url", F.col("content_hash").alias("_old")
-        ).distinct()
-        changed_urls = (
-            inp_h.join(old_h, "url")
-            .filter(~F.col("content_hash").eqNullSafe(F.col("_old")))
-            .select("url")
-        )
-        todo = new_urls.unionByName(changed_urls).distinct()
-    else:  # legacy stage dir without hashes: presence-only detection
-        todo = new_urls
+    # change detection against the hash the extract UDF stamped on the
+    # committed pages -- no extra scan of either corpus.  A new url
+    # finds no committed hash, and a stage committed before
+    # content_hash existed reads it as null, so both count as changed
+    # (a legacy url is re-extracted once, and then carries its hash).
+    old_hash = F.col("content_hash") if "content_hash" in committed.columns else F.lit(None)
+    old_h = committed.select("url", old_hash.alias("_old")).distinct()
     # every plan below depends on the very parquet dir the upsert swaps
     # out; localCheckpoint materializes the increment BEFORE the
     # rewrite so no plan re-reads a replaced snapshot (Iceberg's
     # snapshot isolation makes this a non-issue in prod)
-    todo = todo.localCheckpoint()
-    all_committed = all(stage_store.is_committed(out_root, s) for s in STAGES)
-    if todo.isEmpty() and all_committed:
+    todo = (
+        inp_h.join(old_h, "url", "left")
+        .filter(~F.col("content_hash").eqNullSafe(F.col("_old")))
+        .select("url")
+        .distinct()
+        .localCheckpoint()
+    )
+    if todo.isEmpty():
         # nothing new, nothing changed: the increment is a pure no-op
         return {
             s: stage_store.read_stage(spark, out_root, s) for s in STAGES
@@ -252,35 +213,30 @@ def run_incremental(
     # what the pages upsert below will publish, by the same merge rule
     pages = stage_store.merge_rows(committed, new_pages, ["url"])
 
-    out: dict[str, DataFrame] = {}
-    if not all_committed:
-        # a prior run died before the text stages committed: no
-        # committed snapshot to merge into — compute them corpus-wide
-        out.update(_commit_text_stages(spark, pages, out_root, run_id, resume=False))
-    else:
-        # ---- host-scoped downstream merge ----
-        affected_hosts = new_pages.select("host").distinct().localCheckpoint()
-        sub_pages = pages.join(affected_hosts, "host", "left_semi")
-        affected_urls = sub_pages.select("url").distinct().localCheckpoint()
+    # ---- host-scoped downstream merge ----
+    affected_hosts = new_pages.select("host").distinct().localCheckpoint()
+    sub_pages = pages.join(affected_hosts, "host", "left_semi")
+    affected_urls = sub_pages.select("url").distinct().localCheckpoint()
 
-        # strip over ALL affected-host pages (their pattern sets
-        # shifted); OCR only the changed urls (page-local kernel) +
-        # reuse the committed OCR rows of the host's unchanged urls
-        committed_pt = stage_store.read_stage(spark, out_root, "page_text")
-        reused_ocr = (
-            committed_pt.filter(F.col("ocr_triggered"))
-            .join(affected_urls, "url", "left_semi")
-            .join(todo, "url", "left_anti")
+    # strip over ALL affected-host pages (their pattern sets shifted);
+    # OCR only the changed urls (page-local kernel) + reuse the
+    # committed OCR rows of the host's unchanged urls
+    committed_pt = stage_store.read_stage(spark, out_root, "page_text")
+    reused_ocr = (
+        committed_pt.filter(F.col("ocr_triggered"))
+        .join(affected_urls, "url", "left_semi")
+        .join(todo, "url", "left_anti")
+    )
+    frames = {"pages": sub_pages, "ocr_pages": new_pages, "run_id": run_id}
+    out: dict[str, DataFrame] = {}
+    for stage, build in TEXT_STAGES:
+        inc = build(frames)
+        if stage == "page_text":
+            inc = inc.unionByName(reused_ocr)
+        frames[stage] = inc.localCheckpoint()
+        out[stage] = stage_store.upsert_stage(
+            frames[stage], out_root, stage, run_id, ["url"], delete_scope=affected_urls
         )
-        df = sub_pages
-        for stage, build in TEXT_STAGES:
-            inc = build(df, new_pages)
-            if stage == "page_text":
-                inc = inc.unionByName(reused_ocr)
-            df = inc.localCheckpoint()
-            out[stage] = stage_store.upsert_stage(
-                df, out_root, stage, run_id, ["url"], delete_scope=affected_urls
-            )
 
     metrics_inc = _metrics_df(new_pages, run_id).withColumn(
         "stage", F.lit("extract_increment")
@@ -316,7 +272,6 @@ def main() -> int:
     checkout = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     ap.add_argument("--out", default=os.path.join(checkout, ".work", "pipeline"))
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--fail-after", default=None)
     ap.add_argument("--skip-oracle", action="store_true")
     ap.add_argument("--vectors", action="store_true",
                     help="also run the vector-DB build (typed chunks + embeddings)")
@@ -325,9 +280,7 @@ def main() -> int:
     spark = build_session("pipeline")
     t0 = time.monotonic()
     inp = corpus_df(spark, args.n_docs)
-    out = run_pipeline(
-        spark, inp, args.out, resume=not args.no_resume, fail_after=args.fail_after
-    )
+    out = run_pipeline(spark, inp, args.out, resume=not args.no_resume)
     for name in STAGES:
         print(f"{name}: {out[name].count()} rows")
     if args.vectors:

@@ -54,11 +54,11 @@ def q_pipeline_pages(spark, sf_dir):
 def _text_stage(pages: DataFrame, last: str) -> DataFrame:
     """The pipeline's TEXT_STAGES over ``pages`` up to stage ``last``,
     chained in one plan instead of committed."""
-    df = pages
+    frames = {"pages": pages}
     for stage, build in TEXT_STAGES:
-        df = build(df, pages)
+        frames[stage] = build(frames)
         if stage == last:
-            return df
+            return frames[stage]
     raise KeyError(last)
 
 

@@ -133,25 +133,21 @@ def sessionize_stream(stream: DataFrame) -> DataFrame:
 def stream_vector_build(
     spark: SparkSession, chunks_path: str, out_path: str, checkpoint: str,
 ):
-    """Continuous vector-DB build: the SAME embed_stage expression
-    (deterministic hash embedding, pure Catalyst) + LSH bucket bound to
+    """Continuous vector-DB build: the SAME vector_rows expression
+    (deterministic hash embedding, pure Catalyst, + LSH bucket) bound to
     a file stream over the committed typed-chunks table — new chunk
     files become (ids, embedding, bucket) rows incrementally,
     exactly-once via the checkpoint.  The streaming twin of
     plans.pipeline.run_vector_build's chunk_vectors stage."""
-    from ..operators.embed import EMBED_DIM, embed_stage
-    from ..operators.similarity import bucket_col
+    from ..operators.embed import vector_rows
 
     chunks = (
         spark.readStream.schema(TYPED_CHUNKS)
         .option("maxFilesPerTrigger", 16)
         .parquet(chunks_path)
     )
-    vectors = embed_stage(chunks).withColumn(
-        "bucket", bucket_col("embedding", dim=EMBED_DIM)
-    )
     return (
-        vectors.writeStream.outputMode("append")
+        vector_rows(chunks).writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)

@@ -9,7 +9,7 @@ from pdf_extraction_spark import oracle
 from pdf_extraction_spark.constants import SPDF_MAGIC
 from pdf_extraction_spark.operators import layout
 from pdf_extraction_spark.plans import stage_store
-from pdf_extraction_spark.plans.pipeline import run_pipeline
+from pdf_extraction_spark.plans.pipeline import STAGES, run_pipeline
 from pdf_extraction_spark.sources.corpus import corpus_df, generate_corpus
 
 N_DOCS = 80
@@ -100,24 +100,24 @@ def test_metrics_lineage(pipeline_out):
     assert sum(r["ocr_triggered"] for r in m) > 0
 
 
-def test_resume_skips_committed_stages(spark, work_dir, oracle_out):
-    """Kill after page_text commit; rerun must not recompute earlier
-    stages (same run_id marker) and must finish identically."""
-    root = f"{work_dir}/resume"
+@pytest.mark.parametrize("crashed", STAGES)
+def test_resume_skips_committed_stages(spark, work_dir, oracle_out, crash_before_commit, crashed):
+    """Crash before ``crashed`` commits; the resumed run must commit
+    every stage, keep the earlier stages' snapshots (same run_id
+    marker) and finish identically."""
+    root = f"{work_dir}/resume-{crashed}"
     inp = corpus_df(spark, N_DOCS)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, inp, root, resume=False, fail_after="page_text",
-                     run_id="run-one")
-    assert stage_store.is_committed(root, "page_text")
-    assert not stage_store.is_committed(root, "chunks")
+    with crash_before_commit(crashed):
+        run_pipeline(spark, inp, root, resume=False, run_id="run-one")
+    before = STAGES[:STAGES.index(crashed)]
+    assert [s for s in STAGES if stage_store.is_committed(root, s)] == before
 
     out = run_pipeline(spark, inp, root, resume=True, run_id="run-two")
-    # stages committed before the kill kept their original run marker
-    assert stage_store.marker_info(root, "pages")["run_id"] == "run-one"
-    assert stage_store.marker_info(root, "page_text")["run_id"] == "run-one"
-    assert stage_store.marker_info(root, "chunks")["run_id"] == "run-two"
+    for stage in STAGES:
+        expected = "run-one" if stage in before else "run-two"
+        assert stage_store.marker_info(root, stage)["run_id"] == expected, stage
     got = {r["url"]: r["extracted_text"] for r in out["doc_text"].collect()}
-    assert all(got.get(u, "") == v["text"] for u, v in oracle_out.items())
+    assert got == {u: v["text"] for u, v in oracle_out.items() if v["text"]}
 
 
 def test_resume_after_midswap_kill_reprocesses_nothing(

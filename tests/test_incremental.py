@@ -200,30 +200,38 @@ def test_incremental_retry_after_crash_redoes_text_stages(spark, work_dir, monke
     assert [a["run_id"] for a in appends] == ["retry"]
 
 
-def test_incremental_after_pages_only_commits_text_stages(spark, work_dir):
-    """A run killed after pages leaves no text stage to merge into: the
-    increment upserts pages, then commits the text stages corpus-wide
-    as plain parquet, like a full run."""
-    root = f"{work_dir}/fallback"
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, corpus_df(spark, 30), root, resume=False,
-                     fail_after="pages", run_id="base")
-    assert not stage_store.is_committed(root, "page_text")
+@pytest.mark.parametrize("crashed", ["metrics", "page_text"])
+def test_incremental_after_pages_only_commits_text_stages(
+    spark, work_dir, crash_before_commit, crashed
+):
+    """A full run that crashed after its pages commit leaves no text
+    stage to merge into: the increment first finishes that run from
+    the committed pages, so metrics keeps the base run's extract rows,
+    then upserts its delta host-scoped."""
+    root = f"{work_dir}/fallback-{crashed}"
+    with crash_before_commit(crashed):
+        run_pipeline(spark, corpus_df(spark, 30), root, resume=False, run_id="base")
+    assert not stage_store.is_committed(root, crashed)
 
     out = run_incremental(spark, corpus_df(spark, 36), root, run_id="incr")
 
     exp = oracle.extract_corpus(generate_corpus(36))
     got = {r["url"]: r["extracted_text"] for r in out["doc_text"].collect()}
-    assert all(got.get(u, "") == v["text"] for u, v in exp.items())
-    assert len(got) == sum(1 for v in exp.values() if v["text"])
+    assert got == {u: v["text"] for u, v in exp.items() if v["text"]}
+    metrics = out["metrics"].collect()
+    assert {r["stage"] for r in metrics} == {"extract", "extract_increment"}
+    base = [r for r in metrics if r["stage"] == "extract"]
+    assert sum(r["urls_in"] for r in base) >= 30
     for stage in ("pages", "page_text", "doc_text", "chunks"):
         assert "bucket" not in stage_store.marker_info(root, stage), stage
 
 
 def test_incremental_legacy_stage_without_content_hash(spark, work_dir):
     """A pages stage committed before content_hash existed upserts
-    cleanly (unionByName with allowMissingColumns) and falls back to
-    presence-only change detection."""
+    cleanly (unionByName with allowMissingColumns) and reads the hash as
+    null, so every url counts as changed once: a url whose payload
+    changed since the legacy commit gets its new text, and afterwards
+    every page carries its hash."""
     import os
 
     from pyspark.sql import functions as F
@@ -247,17 +255,25 @@ def test_incremental_legacy_stage_without_content_hash(spark, work_dir):
     os.rename(tmp, path)
     spark.catalog.refreshByPath(path)
 
-    out = run_incremental(spark, corpus_df(spark, 50), root, run_id="incr")
-    assert out["pages"].select("url").distinct().count() == 50
-    # new rows carry the hash, legacy rows carry null — and the merge
-    # must not have thrown
-    hashes = out["pages"].select(
-        F.sum(F.col("content_hash").isNotNull().cast("long")).alias("with_hash")
-    ).collect()[0]
-    assert hashes["with_hash"] > 0
+    # one base url's payload changed since the legacy commit
+    rows = generate_corpus(50)
+    target, donor = rows[1], rows[2]
+    old_text = oracle.extract_corpus(rows)[target["url"]]["text"]
+    target["html"] = donor["html"]
+    exp = oracle.extract_corpus(rows)
+    assert exp[target["url"]]["text"] != old_text
+    inp = corpus_df(spark, 50).withColumn(
+        "html",
+        F.when(F.col("url") == target["url"], F.lit(donor["html"])).otherwise(F.col("html")),
+    )
 
-    exp = oracle.extract_corpus(generate_corpus(50))
+    out = run_incremental(spark, inp, root, run_id="incr")
+    assert out["pages"].select("url").distinct().count() == 50
+    # the merge must not have thrown, and every row now carries a hash
+    assert out["pages"].filter(F.col("content_hash").isNull()).count() == 0
+
     got = {r["url"]: r["extracted_text"] for r in out["doc_text"].collect()}
+    assert got.get(target["url"], "") == exp[target["url"]]["text"]
     assert all(got.get(u, "") == v["text"] for u, v in exp.items())
 
 
